@@ -201,7 +201,8 @@ def _scaling_pairs(
             ts, tb = ss["totals"], sb["totals"]
             rec[f"n{n_small}_totals"] = ts
             rec[f"n{n_big}_totals"] = tb
-            if ts.get("run_sum_s") and tb.get("run_sum_s"):
+            # a crashed run's log may lack ApplicationEnd → wall_s None
+            if all(t.get("run_sum_s") and t.get("wall_s") for t in (ts, tb)):
                 util_s = ts["run_sum_s"] / (n_small * ts["wall_s"])
                 util_b = tb["run_sum_s"] / (n_big * tb["wall_s"])
                 rec["work_ratio"] = round(ts["run_sum_s"] / tb["run_sum_s"], 3)

@@ -136,7 +136,12 @@ def summarize(path, window_ms=None, cores=None, top=10):
                 max(wall * cores - sum(durs), 0.0), 2
             )
         rows.append(rec)
-        intervals.append((s["submit"], s["complete"]))
+        lo, hi = s["submit"], s["complete"]
+        if window_ms:
+            # a stage may overhang the window end: count only its in-window
+            # part, so covered ≤ wall and gap_s is never negative
+            lo, hi = max(lo, window_ms[0]), min(hi, window_ms[1])
+        intervals.append((lo, hi))
     # union of stage intervals → scheduling-gap time inside the window
     merged = []
     for a, b in sorted(intervals):

@@ -106,7 +106,7 @@ GOLDEN_KMEANS = _p(f"golden_kmeans_{_SF_BASE}.parquet")
 GOLDEN_FRAMES = _p(f"golden_frames_{_N}_8.parquet")
 GOLDEN_BLOCKMEANS = _p(f"golden_blockmeans_{_N}_4.parquet")
 GOLDEN_RESIZE = _p(f"golden_resize_{_N}_8.parquet")
-GOLDEN_LAPLACIAN = _p(f"golden_laplacian_{_N}.parquet")
+GOLDEN_LAPLACIAN = _p(f"golden_laplacian_{_N}_v2.parquet")
 GOLDEN_RECALL = fixtures_text.golden_recall_srp_path(ORACLE_SF_DIR)
 GOLDEN_RECALL_IVF = fixtures_text.golden_recall_ivf_path(ORACLE_SF_DIR)
 GOLDEN_AUDIO = _p(f"golden_audio_energy_{audio_source.n_clips_for(_N)}_512.parquet")
@@ -695,7 +695,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q1_lineitem_agg": relational.q1_lineitem_agg,
         "way_simplify": q_way_simplify,
         "adaptive_grid": q_adaptive_grid,
-        "blur_metric": multimodal.laplacian_stats,
+        "image_metrics": multimodal.image_metrics,
         "decontaminate": text.decontaminate,
         "ref_query_pack": lambda spark, sf_dir: relational.ref_query_pack(
             spark,
@@ -744,9 +744,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_topk": similarity.ann_topk_bruteforce,
         "emb_near_dup": similarity.near_dup_pairs,
         "knn_global": q_knn_global,
-        # decode-once fan-out for the image-metric family (r5; oracle joins
-        # the decode + laplacian goldens)
-        "image_metrics": multimodal.image_metrics,
+        "blur_metric": multimodal.laplacian_stats,
         "events_windowed_stream": q_events_windowed_stream,
         "frame_sample": multimodal.frame_sample,
         "resize_nn": multimodal.resize_nn,

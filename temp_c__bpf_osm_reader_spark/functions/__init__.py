@@ -1,6 +1,8 @@
-"""Pure-numpy kernels + vectorized pandas-UDF wrappers (the engine's 'expressions').
+"""Pure-numpy kernels (the engine's 'expressions'): codec, geo, hashing.
 
 These are the analogue of the reference decoder's per-row transforms
 (readosm.c:209-348 varint/zigzag, 1179-1211 delta+scale, 1296-1299 dict resolve)
-— vectorized over Arrow batches instead of per-row C callbacks.
+— vectorized over Arrow batches instead of per-row C callbacks. No UDF
+wrappers live here: operators/ wires these kernels into Spark passes
+(geo.latlon_cols is the JVM column-expression twin of the geolocate spec).
 """

@@ -5,7 +5,14 @@ only at the last stage that needs pixels (the reference measures blob
 decompression at ~33% of read cost, readosm.c:1783-1790 — same reason).
 The in-repo codec handles fmt ∈ {raw, rle}; foreign codecs (jpeg/png) are
 stubbed behind NotImplementedError (no image libs in this container) while the
-Spark-side plumbing — schema, Arrow batching, UDF signatures — is real.
+Spark-side plumbing — schema, Arrow batching, output types — is real.
+
+Every image operator runs pure per-shape-group kernels
+`kernel(mat, W, H) -> {column: array}`, mat being the decoded (k, H*W) uint8
+matrix of k same-shaped images, through `_map_images` — the single decode
+path: one mapInPandas pass, one codec.decode_batch per Arrow batch. Each
+kernel exists once; operators only name their kernels and output schema.
+1→many operators take an array column and explode it JVM-side.
 """
 
 from __future__ import annotations
@@ -14,7 +21,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions import codec
 from ..functions.hashing import phash64_batch
@@ -25,8 +31,8 @@ def _decode_groups(pdf: pd.DataFrame):
     """Whole-batch decode + per-shape grouping: yields (W, H, idx, mat) where
     idx are the batch row positions with shape (W, H) and mat is their decoded
     pixel matrix (len(idx), H*W) uint8. One codec.decode_batch call per Arrow
-    batch; stats downstream vectorize per shape group (phash64_batch etc.) —
-    no per-image Python loop anywhere in the codec family."""
+    batch; kernels vectorize per shape group — no per-image Python loop
+    anywhere in the codec family."""
     wv, hv = pdf["w"].to_numpy(), pdf["h"].to_numpy()
     fv = pdf["fmt"].to_numpy()
     flat, off = codec.decode_batch(pdf["bytes"], wv, hv, fv)
@@ -35,186 +41,165 @@ def _decode_groups(pdf: pd.DataFrame):
         mat = flat[off[idx][:, None] + np.arange(W * H)]
         yield W, H, idx, mat
 
-_DECODE_STATS_TYPE = T.StructType(
-    [
-        T.StructField("pix_sum", T.LongType()),
-        T.StructField("phash_dec", T.LongType()),
-    ]
-)
+
+def _map_images(spark: SparkSession, sf_dir: str, kernel, schema: str,
+                keep: tuple[str, ...] = ("image_id",)) -> DataFrame:
+    """Run `kernel` over every decoded payload of the image table → one row
+    per image: the `keep` columns passed through, then the kernel's columns
+    (1-D results as scalar columns, 2-D results as array columns). Rows come
+    out grouped by shape within each batch; no operator depends on order."""
+    images = spark.read.parquet(fixtures.ensure_images(fixtures.n_images_for_sf(sf_dir)))
+
+    def gen(batches):
+        for pdf in batches:
+            parts = []
+            for W, H, idx, mat in _decode_groups(pdf):
+                out = pdf[list(keep)].iloc[idx].reset_index(drop=True)
+                for c, v in kernel(mat, W, H).items():
+                    out[c] = list(v) if v.ndim == 2 else v
+                parts.append(out)
+            if parts:
+                yield pd.concat(parts, ignore_index=True)
+
+    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(gen, schema=schema)
 
 
-@F.pandas_udf(_DECODE_STATS_TYPE)
-def decode_stats_udf(data: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series) -> pd.DataFrame:
-    """Decode each payload, return (sum of pixel values, phash of decoded
-    pixels). Whole-batch: one decode_batch + per-shape vectorized stats."""
-    n = len(data)
-    pix_sum = np.empty(n, dtype=np.int64)
-    ph = np.empty(n, dtype=np.int64)
-    pdf = pd.DataFrame({"bytes": data, "w": w, "h": h, "fmt": fmt})
-    for W, H, idx, mat in _decode_groups(pdf):
-        pix_sum[idx] = mat.sum(axis=1, dtype=np.int64)
-        ph[idx] = phash64_batch(mat, W, H)
-    return pd.DataFrame({"pix_sum": pix_sum, "phash_dec": ph})
+def _pix_stats(mat: np.ndarray, W: int, H: int) -> dict:
+    """Exact pixel sum + phash of the decoded pixels."""
+    return {"pix_sum": mat.sum(axis=1, dtype=np.int64), "phash_dec": phash64_batch(mat, W, H)}
+
+
+def _laplacian(mat: np.ndarray, W: int, H: int) -> dict:
+    """4-neighbor Laplacian energy, the variance-of-Laplacian blur gate:
+    lap = 4p − N − S − W − E over interior pixels → exact Σ lap², Σ|lap|
+    (golden twin: fixtures_text.ensure_golden_laplacian, per-image numpy)."""
+    # narrow arithmetic, exact: |lap| ≤ 4·255 fits int16, lap² ≤ ~1.04e6
+    # fits int32, and the reductions widen to int64 — ~4x less memory traffic
+    # than int64 temporaries (this kernel is allocation bound, not ALU bound)
+    m = mat.reshape(len(mat), H, W).astype(np.int16)
+    lap = 4 * m[:, 1:-1, 1:-1]
+    lap -= m[:, :-2, 1:-1]
+    lap -= m[:, 2:, 1:-1]
+    lap -= m[:, 1:-1, :-2]
+    lap -= m[:, 1:-1, 2:]
+    return {
+        "lap_sq_sum": np.multiply(lap, lap, dtype=np.int32).sum(axis=(1, 2), dtype=np.int64),
+        "lap_abs_sum": np.abs(lap).sum(axis=(1, 2), dtype=np.int64),
+        # images under 3 px have no interior: clamp, never negative
+        "n_interior": np.full(len(mat), max(H - 2, 0) * max(W - 2, 0), dtype=np.int64),
+    }
+
+
+def _block_means(mat: np.ndarray, W: int, H: int, grid: int) -> np.ndarray:
+    """(k, grid*grid) block means = exact int64 block sum / (bh*bw)."""
+    bh, bw = H // grid, W // grid
+    sums = mat.reshape(len(mat), grid, bh, grid, bw).sum(axis=(2, 4), dtype=np.int64)
+    return sums.reshape(len(mat), grid * grid) / float(bh * bw)
+
+
+def _resize_stats(mat: np.ndarray, W: int, H: int, size: int) -> dict:
+    """Nearest-neighbor gather to size×size (source index for output i =
+    floor(i * h / size), top-left rule) → exact sum + phash of the result."""
+    ri = (np.arange(size) * H) // size
+    rj = (np.arange(size) * W) // size
+    small = mat[:, (ri[:, None] * W + rj[None, :]).ravel()]
+    return {"r_sum": small.sum(axis=1, dtype=np.int64), "r_phash": phash64_batch(small, size, size)}
+
+
+def _frame_sums(mat: np.ndarray, W: int, H: int, stride: int) -> np.ndarray:
+    """(k, ceil(H/stride)) exact sums of every stride-th row ("frame")."""
+    return mat.reshape(len(mat), H, W)[:, ::stride].sum(axis=2, dtype=np.int64)
 
 
 def decode_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """→ (image_id, fmt, pix_sum, phash_dec) — engine decode of every payload.
 
-    Golden twin (sources/fixtures.ensure_golden_decode) computes the same
+    Golden twin (fixtures_text.ensure_golden_decode) computes the same
     through plain numpy, no Spark. phash_dec equals the stored phash column for
     fmt='raw' exactly; for 'rle' it may differ in marginal bits (quantization),
     which the pytest invariant bounds."""
-    n = fixtures.n_images_for_sf(sf_dir)
-    images = spark.read.parquet(fixtures.ensure_images(n))
-    stats = decode_stats_udf(F.col("bytes"), F.col("w"), F.col("h"), F.col("fmt"))
-    return images.withColumn("_s", stats).select(
-        "image_id",
-        "fmt",
-        F.col("_s.pix_sum").alias("pix_sum"),
-        F.col("_s.phash_dec").alias("phash_dec"),
+    return _map_images(
+        spark, sf_dir, _pix_stats,
+        "image_id string, fmt string, pix_sum long, phash_dec long", keep=("image_id", "fmt"),
+    )
+
+
+def laplacian_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """→ (image_id, lap_sq_sum, lap_abs_sum, n_interior): see _laplacian."""
+    return _map_images(
+        spark, sf_dir, _laplacian,
+        "image_id string, lap_sq_sum long, lap_abs_sum long, n_interior long",
+    )
+
+
+def image_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """→ (image_id, fmt, pix_sum, phash_dec, lap_sq_sum, lap_abs_sum,
+    n_interior) — decode once, derive every per-image metric of
+    decode_integrity and laplacian_stats from that one decode. Identical
+    integers to those two operators; the oracle joins their two goldens."""
+    return _map_images(
+        spark, sf_dir, lambda m, W, H: {**_pix_stats(m, W, H), **_laplacian(m, W, H)},
+        "image_id string, fmt string, pix_sum long, phash_dec long, "
+        "lap_sq_sum long, lap_abs_sum long, n_interior long",
+        keep=("image_id", "fmt"),
+    )
+
+
+def block_mean_features(spark: SparkSession, sf_dir: str, grid: int = 4) -> DataFrame:
+    """Feature extraction: per-image grid×grid block-mean vector rounded to 6
+    places (the resize/feature step of an image pipeline) → (image_id,
+    features array)."""
+    return _map_images(
+        spark, sf_dir, lambda m, W, H: {"features": np.round(_block_means(m, W, H, grid), 6)},
+        "image_id string, features array<double>",
     )
 
 
 def block_features_flat(spark: SparkSession, sf_dir: str, grid: int = 4) -> DataFrame:
-    """block_mean_features exploded to (image_id, feat_idx, value) — the
-    oracle-checkable flat form (value-hash over scalar columns; the array
-    variant stays for consumers that want vectors). value = block_sum / (bh*bw)
-    with an exact integer numerator, so the pure-Python golden twin
-    (sources/fixtures_text.ensure_golden_blockmeans) reproduces it bit-for-bit."""
-    n = fixtures.n_images_for_sf(sf_dir)
-    images = spark.read.parquet(fixtures.ensure_images(n)).select(
-        "image_id", "bytes", "w", "h", "fmt"
+    """block_mean_features unrounded and exploded to (image_id, feat_idx,
+    value) — the oracle-checkable flat form. value = block_sum / (bh*bw) with
+    an exact integer numerator, so the pure-Python golden twin
+    (fixtures_text.ensure_golden_blockmeans) reproduces it bit-for-bit."""
+    feats = _map_images(
+        spark, sf_dir, lambda m, W, H: {"v": _block_means(m, W, H, grid)},
+        "image_id string, v array<double>",
     )
-
-    def gen(batches):
-        for pdf in batches:
-            n = len(pdf)
-            g2 = grid * grid
-            vals = np.empty((n, g2), dtype=np.float64)
-            for W, H, idx, mat in _decode_groups(pdf):
-                bh, bw = H // grid, W // grid
-                sums = mat.reshape(len(idx), grid, bh, grid, bw).sum(
-                    axis=(2, 4), dtype=np.int64
-                )
-                vals[idx] = sums.reshape(len(idx), g2) / float(bh * bw)
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"].repeat(g2).reset_index(drop=True),
-                    "feat_idx": pd.Series(np.tile(np.arange(g2), n), dtype="int32"),
-                    "value": pd.Series(vals.ravel(), dtype="float64"),
-                }
-            )
-
-    return images.mapInPandas(gen, schema="image_id string, feat_idx int, value double")
+    return feats.select("image_id", F.posexplode("v").alias("feat_idx", "value"))
 
 
 RESIZE_TO = 8
 
 
 def resize_nn(spark: SparkSession, sf_dir: str, size: int = RESIZE_TO) -> DataFrame:
-    """Nearest-neighbor resize of every payload to size×size (the canonical
-    image-pipeline resize step, pure numpy gather — no image libs needed) →
-    (image_id, r_sum, r_phash): exact pixel sum + phash of the resized image.
-
-    Frozen sampling spec: source index for output i = floor(i * h / size)
-    (top-left rule). Compact outputs keep the oracle scalar while the full
-    resized tensor shape is covered by the golden twin's identical walk."""
-    n = fixtures.n_images_for_sf(sf_dir)
-    images = spark.read.parquet(fixtures.ensure_images(n)).select(
-        "image_id", "bytes", "w", "h", "fmt"
+    """Nearest-neighbor resize of every payload to size×size (pure numpy
+    gather, no image libs) → (image_id, r_sum, r_phash): exact pixel sum +
+    phash of the resized image, compact outputs that keep the oracle scalar."""
+    return _map_images(
+        spark, sf_dir, lambda m, W, H: _resize_stats(m, W, H, size),
+        "image_id string, r_sum long, r_phash long",
     )
-
-    def gen(batches):
-        for pdf in batches:
-            n = len(pdf)
-            sums = np.empty(n, dtype=np.int64)
-            phs = np.empty(n, dtype=np.int64)
-            for W, H, idx, mat in _decode_groups(pdf):
-                ri = (np.arange(size) * H) // size
-                rj = (np.arange(size) * W) // size
-                small = mat[:, (ri[:, None] * W + rj[None, :]).ravel()]
-                sums[idx] = small.sum(axis=1, dtype=np.int64)
-                phs[idx] = phash64_batch(small, size, size)
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"].reset_index(drop=True),
-                    "r_sum": pd.Series(sums, dtype="int64"),
-                    "r_phash": pd.Series(phs, dtype="int64"),
-                }
-            )
-
-    return images.mapInPandas(gen, schema="image_id string, r_sum long, r_phash long")
 
 
 FRAME_STRIDE = 8
 
 
 def frame_sample(spark: SparkSession, sf_dir: str, stride: int = FRAME_STRIDE) -> DataFrame:
-    """Frame sampling over binary payloads via mapInPandas: each image row is
-    treated as a frame sequence (h frames of w samples — the video analogue);
-    every `stride`-th frame is emitted with its exact sum and mean.
+    """Frame sampling over binary payloads: each image row is treated as a
+    frame sequence (h frames of w samples — the video analogue); every
+    `stride`-th frame is emitted with its exact sum and mean.
 
-    → (image_id, frame_idx, frame_sum, frame_mean) with frame_mean =
-    frame_sum / w (pure IEEE division — bit-equal to the pure-Python golden).
-    mapInPandas because the op is 1→many rows (frames per image); decode stays
-    per-image numpy like the rest of the codec family."""
-    n = fixtures.n_images_for_sf(sf_dir)
-    images = spark.read.parquet(fixtures.ensure_images(n)).select(
-        "image_id", "bytes", "w", "h", "fmt"
+    → (image_id, frame_idx, frame_sum, frame_mean). The kernel emits one
+    frame-sum array per image; the 1→many explode, frame_idx = pos * stride
+    and frame_mean = frame_sum / w (pure IEEE division — bit-equal to the
+    pure-Python golden) run JVM-side."""
+    frames = _map_images(
+        spark, sf_dir, lambda m, W, H: {"s": _frame_sums(m, W, H, stride)},
+        "image_id string, w int, s array<long>", keep=("image_id", "w"),
     )
-
-    def gen(batches):
-        for pdf in batches:
-            n = len(pdf)
-            nf_of = np.empty(n, dtype=np.int64)      # frames per image
-            per_img = [None] * n                     # (frame_idx, fsum, fmean)
-            for W, H, idx, mat in _decode_groups(pdf):
-                fr = mat.reshape(len(idx), H, W)[:, ::stride]
-                fsum = fr.sum(axis=2, dtype=np.int64)    # (k, nf)
-                fidx = np.arange(0, H, stride, dtype=np.int32)
-                nf_of[idx] = len(fidx)
-                fmean = fsum / float(W)
-                for j, i in enumerate(idx):
-                    per_img[i] = (fidx, fsum[j], fmean[j])
-            ids = pdf["image_id"].repeat(nf_of).reset_index(drop=True)
-            yield pd.DataFrame(
-                {
-                    "image_id": ids,
-                    "frame_idx": pd.Series(
-                        np.concatenate([p[0] for p in per_img]), dtype="int32"
-                    ),
-                    "frame_sum": pd.Series(
-                        np.concatenate([p[1] for p in per_img]), dtype="int64"
-                    ),
-                    "frame_mean": pd.Series(
-                        np.concatenate([p[2] for p in per_img]), dtype="float64"
-                    ),
-                }
-            )
-
-    return images.mapInPandas(
-        gen, schema="image_id string, frame_idx int, frame_sum long, frame_mean double"
+    return frames.select("image_id", "w", F.posexplode("s").alias("pos", "frame_sum")).select(
+        "image_id", (F.col("pos") * stride).alias("frame_idx"),
+        "frame_sum", (F.col("frame_sum") / F.col("w")).alias("frame_mean"),
     )
-
-
-def block_mean_features(spark: SparkSession, sf_dir: str, grid: int = 4) -> DataFrame:
-    """Feature extraction: per-image grid×grid block-mean vector (the
-    resize/feature step of an image pipeline) → (image_id, features array)."""
-    n = fixtures.n_images_for_sf(sf_dir)
-    images = spark.read.parquet(fixtures.ensure_images(n))
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def feat(data: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series) -> pd.Series:
-        n = len(data)
-        out = np.empty((n, grid * grid), dtype=np.float64)
-        pdf = pd.DataFrame({"bytes": data, "w": w, "h": h, "fmt": fmt})
-        for W, H, idx, mat in _decode_groups(pdf):
-            bh, bw = H // grid, W // grid
-            means = mat.reshape(len(idx), grid, bh, grid, bw).mean(axis=(2, 4))
-            out[idx] = np.round(means.reshape(len(idx), grid * grid), 6)
-        return pd.Series(list(out))
-
-    return images.select("image_id", feat("bytes", "w", "h", "fmt").alias("features"))
 
 
 def audio_window_energy(spark: SparkSession, sf_dir: str, win: int = 512) -> DataFrame:
@@ -227,9 +212,8 @@ def audio_window_energy(spark: SparkSession, sf_dir: str, win: int = 512) -> Dat
     Energy is an exact int64 sum of int32 squares, so the plain-python
     golden (sources/audio.ensure_golden_audio_energy) matches bit-for-bit."""
     from ..sources import audio as audio_src
-    from ..sources import fixtures as fx
 
-    n = audio_src.n_clips_for(fx.n_images_for_sf(sf_dir))
+    n = audio_src.n_clips_for(fixtures.n_images_for_sf(sf_dir))
     clips = spark.read.parquet(audio_src.ensure_audio(n)).select(
         "audio_id", "bytes", "n_samples"
     )
@@ -261,125 +245,3 @@ def audio_window_energy(spark: SparkSession, sf_dir: str, win: int = 512) -> Dat
             )
 
     return clips.mapInPandas(gen, schema="audio_id string, win_idx int, energy long")
-
-
-_LAPLACIAN_TYPE = T.StructType(
-    [
-        T.StructField("lap_sq_sum", T.LongType()),
-        T.StructField("lap_abs_sum", T.LongType()),
-        T.StructField("n_interior", T.LongType()),
-    ]
-)
-
-
-@F.pandas_udf(_LAPLACIAN_TYPE)
-def laplacian_udf(data: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series) -> pd.DataFrame:
-    """Per-image 4-neighbor Laplacian energy (variance-of-Laplacian family —
-    the standard blur/quality gate a training-data pipeline runs before
-    ingesting images). Exact integers end-to-end: lap = 4p − N − S − W − E
-    over interior pixels; Σ lap² and Σ|lap| are int64-safe at any image
-    size this engine stores (|lap| ≤ 1020 ⇒ lap² ≤ ~1.04e6/px).
-
-    Whole-batch kernel: one decode_batch per Arrow batch, then per shape
-    group a single vectorized shifted-slice expression over the
-    (k, H, W)-stacked matrix — no per-image Python loop (golden twin
-    fixtures_text.ensure_golden_laplacian is the independent per-image
-    derivation)."""
-    n = len(data)
-    sq = np.zeros(n, dtype=np.int64)
-    ab = np.zeros(n, dtype=np.int64)
-    ni = np.zeros(n, dtype=np.int64)
-    pdf = pd.DataFrame({"bytes": data, "w": w, "h": h, "fmt": fmt})
-    for W, H, idx, mat in _decode_groups(pdf):
-        # narrow arithmetic, exact: |lap| ≤ 4·255 fits int16, lap² ≤ ~1.04e6
-        # fits int32, and the reductions widen to int64 — same integers as
-        # the old int64 pipeline but ~4x less memory traffic (the int64
-        # temporaries made this kernel 7x the cost of the plain decode at
-        # sf1.0: 374 s vs 50 s — allocation/page-fault bound, not ALU bound)
-        m = mat.reshape(len(idx), H, W).astype(np.int16)
-        lap = 4 * m[:, 1:-1, 1:-1]
-        lap -= m[:, :-2, 1:-1]
-        lap -= m[:, 2:, 1:-1]
-        lap -= m[:, 1:-1, :-2]
-        lap -= m[:, 1:-1, 2:]
-        sq[idx] = np.multiply(lap, lap, dtype=np.int32).sum(axis=(1, 2), dtype=np.int64)
-        ab[idx] = np.abs(lap).sum(axis=(1, 2), dtype=np.int64)
-        # degenerate 1-pixel-thin images have no interior: clamp, never
-        # negative (H==1 or W==1 would otherwise yield (H-2)*(W-2) < 0)
-        ni[idx] = max(H - 2, 0) * max(W - 2, 0)
-    return pd.DataFrame({"lap_sq_sum": sq, "lap_abs_sum": ab, "n_interior": ni})
-
-
-_IMAGE_METRICS_SCHEMA = (
-    "image_id string, fmt string, pix_sum long, phash_dec long, "
-    "lap_sq_sum long, lap_abs_sum long, n_interior long"
-)
-
-
-def image_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """→ (image_id, fmt, pix_sum, phash_dec, lap_sq_sum, lap_abs_sum,
-    n_interior) — the DECODE-ONCE fan-out for the whole image-metric family
-    (r4 verdict #4): one mapInPandas pass decodes each payload exactly once
-    and emits every per-image metric that decode_integrity and blur_metric
-    would otherwise each re-decode for.  At 100-TB scale the decode is the
-    dominant cost of this family (the reference measures blob decompression
-    at ~33% of read time, readosm.c:1783-1790), so a pipeline computing k
-    metrics must pay it once, not k times.
-
-    Exactness: identical integers to decode_integrity + blur_metric — the
-    oracle joins their two goldens."""
-    n = fixtures.n_images_for_sf(sf_dir)
-    images = spark.read.parquet(fixtures.ensure_images(n)).select(
-        "image_id", "bytes", "w", "h", "fmt"
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            k = len(pdf)
-            pix = np.empty(k, dtype=np.int64)
-            ph = np.empty(k, dtype=np.int64)
-            sq = np.zeros(k, dtype=np.int64)
-            ab = np.zeros(k, dtype=np.int64)
-            ni = np.zeros(k, dtype=np.int64)
-            for W, H, idx, mat in _decode_groups(pdf):
-                pix[idx] = mat.sum(axis=1, dtype=np.int64)
-                ph[idx] = phash64_batch(mat, W, H)
-                m = mat.reshape(len(idx), H, W).astype(np.int16)
-                lap = 4 * m[:, 1:-1, 1:-1]
-                lap -= m[:, :-2, 1:-1]
-                lap -= m[:, 2:, 1:-1]
-                lap -= m[:, 1:-1, :-2]
-                lap -= m[:, 1:-1, 2:]
-                sq[idx] = np.multiply(lap, lap, dtype=np.int32).sum(
-                    axis=(1, 2), dtype=np.int64
-                )
-                ab[idx] = np.abs(lap).sum(axis=(1, 2), dtype=np.int64)
-                ni[idx] = max(H - 2, 0) * max(W - 2, 0)
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"].reset_index(drop=True),
-                    "fmt": pdf["fmt"].reset_index(drop=True),
-                    "pix_sum": pix,
-                    "phash_dec": ph,
-                    "lap_sq_sum": sq,
-                    "lap_abs_sum": ab,
-                    "n_interior": ni,
-                }
-            )
-
-    return images.mapInPandas(gen, schema=_IMAGE_METRICS_SCHEMA)
-
-
-def laplacian_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """→ (image_id, lap_sq_sum, lap_abs_sum, n_interior): see laplacian_udf."""
-    n = fixtures.n_images_for_sf(sf_dir)
-    images = spark.read.parquet(fixtures.ensure_images(n)).select(
-        "image_id", "bytes", "w", "h", "fmt"
-    )
-    s = laplacian_udf("bytes", "w", "h", "fmt")
-    return images.select(
-        "image_id",
-        s["lap_sq_sum"].alias("lap_sq_sum"),
-        s["lap_abs_sum"].alias("lap_abs_sum"),
-        s["n_interior"].alias("n_interior"),
-    )

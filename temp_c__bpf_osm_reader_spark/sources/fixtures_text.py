@@ -628,7 +628,9 @@ def ensure_golden_laplacian(n: int) -> str:
     whole-batch layout."""
     import numpy as np
 
-    p = os.path.join(fixtures.DATA_DIR, f"golden_laplacian_{n}.parquet")
+    # _v2: n_interior clamps at 0 for images under 3 px; the suffix keeps a
+    # golden cached under the unclamped formula from being read
+    p = os.path.join(fixtures.DATA_DIR, f"golden_laplacian_{n}_v2.parquet")
     if not os.path.exists(p):
         images = pd.read_parquet(fixtures.ensure_images(n))
         rows = []

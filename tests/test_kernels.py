@@ -304,6 +304,28 @@ def test_laplacian_spike_closed_form(spark_none=None):
     sq, ab = twin(spike)
     assert sq == (4 * v) ** 2 + 4 * v * v
     assert ab == 4 * v + 4 * v
+    # the engine's own kernel (no Spark) on the same closed form, and on the
+    # sub-3-px shapes no Spark fixture reaches: no interior, zero sums
+    from temp_c__bpf_osm_reader_spark.operators.multimodal import _laplacian
+
+    def engine(m):
+        H, W = m.shape
+        r = _laplacian(m.reshape(1, H * W), W, H)
+        return int(r["lap_sq_sum"][0]), int(r["lap_abs_sum"][0]), int(r["n_interior"][0])
+
+    assert engine(const) == (0, 0, 36)
+    assert engine(spike) == (sq, ab, 36)
+    rng = np.random.default_rng(3)
+    for H, W in ((1, 1), (1, 5), (5, 1), (2, 2), (3, 3)):
+        ni = max(H - 2, 0) * max(W - 2, 0)
+        assert engine(np.full((H, W), 200, dtype=np.uint8)) == (0, 0, ni)
+        m = rng.integers(0, 256, size=(H, W), dtype=np.uint8)
+        if ni == 0:
+            assert engine(m) == (0, 0, 0)
+        else:  # 3x3: the single interior pixel, by hand
+            c = m.astype(np.int64)
+            lap = 4 * c[1, 1] - c[0, 1] - c[2, 1] - c[1, 0] - c[1, 2]
+            assert engine(m) == (lap * lap, abs(lap), 1)
     # and the shipped golden generator agrees with this local twin on a
     # real fixture image (cross-checks _decode_px + the slicing spec)
     import pandas as pd
