@@ -25,7 +25,7 @@ def entry(spark: SparkSession) -> DataFrame:
     per-cell tile counts (ordered, deterministic)."""
     n = fixtures.n_images_for_sf("/root/testdata/sf0.001")
     images = spark.read.parquet(fixtures.ensure_images(n))
-    pts = indexing.with_cells(indexing.geolocate(images), resolutions=(7,), zlevel=0)
+    pts = indexing.with_cells(indexing.geolocate_expr(images), resolutions=(7,), zlevel=0)
     return (
         pts.groupBy(F.col("cell_r7").alias("cell_id"))
         .agg(

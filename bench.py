@@ -326,6 +326,13 @@ def _fresh_record_name(sf: float) -> str:
     return name
 
 
+def _emit(result: dict, full: dict) -> None:
+    """Write the full record to its file and print the compact one."""
+    with open(os.path.join(REPO, result["full_record"]), "w") as fh:
+        json.dump(full, fh, indent=1)
+    print(json.dumps(result), flush=True)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -344,9 +351,9 @@ def main() -> None:
 
     spark = get_spark(app="bench", cores=cores)
     qs = api.queries()
-    # steady-state warmup (excluded from timings): JIT + Python worker pool +
-    # fixture page cache along the geolocate path — a cluster amortizes these
-    # over job lifetime, and per-query timings should measure the plan
+    # steady-state warmup (excluded from timings): JIT + codegen + fixture
+    # page cache along the (pure-JVM) geolocate path — a cluster amortizes
+    # these over job lifetime, and per-query timings should measure the plan
     qs["geolocate_cells"](spark, sf_dir).count()
     # warm the pandas-UDF worker path with a NEUTRAL udf (forces the pandas
     # import in every worker without pre-running any measured query)
@@ -427,10 +434,10 @@ def main() -> None:
     spatial_wall = timings["geolocate_cells"] + timings["tile_assignment"] + timings["pip_join"]
     spark.stop()
 
-    # Compact headline record — printed as the FINAL stdout line. The round
-    # driver's tail capture truncated r3's single giant line mid-object
-    # (BENCH_r03.json parsed:null), so the bulky per-run logs now live only
-    # in the full record written to BENCH_full.json in-repo.
+    # Compact headline record — printed when the suite ends and again as the
+    # FINAL stdout line. The round driver's tail capture truncated r3's
+    # single giant line mid-object (BENCH_r03.json parsed:null), so the bulky
+    # per-run logs live only in the full record file.
     result = {
         "metric": "headline_suite_wall",
         "value": round(sum(timings.values()), 3),
@@ -451,6 +458,9 @@ def main() -> None:
     }
     full = dict(result)
     full["queries_runs"] = runs_log
+    # emit as soon as the suite ends: a run killed in the scaling section
+    # still leaves the headline on stdout and the full record on disk
+    _emit(result, full)
 
     if os.environ.get("SPARK_GRAFT_SKIP_SCALING") != "1":
         # N-vs-4N cluster-size evidence (north rule), in-sandbox protocol:
@@ -601,9 +611,8 @@ def main() -> None:
         # so a contended-then-retried session is fully auditable
         full["scaling_blocks"] = blocks
 
-    with open(os.path.join(REPO, result["full_record"]), "w") as fh:
-        json.dump(full, fh, indent=1)
-    print(json.dumps(result))
+        # the merged record, again as the final stdout line
+        _emit(result, full)
 
 
 if __name__ == "__main__":

@@ -72,11 +72,7 @@ def main() -> None:
     n_points_est = fixtures.n_images_for_sf(args.sf_dir) * max(args.replicate, 1)
     n_parts = args.partitions or min(args.cores * 4, max(8, n_points_est // 50_000))
     fx = fixtures.ensure_all_for_sf(args.sf_dir)
-    extra = {
-        # bigger Arrow batches: fewer Python round-trips per partition, and
-        # the per-batch fixed cost is what burdens the small-task 4N side
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "131072",
-    }
+    extra: dict[str, str] = {}
     if args.event_log_dir:
         import os as _os
 
@@ -117,27 +113,6 @@ def main() -> None:
         )
     images = images.cache()
     n_points = images.count()  # warmup: scan + cache fill, excluded from timing
-
-    # warm the Python worker pool (fork + numpy/pyarrow/package import along
-    # the real geolocate path) — a cluster amortizes this over the job's
-    # lifetime; excluded from steady-state timing
-    indexing.geolocate(images.limit(n_parts * 2).repartition(n_parts)).count()
-
-    # pre-fault each worker's heap: first-touch page faults on this host are
-    # ~10x slow (session.py), and each of the N workers pays its first big
-    # allocation INSIDE the timed region otherwise — a per-worker fixed cost
-    # that burdens the 4N level 4x relatively harder than N. A long-lived
-    # cluster worker pays this once per process lifetime.
-    def _prefault(it):
-        import numpy as np
-        import pandas as pd
-
-        v = np.zeros(24_000_000, dtype=np.int64)
-        v[::512] = 1
-        rows = sum(len(pdf) for pdf in it)
-        yield pd.DataFrame({"n": [rows + int(v[0])]})
-
-    images.repartition(n_parts).mapInPandas(_prefault, schema="n long").count()
 
     n = fixtures.n_images_for_sf(args.sf_dir)
     polys = pd.read_parquet(fixtures.ensure_polygons(fixtures.n_polygons_for(n)))
@@ -195,9 +170,8 @@ def main() -> None:
 
     region_start_ms = int(time.time() * 1000)
     t0 = time.time()
-    # geolocate as pure-JVM expressions (bit-identical to the Arrow kernel,
-    # pinned by tests): the whole map side — geolocate, cell, slot probe,
-    # route — is one whole-stage-codegen stage with zero Python crossing
+    # the whole map side — geolocate, cell, slot probe, route — is one
+    # whole-stage-codegen stage; the timed region runs no Python stage
     points = indexing.geolocate_expr(images).select("image_id", "lat", "lon")
     tiles, rp = indexing.tile_assignment_scalable(
         points,
@@ -209,8 +183,8 @@ def main() -> None:
     )
     # sub-phase split for scaling diagnosis: tile_stats is the first action
     # (geolocate → routed shuffle → sort → cache fill → per-(pid,cell)
-    # stats collect); tile_order is the second (cache read → Arrow order
-    # assign → checksum agg)
+    # stats collect); tile_order is the second (cache read → broadcast
+    # order join → checksum agg)
     t_mid = time.time()
     checksum, n_tiles = tiles.select(
         F.sum(F.hash("cell_id", "image_id", "order_").cast("bigint")).alias("s"),
@@ -222,7 +196,7 @@ def main() -> None:
 
     t0 = time.time()
     # PIP reads the SAME cached range-shuffled frame the tile stage built —
-    # no second materialization of the points, no assign() round-trip
+    # no second materialization of the points
     pip = spatial_join.pip_join(
         rp.select("image_id", "lat", "lon"), polys, res=pip_res,
         cover=pip_cover, edges=pip_edges,

@@ -3,9 +3,9 @@ compare at a bigger sf than the driver's sf0.01 gate — default the synthetic
 data/sf1.0 (n_images = 1,060,000; tables from scripts/make_sf1.py) — and
 record per-query pass/fail + wall time to STRESS_<base>.json.
 
-Mirrors tests/test_oracles.py's comparison exactly (row count, sorted
-columns, exact values); failures don't stop the pass — the point is the
-complete per-query table, including the queries that only break at scale
+Uses the same comparison as tests/test_oracles.py (scripts/oracle_compare:
+row count, sorted columns, exact values); failures don't stop the pass — the
+point is the complete per-query table, including the queries that only break at scale
 (window state growth, int overflow in pack branches, fixture-generator
 asymptotics).
 
@@ -31,49 +31,12 @@ BASE = os.path.basename(os.path.normpath(SF_DIR))
 import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
 
+from scripts.oracle_compare import compare  # noqa: E402
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
-
-
-def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = {}
-    for c in sorted(pdf.columns):
-        s = pdf[c]
-        if pd.api.types.is_integer_dtype(s):
-            try:
-                s = s.astype("int64")
-            except (TypeError, ValueError, OverflowError):
-                pass
-        elif pd.api.types.is_float_dtype(s):
-            s = s.astype("float64")
-        out[c] = s
-    df = pd.DataFrame(out)
-    return df.sort_values(list(df.columns), kind="mergesort", ignore_index=True)
-
-
-def _compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> str | None:
-    if len(spark_pdf) != len(duck_pdf):
-        return f"row count {len(spark_pdf)} vs oracle {len(duck_pdf)}"
-    a, b = _normalize(spark_pdf), _normalize(duck_pdf)
-    if list(a.columns) != list(b.columns):
-        return f"columns {list(a.columns)} vs {list(b.columns)}"
-    for c in a.columns:
-        av, bv = a[c].to_numpy(), b[c].to_numpy()
-        if av.dtype.kind == "f" or bv.dtype.kind == "f":
-            ok = np.array_equal(av.astype("float64"), bv.astype("float64"), equal_nan=True)
-        else:
-            ok = bool((pd.Series(av).fillna("\0") == pd.Series(bv).fillna("\0")).all())
-        if not ok:
-            mism = np.flatnonzero(
-                ~(pd.Series(av).astype(str) == pd.Series(bv).astype(str)).to_numpy()
-            )[:3]
-            return (
-                f"{c}: mismatch at rows {mism.tolist()}; "
-                f"spark={av[mism].tolist()} oracle={bv[mism].tolist()}"
-            )
-    return None
 
 
 def _verify_bucketed_near_dup(spdf: pd.DataFrame, n: int) -> str | None:
@@ -239,7 +202,7 @@ def main() -> None:
                     dpdf = con.execute(oracles[name]).df()
                     rec["oracle_s"] = round(time.time() - t2, 1)
                     rec["rows"] = len(spdf)
-                    err = _compare(spdf, dpdf)
+                    err = compare(spdf, dpdf)
                     rec["status"] = "pass" if err is None else "FAIL"
                     if err:
                         rec["err"] = err

@@ -118,7 +118,7 @@ def _images_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return indexing.with_cells(indexing.geolocate(_images_df(spark, sf_dir)), resolutions=(7, 8, 9))
+    return indexing.with_cells(indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=(7, 8, 9))
 
 
 # =====================================================================
@@ -132,12 +132,10 @@ def q_geolocate_cells(spark, sf_dir):
 
 
 def q_tile_assignment(spark, sf_dir):
-    # scalable variant: straggler-free on Zipf-skewed cells; output equality
-    # with the window form is pinned by tests (test_spark_geo). Bounds are
-    # precomputed driver-side from a BOUNDED scattered sample of the base table
-    # (manifest-statistics role; O(files) driver work, never O(table)) so
-    # the shuffle routes directly instead of sampling its input — without
-    # them repartitionByRange re-runs the whole geolocate pass to sample.
+    # Bounds are precomputed driver-side from a BOUNDED scattered sample of
+    # the base table (manifest-statistics role; O(files) driver work, never
+    # O(table)) so the shuffle routes directly instead of sampling its input
+    # — without them repartitionByRange re-runs the whole geolocate pass.
     n = fixtures.n_images_for_sf(sf_dir)
     # 16 routed partitions regardless of core count: each bound adds a
     # comparison to the codegen'd searchsorted and a row group to the stats
@@ -145,9 +143,6 @@ def q_tile_assignment(spark, sf_dir):
     # partition count never changes the output (pytest-pinned)
     n_parts = 16
     bounds = indexing.sample_cell_bounds(fixtures.ensure_images(n), n_parts, res=7)
-    # geolocate as JVM expressions (bit-identical to the kernel, pytest-pinned)
-    # — the hot path the flagship takes; q_geolocate_cells keeps exercising
-    # the Arrow-kernel surface against the golden oracle
     pts = indexing.with_cells(indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=(7,), zlevel=0)
     return indexing.tile_assignment_scalable(
         pts, 7, partitions=n_parts, bounds=bounds
@@ -329,7 +324,7 @@ def q_pip_join(spark, sf_dir):
     )
     from .operators import spatial_join
 
-    return spatial_join.pip_join(pts, polys, spark=spark)
+    return spatial_join.pip_join(pts, polys)
 
 
 def q_polygon_stats(spark, sf_dir):
@@ -580,80 +575,10 @@ def q_ann_srp(spark, sf_dir):
 # =====================================================================
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order is deliberate: round-1's CORRECTNESS file contained
-    exactly the FIRST 50 entries in registry order, so every oracled query
-    whose hard per-query signal matters most sits in the first 50 slots; the
-    tail holds capability-duplicate oracled twins (each class keeps an
-    in-top-50 green representative) and the by-design rows-only entries.
-
-    r4 rotation (verdict item 3): every oracled query should have at least
-    one driver hard-signal row across the rounds, so 9 tail queries that had
-    never been driver-checked moved into the top 50 — iso3166_node,
-    running_user_value, sessionize, cube_lineitem, xml_tags, pip_by_kind,
-    cell_counts_stream, anti_join_customers, plus the new decode_way_refs —
-    displacing twice-green capability twins whose class representative stays
-    in the top 50: knn_global (knn), events_windowed_stream
-    (user_totals_stream + cell_counts_stream cover streaming), frame_sample /
-    resize_nn (block_features_flat + audio_window_energy cover multimodal),
-    denotation_count / route_wide / rel_member_tags (rel_tag_freq +
-    addr_pivot_union + iso3166_countries + ref_query_pack cover the corpus),
-    lang_id (token_stats + quality_score cover text), events_pivot
-    (tag_pivot covers EAV pivot), ngram_jaccard_pairs (exact/minhash/simhash/
-    clusters cover dedup — displaced by ann_recall_ivf, which was the one
-    oracled query besides iso3166_node with no driver row in ANY round).
-
-    r4.1 rotation: the new raster-analytics class (raster_density,
-    tile_pyramid, zonal_stats — no driver row possible before this round)
-    takes three top-50 slots from thrice-green twins whose classes keep
-    in-top-50 representatives: revenue_by_segment (hash agg —
-    q1_lineitem_agg + rollup_lineitem + cube_lineitem), event_pairs_window
-    (windows — events_windowed + running_user_value + sessionize; temporal —
-    asof_purchase_view), date_projection (scalar projection — null_scan +
-    ref_query_pack's strftime branches; D13 carries green driver rows from
-    rounds 1-3). focal_sum stays in the tail: tile_pyramid represents the
-    raster-aggregation class and the wrap/clamp topology is pytest-pinned.
-
-    r4.2 rotation: the three operators added late in round 4
-    (spatial_autocorr, polygon_stats, cell_compact — new classes, no driver
-    row possible before) take top-50 slots from thrice-green twins whose
-    classes keep in-top-50 representation: rel_tag_freq (corpus —
-    addr_pivot_union + iso3166_countries + iso3166_node + ref_query_pack),
-    null_scan (NULL-predicate scan — ref_query_pack's NULL branches;
-    thrice-green r1-r3), rollup_lineitem (grouping sets — cube_lineitem,
-    rotated in this round, subsumes rollup's lattice).
-
-    r4.3 rotation: adaptive_grid, blur_metric and decontaminate (three more
-    new-class operators with no prior driver row) displace tag_pivot (EAV
-    pivot — addr_pivot_union's pivot-union corpus twin stays in the top
-    50), events_windowed (windows keep running_user_value + sessionize,
-    both first-timers this round) and user_totals_stream (streaming keeps
-    cell_counts_stream; the stateful operator stays pytest-oracled via the
-    stream≡batch replica).
-
-    r5 rotation (verdict item 6): the 7 oracled queries that had never had a
-    driver hard-signal row — focal_sum, box_pairs, way_geometry, way_simplify,
-    phash_near_dup, local_autocorr, repetition_stats — plus the new
-    decode_rel_members (D5's third wire stream) take top-50 slots. After this
-    round every oracled query in the registry has had at least one driver row.
-    Displaced (each 1-4x driver-green, class representation retained in the
-    top 50): decode_metrics (decode keeps nodes/tags/way_refs/rel_members/
-    integrity; the D14 watermark alert stays pytest-pinned), audio_window_energy
-    (multimodal keeps decode_integrity + block_features_flat + blur_metric),
-    iso3166_countries (corpus keeps addr_pivot_union + iso3166_node +
-    ref_query_pack), semi_join_orders (joins keep anti_join_customers +
-    asof_purchase_view; 4x green r1-r4), token_stats (text keeps decontaminate
-    + repetition_stats + quality-score's pytest replica), exact_dedup_groups
-    (dedup keeps minhash/simhash/clusters/phash_near_dup), kmeans_assign
-    (iterative keeps dedup_clusters), emb_near_dup_bucketed (ANN keeps
-    ann_recall_srp + ann_recall_ivf; r4-green + sf1.0 spec-verified).
-
-    Also r5 (verdict item 3, investigated and REJECTED with measurements):
-    the ask to make escalation the default kNN rested on the sf1.0 stress
-    reading (knn 88.5 s vs knn_global 18.9 s), which controlled re-
-    measurement shows was a session-order artifact — escalation's round 1 IS
-    the fixed ring-2 plan, so it is strictly more work; same-session sf0.1:
-    fixed 2.2 s vs escalating 14.0 s. `knn` stays fixed-ring; `knn_global`
-    stays the oracled completeness variant (see q_knn docstring)."""
+    """Registry order is the driver order: the first 50 entries are the
+    hard-signal rows the driver checks, and every capability class keeps one
+    oracled representative there. The tail holds the class twins and the
+    rows-only entries."""
     return {
         # geo / tiling / spatial join / knn (north-star operators)
         "geolocate_cells": q_geolocate_cells,
@@ -725,18 +650,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # similarity search (golden-oracled recall for BOTH approximate paths)
         "ann_recall_srp": similarity.ann_recall_srp,
         "ann_recall_ivf": similarity.ann_recall_ivf,
+        # ---- tail: capability-duplicate oracled twins
         "emb_near_dup_bucketed": similarity.emb_near_dup_bucketed,
-        # ---- tail: capability-duplicate oracled twins (class representative
-        # above stays green even if the driver caps the checked-query count).
-        # r3 curation: typed_members (D11 dispatch — subsumed by
-        # rel_member_tags, which calls it), ann_topk and emb_near_dup (the
-        # labeled exact all-pairs baselines whose scale siblings
-        # ann_recall_srp / emb_near_dup_bucketed keep top-50 slots) moved
-        # here. r4 rotation: the 9 displaced twins listed in the docstring
-        # land here; every one of them has at least one green driver row
-        # from rounds 1-3 (CORRECTNESS_r0{1,2,3}.json). quality_score (green
-        # r1-r3; text class keeps token_stats in the top 50) yielded its slot
-        # to the new raster_polygonize so the fresh operator gets a driver row.
         "quality_score": text.quality_score,
         "typed_members": lambda spark, sf_dir: relational.typed_members(
             spark, sf_dir, fixtures.ensure_collections(fixtures.n_images_for_sf(sf_dir))
@@ -778,7 +693,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "exact_dedup_groups": text.exact_dedup_groups,
         "token_stats": text.token_stats,
         "kmeans_assign": similarity.kmeans_assign,
-        # r4.1/r4.2/r4.3-displaced thrice-green twins (see docstring)
         "tag_pivot": q_tag_pivot,
         "events_windowed": relational.events_windowed,
         "user_totals_stream": q_user_totals_stream,

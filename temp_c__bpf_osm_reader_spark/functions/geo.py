@@ -22,14 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .hashing import (
-    splitmix64,
-    fnv1a64_str_array,
-    u01,
-    i64_to_u64,
-    xxh64_long,
-    xxh64_str_array,
-)
+from .hashing import u01, xxh64_long, xxh64_str_array
 
 # ---------------------------------------------------------------- geolocation
 
@@ -60,9 +53,9 @@ def latlon_from_phash(phash: np.ndarray, image_ids) -> tuple[np.ndarray, np.ndar
     Images sharing a phash (near-duplicates) land in the same ~0.2° pocket →
     realistic hot cells (the skew the salting path handles).
 
-    Bit-equality twin contract: latlon_cols() (JVM expressions) and
-    operators/indexing.geolocate (Arrow kernel calling this) must produce
-    IDENTICAL doubles — pinned by tests/test_spark_geo.py.
+    This numpy form is the test oracle and fixture generator; the engine
+    computes the same doubles through latlon_cols() (JVM expressions) —
+    bit-equality pinned by tests/test_spark_geo.py.
     """
     u = xxh64_long(np.asarray(phash, dtype=np.int64))
     v = xxh64_long(u)
@@ -85,11 +78,9 @@ def latlon_cols(image_id_col="image_id", phash_col="phash"):
     expressions (built-in xxhash64 + double arithmetic — ANSI-safe, whole-
     stage-codegen, zero Python crossing). Returns (lat_col, lon_col).
 
-    This is the hot-pipeline form: at cluster scale the Arrow-UDF geolocate
-    pays a JVM<->Python crossing per row that measures ~0.56 scaling
-    efficiency on kernel-mediated IPC (BASELINE.md); the expression form
-    keeps the whole map stage inside Tungsten. Bit-identical outputs —
-    u01, clip, and the pmod wrap are mirrored operation-for-operation.
+    The engine's only geolocate path (indexing.geolocate_expr). Bit-identical
+    to the numpy oracle — u01, clip, and the pmod wrap are mirrored
+    operation-for-operation.
     """
     from pyspark.sql import functions as F
 

@@ -12,61 +12,18 @@ whole-stage-codegen'd, and replicable in ANSI SQL by the DuckDB oracle
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.geo import RES_SHIFT, I_SHIFT, latlon_from_phash
-
-
-def geolocate(df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """(image_id, phash, …) → (image_id, …extra, lat, lon) — single
-    mapInArrow pass (one Arrow hop, no shuffle, no pandas materialization).
-
-    Deliberately NOT an expression UDF: Catalyst collapses projections and
-    would re-evaluate the Python expression once per referencing operator
-    (observed: latlon computed 2× in the PIP plan). And Arrow-native rather
-    than mapInPandas: the FNV kernel reads the UTF-8 buffer of the Arrow
-    string column directly, so image_ids are never materialized as Python
-    objects (input_hint: vectorized Arrow UDFs, no per-row Python). Payload
-    columns (bytes) are pruned before the Python boundary.
-    """
-    import pyarrow as pa
-
-    keep = ["image_id", *extra_cols]
-    src = df.select(*dict.fromkeys(keep + ["phash"]))
-    fields = [f for f in src.schema.fields if f.name != "phash" or "phash" in keep]
-    out_schema = T.StructType(
-        fields
-        + [T.StructField("lat", T.DoubleType()), T.StructField("lon", T.DoubleType())]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    def gen(batches):
-        for rb in batches:
-            cols = {rb.schema.field(i).name: rb.column(i) for i in range(rb.num_columns)}
-            ids = cols["image_id"]
-            if isinstance(ids, pa.ChunkedArray):  # defensive; batches are flat
-                ids = ids.combine_chunks()
-            phash = cols["phash"].to_numpy(zero_copy_only=False)
-            lat, lon = latlon_from_phash(phash, ids)
-            cols["lat"] = pa.array(lat, type=pa.float64())
-            cols["lon"] = pa.array(lon, type=pa.float64())
-            yield pa.RecordBatch.from_arrays([cols[n] for n in out_names], names=out_names)
-
-    return src.mapInArrow(gen, schema=out_schema)
+from ..functions.geo import RES_SHIFT, I_SHIFT
 
 
 def geolocate_expr(df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """geolocate() as pure-JVM column expressions (functions/geo.latlon_cols)
-    — bit-identical output, zero Python crossing, whole-stage codegen.
-
-    This is the hot-pipeline form: the Arrow-kernel geolocate() pays a
-    JVM<->Python crossing that measures ~0.56 scaling efficiency on this
-    host's kernel-mediated IPC and ~8x the per-row cost of the expression
-    form (BASELINE.md round-3 decomposition). geolocate() remains the
-    vectorized-UDF surface (input_hint) and the two are equality-pinned by
-    tests/test_spark_geo.py.
+    """(image_id, phash, …) → (image_id, …extra, lat, lon): the frozen
+    geolocate spec as pure-JVM column expressions (functions/geo.latlon_cols)
+    — whole-stage codegen, no Python crossing, no shuffle. Payload columns are
+    pruned at the scan. The numpy kernel geo.latlon_from_phash is the test
+    oracle; the doubles are bit-identical (tests/test_spark_geo.py).
     """
     from ..functions.geo import latlon_cols
 
@@ -209,25 +166,6 @@ def sample_cell_bounds(
     return [(int(cell[order[c]]), ids[order[c]]) for c in cuts]
 
 
-def tile_assignment(points: DataFrame, res: int = 7) -> DataFrame:
-    """Deterministic (cell_id, image_id, order_) table — byte-for-byte stable
-    across runs and parallelism levels (north-rule exactness criterion).
-
-    order_ is dense within a cell, ordered by image_id — the analogue of
-    nod_way(way_id, nod_id, order_) ordered membership (pbf2sqlite.c:422-428).
-    One shuffle on cell_id; at cluster scale this is the natural layout
-    shuffle (write partitioned by cell prefix afterwards).
-    """
-    cell = F.col(f"cell_r{res}") if f"cell_r{res}" in points.columns else grid_cell_col(
-        F.col("lat"), F.col("lon"), res
-    )
-    w = Window.partitionBy("cell_id").orderBy("image_id")
-    return (
-        points.select(cell.alias("cell_id"), "image_id")
-        .withColumn("order_", F.row_number().over(w))
-    )
-
-
 def tile_assignment_scalable(
     points: DataFrame,
     res: int = 7,
@@ -237,9 +175,14 @@ def tile_assignment_scalable(
     bounds=None,
     router: "CellRouter | None" = None,
 ):
-    """Byte-identical to tile_assignment, but without the one-task-per-cell
-    window bottleneck: at 10^12 rows a hot cell (Zipf head) would serialize an
-    entire reducer. Instead:
+    """Deterministic (cell_id, image_id, order_) table — byte-for-byte stable
+    across runs and parallelism levels (north-rule exactness criterion).
+    order_ is dense from 1 within a cell, ordered by image_id — the analogue
+    of nod_way(way_id, nod_id, order_) ordered membership
+    (pbf2sqlite.c:422-428).
+
+    No one-task-per-cell window: at 10^12 rows a hot cell (Zipf head) would
+    serialize an entire reducer. Instead:
 
       1. repartitionByRange(cell_id, image_id) + sortWithinPartitions — hot
          cells SPAN partitions instead of landing on one;
@@ -247,9 +190,11 @@ def tile_assignment_scalable(
          #cells + #partitions because ranges are contiguous) → cross-partition
          prefix offsets folded into one small (pid, cell_id, sub) table;
       3. order_ = monotonically_increasing_id() - sub, applied as a broadcast
-         hash join — entirely JVM-side, no second Python crossing.
+         hash join — entirely JVM-side.
 
-    Output equality with tile_assignment is pinned by test_spark_geo.
+    Output equals the numpy rank-by-image_id reference (and the DuckDB
+    tile_assignment oracle) at every partition count, bounds and router —
+    pinned by test_spark_geo.
 
     keep_cols: extra point columns carried through the shuffle and emitted
     untouched alongside (cell_id, image_id, order_) — lets downstream
@@ -322,16 +267,9 @@ def tile_assignment_scalable(
             .sortWithinPartitions("cell_id", "image_id")
             .cache()
         )
-    # order_ is assigned ENTIRELY JVM-side — no second Python crossing.
-    # (Round-3 measurement: an IDENTITY mapInArrow round-trip over the cached
-    # rp costs 16 s @2 pinned cores / 7.2 s @8 and scales at 0.56, while the
-    # same scan + hash agg pure-JVM is 1.6 s / 0.4 s and scales cleanly —
-    # this host's kernel-mediated JVM<->Python IPC neither is cheap nor
-    # scales, and on a real cluster the crossing is still 2x memory traffic.)
-    #
-    # Construction: rows in each cached partition sit in TOTAL order
-    # (cell_id, image_id) — unique keys, so the order is deterministic even
-    # on cache-eviction recompute. monotonically_increasing_id() is
+    # order_ is assigned ENTIRELY JVM-side. Construction: rows in each cached
+    # partition sit in TOTAL order (cell_id, image_id) — unique keys, so the
+    # order is deterministic even on cache-eviction recompute. monotonically_increasing_id() is
     # (partition_id << 33) + row_index_in_partition, so within a partition
     # (mid - min_mid_of_its_cell_run) is the row's position inside its
     # (partition, cell) run. The same stats pass that always ran now also
@@ -388,8 +326,7 @@ def tile_assignment_scalable(
     )
     if return_rp:
         # hand the cached range-shuffled frame to callers that want to reuse
-        # the SAME materialization (e.g. the PIP join) without paying the
-        # assign() Arrow round-trip again
+        # the SAME materialization (e.g. the PIP join)
         return tiles, rp
     return tiles
 
@@ -411,18 +348,6 @@ def write_partitioned(
         .sortWithinPartitions("p_cell", f"cell_r{res}", "image_id")
         .write.mode("overwrite")
         .partitionBy("p_cell")
-        .parquet(path)
-    )
-
-
-def write_indexed(points: DataFrame, path: str, res: int = 7, buckets: int = 64) -> None:
-    """Physical 'index build': cluster by cell, sort within partitions —
-    the Spark replacement for the reference's post-load B-tree indexes
-    (pbf2sqlite.c:585-597). Readers get partition pruning + clustered scans."""
-    (
-        points.repartition(buckets, F.col(f"cell_r{res}"))
-        .sortWithinPartitions(f"cell_r{res}", "image_id")
-        .write.mode("overwrite")
         .parquet(path)
     )
 

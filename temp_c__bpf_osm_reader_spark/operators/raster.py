@@ -301,15 +301,9 @@ def global_autocorr(points: DataFrame, cell_col: str, res: int) -> DataFrame:
             for di, dj in ((0, 0), (0, 1), (1, 0))
         ]
     )
-    # degenerate-grid wrap guard (mirrors polygonize's nx==1 self-loop
-    # guard): with nx <= 2 the mod-nx wrap would revisit the same column
-    # from both sides (or self-loop at nx==1), double-counting the single
-    # horizontal adjacency — clamp instead of wrapping there
-    cj_expr = (
-        F.pmod(F.col("col_j") + F.col("o.dj"), F.lit(nx))
-        if nx > 2
-        else (F.col("col_j") + F.col("o.dj"))
-    )
+    # cylinder wrap at every nx (grids have nx = 2^(res+1) >= 2; at nx == 2
+    # each column's east and west borders are two distinct adjacencies)
+    cj_expr = F.pmod(F.col("col_j") + F.col("o.dj"), F.lit(nx))
     per_pixel = (
         base.select("row_i", "col_j", "n_images", F.explode(offsets).alias("o"))
         .select(
@@ -319,7 +313,6 @@ def global_autocorr(points: DataFrame, cell_col: str, res: int) -> DataFrame:
             ((F.col("o.di") == 0) & (F.col("o.dj") == 0)).alias("is_center"),
         )
         .where((F.col("ci") >= 0) & (F.col("ci") < ny))
-        .where((F.col("cj") >= 0) & (F.col("cj") < nx))
         .groupBy("ci", "cj")
         .agg(
             F.max(F.when(F.col("is_center"), F.col("n_images"))).alias("center_n"),
@@ -394,15 +387,9 @@ def local_autocorr(points: DataFrame, cell_col: str, res: int) -> DataFrame:
             for di, dj in ((0, 0), (0, 1), (0, -1), (1, 0), (-1, 0))
         ]
     )
-    # degenerate-grid wrap guard (mirrors polygonize's nx==1 self-loop
-    # guard): with nx <= 2 the mod-nx wrap would revisit the same column
-    # from both sides (or self-loop at nx==1), double-counting the single
-    # horizontal adjacency — clamp instead of wrapping there
-    cj_expr = (
-        F.pmod(F.col("col_j") + F.col("o.dj"), F.lit(nx))
-        if nx > 2
-        else (F.col("col_j") + F.col("o.dj"))
-    )
+    # cylinder wrap at every nx (grids have nx = 2^(res+1) >= 2; at nx == 2
+    # each column's east and west borders are two distinct adjacencies)
+    cj_expr = F.pmod(F.col("col_j") + F.col("o.dj"), F.lit(nx))
     per_pixel = (
         base.select("row_i", "col_j", "n_images", F.explode(offsets).alias("o"))
         .select(
@@ -412,7 +399,6 @@ def local_autocorr(points: DataFrame, cell_col: str, res: int) -> DataFrame:
             ((F.col("o.di") == 0) & (F.col("o.dj") == 0)).alias("is_center"),
         )
         .where((F.col("ci") >= 0) & (F.col("ci") < ny))
-        .where((F.col("cj") >= 0) & (F.col("cj") < nx))
         .groupBy("ci", "cj")
         .agg(
             F.max(F.when(F.col("is_center"), F.col("n_images"))).alias("center_n"),

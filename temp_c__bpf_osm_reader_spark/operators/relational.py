@@ -697,7 +697,7 @@ def ref_query_pack(
 
     eav = spark.read.parquet(eav_path)
     images = spark.read.parquet(images_path)
-    pts = indexing.geolocate(images.select("image_id", "phash"))
+    pts = indexing.geolocate_expr(images.select("image_id", "phash"))
     S = lambda x: F.lit(x).cast("string")  # noqa: E731
     NL = F.lit(None).cast("string")
 

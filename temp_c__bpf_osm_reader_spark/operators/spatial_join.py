@@ -6,14 +6,11 @@ cover table is tiny (|polygons| × covered cells) → broadcast hash join agains
 the points on cell_id. No shuffle of the big side.
 
 Phase 2 — exact refine: even-odd ray casting over the surviving candidates.
-Two interchangeable engines (bit-identical by construction, pinned by tests):
-  * "jvm" (default) — the ring's edge table (≤12 edges per fixture polygon)
-    rides a second broadcast join and the crossing count is a higher-order
-    `filter(edges, ...)` of pure double arithmetic: zero Python crossing, the
-    whole refine stays in the JVM with the prefilter join.
-  * "pandas" — vectorized numpy ray cast in an Arrow-batched pandas UDF,
-    rings shipped once per executor via a Spark broadcast variable. Retained
-    as the independent oracle twin of the JVM expression.
+The ring's edge table (≤12 edges per fixture polygon) rides a second
+broadcast join and the crossing count is a higher-order `filter(edges, ...)`
+of pure double arithmetic: no Python crossing, the whole refine stays in the
+JVM with the prefilter join. The numpy kernel geo.point_in_polygon (behind the
+brute-force golden) and the DuckDB oracle are its references.
 
 At 100 TB scale: the points side stays partition-pruned and never shuffles;
 candidate inflation is bounded by cover-cell area / polygon area; skewed cells
@@ -35,7 +32,8 @@ from ..functions import geo
 from .indexing import grid_cell_col
 
 # Cover resolution default. Measured at the flagship scale (sf0.1 ×480 =
-# 50.9 M points, pinned 8 cores, 2 interleaved passes, scripts/pip_res_probe):
+# 50.9 M points, pinned 8 cores, 2 interleaved passes; probe script added in
+# commit 9d9061d):
 # res 7 best 4.20 s / res 8 best 3.70 s / res 9 best 3.89 s pip stage; output
 # row set identical (6,103,286) at all three — the refine is exact, res only
 # moves the prefilter/refine split. res 8 quadruples the driver-side cover
@@ -130,7 +128,7 @@ def _polygon_edges(spark: SparkSession, polygons: pd.DataFrame) -> DataFrame:
     """polygon_id → array<struct<yi,yj,xi,dx,dy>> — one tiny row per polygon.
 
     dx = xj-xi and dy = yj-yi are precomputed HERE in numpy float64, so every
-    subtraction is bit-identical to the numpy twin (geo.point_in_polygon);
+    subtraction is bit-identical to the numpy reference (geo.point_in_polygon);
     the executor-side refine is then only *, /, +, < — IEEE-754 operations
     that the JVM and numpy round identically."""
     rows = []
@@ -162,102 +160,53 @@ def pip_join(
     points: DataFrame,
     polygons: pd.DataFrame,
     res: int = PIP_RES,
-    spark: SparkSession | None = None,
-    refine: str = "jvm",
-    rebalance_refine: bool = False,
     cover: DataFrame | None = None,
     edges: DataFrame | None = None,
 ) -> DataFrame:
     """points(image_id, lat, lon, ...) ⋈ polygons → (image_id, polygon_id).
 
     Emits every containing polygon per point (a point may fall in >1 polygon).
-    `refine`: "jvm" (pure-expression ray cast, no Python crossing) or
-    "pandas" (numpy kernel twin) — bit-identical outputs, pinned by tests.
-
-    rebalance_refine: the candidate set is inherently skewed when `points`
-    arrives cell-range-partitioned (the flagship's tile shuffle) — candidates
-    exist only near polygons, so a few partitions carry most refine work and
-    the stage ends on a straggler (measured at 8 pinned cores: task p50
-    0.27 s, max 2.9 s). On a single host the shuffle that fixes it costs more
-    than the straggler it removes (+1.8 s at 50.9 M points, measured —
-    default off); on a large cluster the trade inverts: a straggler caps the
-    stage at max-task-time × 1 core while the candidate shuffle moves only
-    the small classified-cover subset of the table, so set True when the
-    refine input is range-partitioned and executors ≫ partitions-per-hot-cell.
-    Output row set identical either way.
+    cover/edges are polygon-LAYER statistics (like the tile bounds/router:
+    on a lakehouse they derive from the layer once, amortized across every
+    join against it) — callers running pip repeatedly prebuild them with
+    polygon_cover/_polygon_edges and pass them in; by default they are built
+    per call.
     """
-    spark = spark or points.sparkSession
-    # cover/edges are polygon-LAYER statistics (like the tile bounds/router:
-    # on a lakehouse they derive from the layer once, amortized across every
-    # join against it) — callers running pip repeatedly prebuild them in
-    # setup and pass them in; default path builds per call
+    spark = points.sparkSession
     if cover is None:
         cover = polygon_cover(spark, polygons, res)
+    if edges is None:
+        edges = _polygon_edges(spark, polygons)
 
     cell = grid_cell_col(F.col("lat"), F.col("lon"), res)
     candidates = points.select("image_id", "lat", "lon", cell.alias("cell_id")).join(
         F.broadcast(cover), "cell_id"
     )
-    if rebalance_refine:
-        candidates = candidates.hint("rebalance")
+    y, x = F.col("lat"), F.col("lon")
 
-    if refine == "jvm":
-        if edges is None:
-            edges = _polygon_edges(spark, polygons)
-        y, x = F.col("lat"), F.col("lon")
+    def _crossing(e):
+        # frozen half-open rule (geo.point_in_polygon): edge counted iff
+        # (yi > y) != (yj > y) and x strictly left of the crossing. When
+        # the rule holds dy != 0; when it doesn't, the double division
+        # yields ±inf/NaN (IEEE, never an error — ANSI div-by-zero only
+        # applies to integral/decimal) and the conjunction is already
+        # false, mirroring numpy's masked errstate lanes.
+        cond = (e["yi"] > y) != (e["yj"] > y)
+        x_cross = e["dx"] * (y - e["yi"]) / e["dy"] + e["xi"]
+        return cond & (x < x_cross)
 
-        def _crossing(e):
-            # frozen half-open rule (geo.point_in_polygon): edge counted iff
-            # (yi > y) != (yj > y) and x strictly left of the crossing. When
-            # the rule holds dy != 0; when it doesn't, the double division
-            # yields ±inf/NaN (IEEE, never an error — ANSI div-by-zero only
-            # applies to integral/decimal) and the conjunction is already
-            # false, mirroring numpy's masked errstate lanes.
-            cond = (e["yi"] > y) != (e["yj"] > y)
-            x_cross = e["dx"] * (y - e["yi"]) / e["dy"] + e["xi"]
-            return cond & (x < x_cross)
-
-        inside = F.size(F.filter(F.col("edges"), _crossing)) % 2 == 1
-        # interior-cell candidates are inside by classification — they skip
-        # the edges join entirely (no per-row copy of the edge array, no ray
-        # cast); only boundary-cell candidates pay the exact refine
-        full_hits = candidates.filter(F.col("_full")).select(
-            "image_id", "polygon_id"
-        )
-        refined = (
-            candidates.filter(~F.col("_full"))
-            .join(F.broadcast(edges), "polygon_id")
-            .filter(inside)
-            .select("image_id", "polygon_id")
-        )
-        return full_hits.unionByName(refined)
-
-    rings = {
-        int(r["polygon_id"]): (
-            np.asarray(r["ring_lat"], dtype=np.float64),
-            np.asarray(r["ring_lon"], dtype=np.float64),
-        )
-        for _, r in polygons.iterrows()
-    }
-    bc_rings = spark.sparkContext.broadcast(rings)
-
-    @F.pandas_udf(T.BooleanType())
-    def contains(lat: pd.Series, lon: pd.Series, pid: pd.Series) -> pd.Series:
-        rr = bc_rings.value
-        out = np.zeros(len(lat), dtype=bool)
-        la, lo, pv = lat.to_numpy(), lon.to_numpy(), pid.to_numpy()
-        # group the Arrow batch by polygon → one vectorized ray-cast per polygon
-        order = np.argsort(pv, kind="stable")
-        bounds = np.flatnonzero(np.diff(pv[order])) + 1
-        for seg in np.split(order, bounds):
-            ring_lat, ring_lon = rr[int(pv[seg[0]])]
-            out[seg] = geo.point_in_polygon(la[seg], lo[seg], ring_lat, ring_lon)
-        return pd.Series(out)
-
-    return (
-        candidates.filter(contains(F.col("lat"), F.col("lon"), F.col("polygon_id")))
+    inside = F.size(F.filter(F.col("edges"), _crossing)) % 2 == 1
+    # interior-cell candidates are inside by classification — they skip
+    # the edges join entirely (no per-row copy of the edge array, no ray
+    # cast); only boundary-cell candidates pay the exact refine
+    full_hits = candidates.filter(F.col("_full")).select("image_id", "polygon_id")
+    refined = (
+        candidates.filter(~F.col("_full"))
+        .join(F.broadcast(edges), "polygon_id")
+        .filter(inside)
         .select("image_id", "polygon_id")
     )
+    return full_hits.unionByName(refined)
 
 
 def box_self_join(points: DataFrame, cell_col: str, eps_deg: float, res: int) -> DataFrame:

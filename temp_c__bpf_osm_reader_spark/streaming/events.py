@@ -114,9 +114,9 @@ def cell_counts_stream(spark: SparkSession, sf_dir: str, query_name: str = "cell
     (readosm.c:1694-1892: read block → decode → load, bounded memory) as
     Structured Streaming: the images table is consumed incrementally
     (maxFilesPerTrigger=1), each micro-batch geolocates through the SAME
-    mapInArrow kernel as the batch path, and the running per-cell counts are
-    maintained as streaming state. Driven to completion; stream ≡ batch
-    GROUP BY is the oracle."""
+    JVM expressions as the batch path (indexing.geolocate_expr), and the
+    running per-cell counts are maintained as streaming state. Driven to
+    completion; stream ≡ batch GROUP BY is the oracle."""
     from ..operators import indexing
     from ..sources import fixtures
     from ..sources.fixtures import DATA_DIR
@@ -135,7 +135,7 @@ def cell_counts_stream(spark: SparkSession, sf_dir: str, query_name: str = "cell
         .parquet(root)
         .select("image_id", "phash")
     )
-    pts = indexing.with_cells(indexing.geolocate(stream), resolutions=(7,), zlevel=0)
+    pts = indexing.with_cells(indexing.geolocate_expr(stream), resolutions=(7,), zlevel=0)
     agg = pts.groupBy(F.col("cell_r7").alias("cell_id")).agg(
         F.count(F.lit(1)).alias("n_images"), F.min("image_id").alias("first_image")
     )

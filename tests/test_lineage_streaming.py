@@ -19,7 +19,7 @@ def test_snapshot_commit_and_resume(spark, fx, tmp_path):
     def stage():
         calls["n"] += 1
         df = spark.read.parquet(fx["images"])
-        return indexing.with_cells(indexing.geolocate(df), resolutions=(7,), zlevel=0).select(
+        return indexing.with_cells(indexing.geolocate_expr(df), resolutions=(7,), zlevel=0).select(
             "image_id", "cell_r7"
         )
 

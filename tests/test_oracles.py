@@ -8,6 +8,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from scripts.oracle_compare import compare, normalize
+
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -32,46 +34,6 @@ def contract():
     return e.queries(), e.oracle_sql()
 
 
-def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = {}
-    for c in sorted(pdf.columns):
-        s = pdf[c]
-        if pd.api.types.is_integer_dtype(s) or s.dtype == object and s.map(
-            lambda x: isinstance(x, int)
-        ).all() and len(s) and not pd.api.types.is_string_dtype(s):
-            try:
-                s = s.astype("int64")
-            except (TypeError, ValueError, OverflowError):
-                pass
-        elif pd.api.types.is_float_dtype(s):
-            s = s.astype("float64")
-        out[c] = s
-    df = pd.DataFrame(out)
-    return df.sort_values(list(df.columns), kind="mergesort", ignore_index=True)
-
-
-def _compare(name, spark_pdf, duck_pdf):
-    assert len(spark_pdf) == len(duck_pdf), (
-        f"{name}: row count {len(spark_pdf)} vs oracle {len(duck_pdf)}"
-    )
-    a, b = _normalize(spark_pdf), _normalize(duck_pdf)
-    assert list(a.columns) == list(b.columns), f"{name}: columns {list(a.columns)} vs {list(b.columns)}"
-    for c in a.columns:
-        av, bv = a[c].to_numpy(), b[c].to_numpy()
-        if av.dtype.kind == "f" or bv.dtype.kind == "f":
-            ok = np.array_equal(av.astype("float64"), bv.astype("float64"), equal_nan=True)
-        else:
-            ok = (pd.Series(av).fillna("\0") == pd.Series(bv).fillna("\0")).all()
-        if not ok:
-            mism = np.flatnonzero(
-                ~(pd.Series(av).astype(str) == pd.Series(bv).astype(str)).to_numpy()
-            )[:5]
-            raise AssertionError(
-                f"{name}.{c}: value mismatch at rows {mism.tolist()}; "
-                f"spark={av[mism].tolist()} oracle={bv[mism].tolist()}"
-            )
-
-
 def _oracle_names():
     import __spark_entry__ as e
 
@@ -83,7 +45,8 @@ def test_query_matches_oracle(name, spark, duck, contract):
     qs, oracles = contract
     sdf = qs[name](spark, SF_DIR).toPandas()
     ddf = duck.execute(oracles[name]).df()
-    _compare(name, sdf, ddf)
+    err = compare(sdf, ddf)
+    assert err is None, f"{name}: {err}"
 
 
 def test_rows_only_queries_run(spark, contract):
@@ -91,3 +54,15 @@ def test_rows_only_queries_run(spark, contract):
     for name in sorted(set(qs) - set(oracles)):
         n = qs[name](spark, SF_DIR).count()
         assert n >= 0, name
+
+
+def test_compare_object_int_column_equals_int64_twin():
+    """An integer column that arrives object-typed (Python ints) must
+    normalize to int64 and compare equal to its int64 twin."""
+    obj = pd.DataFrame({"k": pd.Series([3, 1, 2], dtype=object), "v": ["c", "a", "b"]})
+    i64 = pd.DataFrame({"k": np.array([1, 2, 3], dtype=np.int64), "v": ["a", "b", "c"]})
+    assert normalize(obj)["k"].dtype == np.int64
+    assert compare(obj, i64) is None
+    assert compare(i64, obj) is None
+    i64.loc[0, "k"] = 0
+    assert compare(obj, i64) is not None

@@ -29,7 +29,7 @@ def test_filter_pushdown_to_parquet(spark):
 def test_column_pruning_reads_minimal_schema(spark, fx):
     # payload (bytes) must NOT reach the scan when only phash/image_id are used
     images = spark.read.parquet(fx["images"])
-    df = indexing.geolocate(images)
+    df = indexing.geolocate_expr(images)
     plan = _plan(df)
     assert "ReadSchema: struct<image_id:string,phash:bigint>" in plan
     assert "bytes" not in plan.split("ReadSchema")[1].splitlines()[0]
@@ -46,7 +46,7 @@ def test_revenue_join_broadcasts_customer(spark):
 
 
 def test_knn_expansion_is_broadcast_no_points_shuffle(spark, fx):
-    pts = indexing.geolocate(spark.read.parquet(fx["images"]))
+    pts = indexing.geolocate_expr(spark.read.parquet(fx["images"]))
     queries = pts.limit(10).select("image_id", "lat", "lon")
     plan = _plan(knn.knn_join(pts.select("image_id", "lat", "lon"), queries))
     assert "BroadcastHashJoin" in plan
@@ -104,7 +104,7 @@ def test_partitioned_layout_prunes_directories(spark, fx, tmp_path):
     from temp_c__bpf_osm_reader_spark.operators import indexing
 
     pts = indexing.with_cells(
-        indexing.geolocate(spark.read.parquet(fx["images"])), resolutions=(7,), zlevel=0
+        indexing.geolocate_expr(spark.read.parquet(fx["images"])), resolutions=(7,), zlevel=0
     )
     path = str(tmp_path / "bycell")
     indexing.write_partitioned(pts, path)

@@ -14,7 +14,28 @@ from temp_c__bpf_osm_reader_spark.sources import fixtures
 
 def load_points(spark, fx):
     df = spark.read.parquet(fx["images"])
-    return indexing.with_cells(indexing.geolocate(df))
+    return indexing.with_cells(indexing.geolocate_expr(df))
+
+
+def tile_reference(golden_geo_pdf):
+    """numpy tile rule (the DuckDB tile_assignment oracle's rule): res-7
+    grid cell, then the 1-based rank by image_id within each cell."""
+    from temp_c__bpf_osm_reader_spark.functions import geo
+
+    ref = pd.DataFrame(
+        {
+            "cell_id": geo.grid_cell(
+                golden_geo_pdf["lat"].to_numpy(), golden_geo_pdf["lon"].to_numpy(), 7
+            ).astype(np.int64),
+            "image_id": golden_geo_pdf["image_id"].to_numpy(),
+        }
+    ).sort_values(["cell_id", "image_id"], ignore_index=True)
+    ref["order_"] = (ref.groupby("cell_id").cumcount() + 1).astype(np.int32)
+    return ref
+
+
+def tiles_sorted(df):
+    return df.toPandas().sort_values(["cell_id", "order_"], ignore_index=True)
 
 
 def test_geolocate_and_cells_match_golden(spark, fx, golden_geo_pdf):
@@ -25,40 +46,23 @@ def test_geolocate_and_cells_match_golden(spark, fx, golden_geo_pdf):
         .sort_values("image_id", ignore_index=True)
     )
     exp = golden_geo_pdf.sort_values("image_id", ignore_index=True)
-    assert np.array_equal(got["lat"].to_numpy(), exp["lat"].to_numpy())  # bit-exact
-    assert np.array_equal(got["lon"].to_numpy(), exp["lon"].to_numpy())
+    assert list(got["image_id"]) == list(exp["image_id"])
+    for c in ["lat", "lon"]:  # bit patterns, so -0.0 vs 0.0 or NaN would fail
+        assert np.array_equal(
+            got[c].to_numpy().view(np.int64), exp[c].to_numpy().view(np.int64)
+        ), c
     for c in ["cell_r7", "cell_r8", "cell_r9", "zcell_l12"]:
         assert np.array_equal(got[c].to_numpy(), exp[c].to_numpy()), c
 
 
-def test_tile_assignment_deterministic_across_parallelism(spark, fx):
+def test_tile_assignment_deterministic_across_parallelism(spark, fx, golden_geo_pdf):
+    """Byte-for-byte the numpy reference at every partition count and input
+    partitioning (range-sampled bounds, no precomputed bounds)."""
     pts = load_points(spark, fx)
-    a = indexing.tile_assignment(pts, 7).toPandas().sort_values(
-        ["cell_id", "order_"], ignore_index=True
-    )
-    b = (
-        indexing.tile_assignment(pts.repartition(17), 7)
-        .toPandas()
-        .sort_values(["cell_id", "order_"], ignore_index=True)
-    )
-    pd.testing.assert_frame_equal(a, b)  # byte-for-byte stable layout
-    # order_ dense from 1 per cell
-    g = a.groupby("cell_id")["order_"]
-    assert (g.min() == 1).all()
-    assert (g.max() == g.size()).all()
-
-
-def test_tile_assignment_scalable_equals_window_variant(spark, fx):
-    pts = load_points(spark, fx)
-    a = indexing.tile_assignment(pts, 7).toPandas().sort_values(
-        ["cell_id", "order_"], ignore_index=True
-    )
-    b = (
-        indexing.tile_assignment_scalable(pts, 7, partitions=7)
-        .toPandas()
-        .sort_values(["cell_id", "order_"], ignore_index=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
+    ref = tile_reference(golden_geo_pdf)
+    for src, parts in ((pts, 1), (pts, 7), (pts.repartition(17), 7), (pts, 16)):
+        got = tiles_sorted(indexing.tile_assignment_scalable(src, 7, partitions=parts))
+        pd.testing.assert_frame_equal(got, ref)
 
 
 def test_pip_join_matches_bruteforce_golden(spark, fx, polygons_pdf):
@@ -96,87 +100,35 @@ def test_pip_join_plan_is_broadcast(spark, fx, polygons_pdf):
     pts = load_points(spark, fx)
     plan = spatial_join.pip_join(pts, polygons_pdf)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan  # big side never shuffles
-    # default (jvm) refine: the exact ray cast is pure expressions — no
-    # Python crossing anywhere in the spatial join
+    # the exact ray cast is pure expressions — no Python crossing anywhere
+    # in the spatial join
     assert "EvalPython" not in plan
 
 
-def test_pip_join_jvm_refine_equals_pandas_twin(spark, fx, polygons_pdf):
-    """The JVM expression ray cast and the numpy kernel are the same frozen
-    arithmetic (dx/dy precomputed driver-side in numpy; *, /, +, < are
-    IEEE-identical in both engines) — outputs must match row-for-row."""
-    pts = load_points(spark, fx)
-    a = (
-        spatial_join.pip_join(pts, polygons_pdf, refine="jvm")
-        .toPandas()
-        .sort_values(["image_id", "polygon_id"], ignore_index=True)
-    )
-    b = (
-        spatial_join.pip_join(pts, polygons_pdf, refine="pandas")
-        .toPandas()
-        .sort_values(["image_id", "polygon_id"], ignore_index=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
-
-
-def test_pip_join_rebalance_refine_same_rows(spark, fx, polygons_pdf):
-    """rebalance_refine=True (the cluster-scale skew option) only changes
-    physical placement of the refine — the row set must be identical."""
-    pts = load_points(spark, fx)
-    a = (
-        spatial_join.pip_join(pts, polygons_pdf)
-        .toPandas()
-        .sort_values(["image_id", "polygon_id"], ignore_index=True)
-    )
-    b = (
-        spatial_join.pip_join(pts, polygons_pdf, rebalance_refine=True)
-        .toPandas()
-        .sort_values(["image_id", "polygon_id"], ignore_index=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
-
-
-def test_tile_assignment_bounds_routing_equals_window_variant(spark, fx):
+def test_tile_assignment_bounds_routing_matches_numpy_reference(spark, fx, golden_geo_pdf):
     """Direct-routed shuffle (precomputed bounds + magic-key addressing) must
-    be byte-identical to the window variant — including deliberately BAD
-    (unbalanced) bounds, since bounds affect balance only, never placement."""
-    import numpy as np
-
+    equal the numpy reference byte-for-byte — including deliberately BAD
+    (unbalanced) bounds, since bounds affect balance only, never placement —
+    both through the chained-when router and the CellRouter slot map."""
     pts = load_points(spark, fx)
-    a = indexing.tile_assignment(pts, 7).toPandas().sort_values(
-        ["cell_id", "order_"], ignore_index=True
-    )
-    pdf = pts.select(
-        indexing.grid_cell_col(F.col("lat"), F.col("lon"), 7).alias("cell_id"),
-        "image_id",
-    ).toPandas()
-    order = np.lexsort((pdf["image_id"].to_numpy(), pdf["cell_id"].to_numpy()))
+    ref = tile_reference(golden_geo_pdf)
     n_parts = 7
-    cuts = [len(order) * k // n_parts for k in range(1, n_parts)]
-    good = [
-        (int(pdf["cell_id"].iloc[order[c]]), pdf["image_id"].iloc[order[c]])
-        for c in cuts
-    ]
+    cuts = [len(ref) * k // n_parts for k in range(1, n_parts)]
+    good = [(int(ref["cell_id"].iloc[c]), ref["image_id"].iloc[c]) for c in cuts]
     # skewed bounds: all cuts bunched at the low end of the key space
-    bad = good[:2] * 3
-    for bounds in (good, sorted(bad)):
-        b = (
+    bad = sorted(good[:2] * 3)
+    for bounds in (good, bad):
+        got = tiles_sorted(
             indexing.tile_assignment_scalable(pts, 7, partitions=n_parts, bounds=bounds)
-            .toPandas()
-            .sort_values(["cell_id", "order_"], ignore_index=True)
         )
-        pd.testing.assert_frame_equal(a, b)
+        pd.testing.assert_frame_equal(got, ref)
         # same bounds through the slot-map router (the flagship path —
         # auto-build only kicks in above 24 partitions, so drive it directly)
         router = indexing.CellRouter(spark, bounds, n_parts, res=7)
-        c = (
-            indexing.tile_assignment_scalable(
-                pts, 7, partitions=n_parts, router=router
-            )
-            .toPandas()
-            .sort_values(["cell_id", "order_"], ignore_index=True)
+        got = tiles_sorted(
+            indexing.tile_assignment_scalable(pts, 7, partitions=n_parts, router=router)
         )
-        pd.testing.assert_frame_equal(a, c)
+        pd.testing.assert_frame_equal(got, ref)
 
 
 def test_magic_partition_keys_route_exactly(spark):
@@ -230,26 +182,6 @@ def test_xxh64_twin_matches_spark(spark):
         seed=H.xxh64_long(np.array(longs, dtype=np.int64)),
     ).view(np.int64)
     assert got_2 == [int(v) for v in tw_2]
-
-
-def test_geolocate_expr_bitidentical_to_kernel(spark, fx):
-    """geolocate_expr (JVM expressions) and geolocate (Arrow kernel) must
-    produce IDENTICAL doubles — the flagship runs the expression form, the
-    registered operator surface runs the kernel."""
-    import numpy as np
-
-    imgs = spark.read.parquet(fx["images"]).select("image_id", "phash")
-    a = indexing.geolocate(imgs).toPandas().sort_values("image_id", ignore_index=True)
-    b = indexing.geolocate_expr(imgs).toPandas().sort_values(
-        "image_id", ignore_index=True
-    )
-    assert list(a.columns) == list(b.columns)
-    assert np.array_equal(
-        a["lat"].to_numpy().view(np.int64), b["lat"].to_numpy().view(np.int64)
-    )
-    assert np.array_equal(
-        a["lon"].to_numpy().view(np.int64), b["lon"].to_numpy().view(np.int64)
-    )
 
 
 def test_decode_tags_sentinel_edges(spark):
@@ -657,24 +589,31 @@ def test_local_autocorr_sums_to_twice_global_numerator(spark, fx):
     rook weights, sum_i d_i * (sum_{j in N(i)} d_j) counts every unordered
     pair twice, so  sum(local_i) == 2 * (n^2*spp - n*S*sps + S^2*P)  where
     the right side is built from global_autocorr's EXACT integer
-    components. At golden scale every local_i double is an exactly
-    representable integer, so the equality is exact."""
+    components. At these scales every local_i double is an exactly
+    representable integer, so the equality is exact. Checked on the golden
+    layer at res 8 and on the wrapped 1×2 grid at res 0."""
+    from temp_c__bpf_osm_reader_spark.functions import geo
     from temp_c__bpf_osm_reader_spark.operators import raster
 
-    pts = spark.read.parquet(fx["golden_geo"])
-    loc = raster.local_autocorr(pts, "cell_r8", res=8).toPandas()
-    g = raster.global_autocorr(pts, "cell_r8", res=8).toPandas().iloc[0]
-    n, S = int(g["n_cells"]), int(g["s_total"])
-    rhs = 2 * (
-        n * n * int(g["sum_pair_prod"])
-        - n * S * int(g["sum_pair_sum"])
-        + S * S * int(g["n_pairs"])
+    res0 = geo.grid_cell(np.array([10.0] * 3 + [-40.0] * 5), np.array([-100.0] * 3 + [60.0] * 5), 0)
+    layers = (
+        (spark.read.parquet(fx["golden_geo"]), "cell_r8", 8),
+        (spark.createDataFrame(pd.DataFrame({"cell_r0": res0.astype(np.int64)})), "cell_r0", 0),
     )
-    lhs = sum(int(v) for v in loc["local_i"].tolist())
-    assert lhs == rhs
-    assert len(loc) == n
-    # neighbor counts respect the rook topology bound
-    assert loc["nbr_cnt"].between(0, 4).all()
+    for pts, col, res in layers:
+        loc = raster.local_autocorr(pts, col, res=res).toPandas()
+        g = raster.global_autocorr(pts, col, res=res).toPandas().iloc[0]
+        n, S = int(g["n_cells"]), int(g["s_total"])
+        rhs = 2 * (
+            n * n * int(g["sum_pair_prod"])
+            - n * S * int(g["sum_pair_sum"])
+            + S * S * int(g["n_pairs"])
+        )
+        lhs = sum(int(v) for v in loc["local_i"].tolist())
+        assert lhs == rhs, res
+        assert len(loc) == n
+        # neighbor counts respect the rook topology bound
+        assert loc["nbr_cnt"].between(0, 4).all()
 
 
 def test_adaptive_grid_partitions_occupied_space(spark, fx, golden_geo_pdf):
@@ -721,3 +660,149 @@ def test_adaptive_grid_partitions_occupied_space(spark, fx, golden_geo_pdf):
                 if (bi >> (8 - (r - 1)), bj >> (8 - (r - 1))) == (i >> 1, j >> 1)
             )
             assert pn > 3, f"emitted {(r, i, j)} under sparse parent {pn}"
+
+
+def test_cell_columns_match_numpy_at_grid_edges(spark):
+    """grid_cell_col (res 7, 8, 9, 16) and z_cell_col (level 12) are
+    bit-equal to the numpy specs on the points the fixtures never reach:
+    the poles, the antimeridian, signed zeros, and coordinates exactly on
+    (and one ulp either side of) row and column boundaries."""
+    from temp_c__bpf_osm_reader_spark.functions import geo
+
+    lats = [-90.0, 90.0 - 1e-9, 90.0, -0.0, 0.0]
+    lons = [-180.0, 180.0, -0.0, 0.0]
+    for r in (7, 8, 9, 12, 16):
+        ny, nx = geo.grid_dims(r)
+        for k in (1, 3, ny // 2 - 1, ny // 2 + 1, ny - 1):
+            b = k * 180.0 / ny - 90.0
+            lats += [b, np.nextafter(b, -np.inf), np.nextafter(b, np.inf)]
+        for k in (1, 5, nx // 2 - 1, nx // 2 + 1, nx - 1):
+            b = k * 360.0 / nx - 180.0
+            lons += [b, np.nextafter(b, -np.inf), np.nextafter(b, np.inf)]
+    lat = np.repeat(np.array(lats), len(lons))
+    lon = np.tile(np.array(lons), len(lats))
+    df = spark.createDataFrame(pd.DataFrame({"lat": lat, "lon": lon}))
+    cols = {f"r{r}": indexing.grid_cell_col(F.col("lat"), F.col("lon"), r) for r in (7, 8, 9, 16)}
+    cols["z12"] = indexing.z_cell_col(F.col("lat"), F.col("lon"), 12)
+    got = df.select("lat", "lon", *[c.alias(n) for n, c in cols.items()]).toPandas()
+    # same row order as the input is not guaranteed; key on the coordinate bits
+    got = got.set_index([got["lat"].to_numpy().view(np.int64), got["lon"].to_numpy().view(np.int64)])
+    got = got.loc[list(zip(lat.view(np.int64), lon.view(np.int64)))]
+    for r in (7, 8, 9, 16):
+        assert np.array_equal(got[f"r{r}"].to_numpy(), geo.grid_cell(lat, lon, r)), r
+    assert np.array_equal(got["z12"].to_numpy(), geo.z_cell(lat, lon, 12))
+
+
+def test_pip_join_matches_numpy_on_edges_and_vertices(spark):
+    """pip_join returns exactly the (point, polygon) rows geo.point_in_polygon
+    selects for points on vertices, on horizontal and vertical edges (which
+    here lie on res-8 grid lines, so cover classification and the half-open
+    ray cast meet on the same line), and one ulp / a small step inside and
+    outside — for an axis-aligned box and a concave notched square."""
+    from temp_c__bpf_osm_reader_spark.functions import geo
+
+    d = 180.0 / 256  # res-8 cell side (lat and lon)
+    lat0, lat1 = 140 * d - 90.0, 144 * d - 90.0
+    lon0, lon1 = 260 * d - 180.0, 266 * d - 180.0
+    box = ([lat0, lat0, lat1, lat1, lat0], [lon0, lon1, lon1, lon0, lon0])
+    # square with a V notch cut into its top edge (reflex vertex at 25, 25)
+    notch = ([20.0, 20.0, 30.0, 25.0, 30.0, 20.0], [20.0, 30.0, 30.0, 25.0, 20.0, 20.0])
+    polys = pd.DataFrame(
+        {
+            "polygon_id": [1, 2],
+            "kind": ["box", "notch"],
+            "ring_lat": [box[0], notch[0]],
+            "ring_lon": [box[1], notch[1]],
+        }
+    )
+    pts = []
+    for ring_lat, ring_lon in (box, notch):
+        ry, rx = np.array(ring_lat[:-1]), np.array(ring_lon[:-1])
+        my, mx = (ry + np.roll(ry, -1)) / 2, (rx + np.roll(rx, -1)) / 2
+        cy, cx = ry.mean(), rx.mean()
+        for y, x in list(zip(ry, rx)) + list(zip(my, mx)):
+            pts.append((y, x))
+            for dy, dx in ((1, 0), (-1, 0), (0, 1), (0, -1), (1, 1), (-1, -1)):
+                pts.append((y + dy * 1e-9, x + dx * 1e-9))
+                ulp_y = np.nextafter(y, np.inf * dy) if dy else y
+                ulp_x = np.nextafter(x, np.inf * dx) if dx else x
+                pts.append((ulp_y, ulp_x))
+            # a step toward and away from the centroid
+            pts.append((y + (cy - y) * 1e-3, x + (cx - x) * 1e-3))
+            pts.append((y - (cy - y) * 1e-3, x - (cx - x) * 1e-3))
+    # interior grid lines of the box (cells classified full vs boundary)
+    for k in range(141, 144):
+        pts.append((k * d - 90.0, (lon0 + lon1) / 2))
+    for k in range(261, 266):
+        pts.append(((lat0 + lat1) / 2, k * d - 180.0))
+    lat = np.array([p[0] for p in pts], dtype=np.float64)
+    lon = np.array([p[1] for p in pts], dtype=np.float64)
+    ids = [f"p{i:04d}" for i in range(len(pts))]
+    df = spark.createDataFrame(pd.DataFrame({"image_id": ids, "lat": lat, "lon": lon}))
+
+    got = {(r.image_id, r.polygon_id) for r in spatial_join.pip_join(df, polys).collect()}
+    want = set()
+    for pid, ring_lat, ring_lon in zip(polys["polygon_id"], polys["ring_lat"], polys["ring_lon"]):
+        hit = geo.point_in_polygon(lat, lon, np.array(ring_lat), np.array(ring_lon))
+        want |= {(ids[i], int(pid)) for i in np.flatnonzero(hit)}
+    assert 0 < len(want) < len(pts), "fixture is vacuous"
+    assert got == want
+
+
+def _autocorr_oracle(counts: dict, res: int):
+    """numpy brute force of the DuckDB autocorr oracles' formulas over
+    {(row_i, col_j): count}: E/S probes with (col_j + dj) % nx for the global
+    components, all four rook probes for the local ones."""
+    ny, nx = 1 << res, 1 << (res + 1)
+    n, S = len(counts), sum(counts.values())
+    sum_c2 = sum(c * c for c in counts.values())
+    P = spp = sps = 0
+    nbr = {k: [0, 0] for k in counts}
+    for (i, j), c in counts.items():
+        for di, dj in ((0, 1), (1, 0), (0, -1), (-1, 0)):
+            t = (i + di, (j + dj) % nx)
+            if not 0 <= t[0] < ny or t not in counts:
+                continue
+            if (di, dj) in ((0, 1), (1, 0)):
+                P, spp, sps = P + 1, spp + c * counts[t], sps + c + counts[t]
+            nbr[t][0] += c
+            nbr[t][1] += 1
+    nd, sd, pd_ = float(n), float(S), float(P)
+    den = pd_ * ((nd * nd * float(sum_c2)) - (nd * sd * sd))
+    num = nd * ((nd * nd * float(spp)) - (nd * sd * float(sps)) + (sd * sd * pd_))
+    moran = None if P == 0 or den == 0.0 else num / den
+    local = {
+        k: ((nd * float(c)) - sd) * ((nd * float(nbr[k][0])) - (float(nbr[k][1]) * sd))
+        for k, c in counts.items()
+    }
+    return (n, S, sum_c2, P, spp, sps), moran, nbr, local
+
+
+def test_autocorr_res0_wraps_like_oracle(spark):
+    """On the 1×2 res-0 grid the longitude wrap gives each column two
+    distinct borders with the other (east and west), exactly as the oracle
+    formula (col_j + dj) % nx counts them — both Moran variants agree with
+    its brute force."""
+    from temp_c__bpf_osm_reader_spark.functions import geo
+    from temp_c__bpf_osm_reader_spark.operators import raster
+
+    lat = np.array([10.0] * 3 + [-40.0] * 5)
+    lon = np.array([-100.0] * 3 + [60.0] * 5)
+    cells = geo.grid_cell(lat, lon, 0)
+    df = spark.createDataFrame(pd.DataFrame({"cell_r0": cells.astype(np.int64)}))
+    ij = [(int((c >> 27) & ((1 << 27) - 1)), int(c & ((1 << 27) - 1))) for c in cells]
+    counts = {k: ij.count(k) for k in set(ij)}
+    assert counts == {(0, 0): 3, (0, 1): 5}
+    comps, moran, nbr, local = _autocorr_oracle(counts, 0)
+
+    g = raster.global_autocorr(df, "cell_r0", res=0).toPandas().iloc[0]
+    cols = ["n_cells", "s_total", "sum_c2", "n_pairs", "sum_pair_prod", "sum_pair_sum"]
+    assert tuple(int(g[c]) for c in cols) == comps == (2, 8, 34, 2, 30, 16)
+    assert g["moran_i"] == moran == -1.0
+
+    loc = raster.local_autocorr(df, "cell_r0", res=0).toPandas()
+    got = {
+        (int(r.row_i), int(r.col_j)): (int(r.nbr_sum), int(r.nbr_cnt), r.local_i)
+        for r in loc.itertuples()
+    }
+    assert got == {k: (nbr[k][0], nbr[k][1], local[k]) for k in counts}
