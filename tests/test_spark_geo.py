@@ -681,13 +681,14 @@ def test_cell_columns_match_numpy_at_grid_edges(spark):
             lons += [b, np.nextafter(b, -np.inf), np.nextafter(b, np.inf)]
     lat = np.repeat(np.array(lats), len(lons))
     lon = np.tile(np.array(lons), len(lats))
-    df = spark.createDataFrame(pd.DataFrame({"lat": lat, "lon": lon}))
+    df = spark.createDataFrame(pd.DataFrame({"idx": np.arange(len(lat)), "lat": lat, "lon": lon}))
     cols = {f"r{r}": indexing.grid_cell_col(F.col("lat"), F.col("lon"), r) for r in (7, 8, 9, 16)}
     cols["z12"] = indexing.z_cell_col(F.col("lat"), F.col("lon"), 12)
-    got = df.select("lat", "lon", *[c.alias(n) for n, c in cols.items()]).toPandas()
-    # same row order as the input is not guaranteed; key on the coordinate bits
-    got = got.set_index([got["lat"].to_numpy().view(np.int64), got["lon"].to_numpy().view(np.int64)])
-    got = got.loc[list(zip(lat.view(np.int64), lon.view(np.int64)))]
+    got = (
+        df.select("idx", *[c.alias(n) for n, c in cols.items()])
+        .toPandas()
+        .sort_values("idx", ignore_index=True)
+    )
     for r in (7, 8, 9, 16):
         assert np.array_equal(got[f"r{r}"].to_numpy(), geo.grid_cell(lat, lon, r)), r
     assert np.array_equal(got["z12"].to_numpy(), geo.z_cell(lat, lon, 12))
