@@ -435,8 +435,8 @@ def main() -> None:
     spark.stop()
 
     # Compact headline record — printed when the suite ends and again as the
-    # FINAL stdout line. The round driver's tail capture truncated r3's
-    # single giant line mid-object (BENCH_r03.json parsed:null), so the bulky
+    # FINAL stdout line. A tail capture of stdout once truncated a single
+    # giant line mid-object (BENCH_r03.json parsed:null), so the bulky
     # per-run logs live only in the full record file.
     result = {
         "metric": "headline_suite_wall",

@@ -575,10 +575,10 @@ def q_ann_srp(spark, sf_dir):
 # =====================================================================
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order is the driver order: the first 50 entries are the
-    hard-signal rows the driver checks, and every capability class keeps one
-    oracled representative there. The tail holds the class twins and the
-    rows-only entries."""
+    """Registry order is significant: the first 50 entries are the
+    hard-signal rows, and every capability class keeps one oracled
+    representative there. The tail holds the class twins and the rows-only
+    entries."""
     return {
         # geo / tiling / spatial join / knn (north-star operators)
         "geolocate_cells": q_geolocate_cells,
