@@ -65,6 +65,22 @@ def test_tile_assignment_deterministic_across_parallelism(spark, fx, golden_geo_
         pd.testing.assert_frame_equal(got, ref)
 
 
+def test_tile_assignment_scalable_equals_window_variant(spark, fx):
+    """The scalable plan equals the plain one-window-per-cell rule
+    (row_number over cell_id ordered by image_id), computed here in Spark."""
+    from pyspark.sql import Window
+
+    pts = load_points(spark, fx)
+    w = Window.partitionBy("cell_id").orderBy("image_id")
+    a = tiles_sorted(
+        pts.select(F.col("cell_r7").alias("cell_id"), "image_id").withColumn(
+            "order_", F.row_number().over(w)
+        )
+    )
+    b = tiles_sorted(indexing.tile_assignment_scalable(pts, 7, partitions=7))
+    pd.testing.assert_frame_equal(a, b)
+
+
 def test_pip_join_matches_bruteforce_golden(spark, fx, polygons_pdf):
     pts = load_points(spark, fx)
     got = (
