@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from temp_c__bpf_osm_reader_spark import api
 from temp_c__bpf_osm_reader_spark.operators import indexing
+from temp_c__bpf_osm_reader_spark.session import read_parquet
 from temp_c__bpf_osm_reader_spark.sources import fixtures
 
 
@@ -24,7 +25,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on sf0.001: images → pseudo-geolocate → res-7 cells →
     per-cell tile counts (ordered, deterministic)."""
     n = fixtures.n_images_for_sf("/root/testdata/sf0.001")
-    images = spark.read.parquet(fixtures.ensure_images(n))
+    images = read_parquet(spark, fixtures.ensure_images(n))
     pts = indexing.with_cells(indexing.geolocate_expr(images), resolutions=(7,), zlevel=0)
     return (
         pts.groupBy(F.col("cell_r7").alias("cell_id"))

@@ -439,6 +439,7 @@ def main() -> None:
     # giant line mid-object (BENCH_r03.json parsed:null), so the bulky
     # per-run logs live only in the full record file.
     result = {
+        "protocol": "r6",
         "metric": "headline_suite_wall",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",

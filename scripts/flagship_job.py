@@ -62,7 +62,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from temp_c__bpf_osm_reader_spark.session import get_spark
+    from temp_c__bpf_osm_reader_spark.session import get_spark, read_parquet
     from temp_c__bpf_osm_reader_spark.operators import decode, indexing, knn, spatial_join
     from temp_c__bpf_osm_reader_spark.sources import fixtures
 
@@ -95,13 +95,13 @@ def main() -> None:
     n_nodes = n_tags = 0
     if not args.skip_decode:
         t0 = time.time()
-        blocks = decode.widen_if_narrow(spark.read.parquet(fx["blocks"]))
+        blocks = decode.widen_if_narrow(read_parquet(spark, fx["blocks"]))
         nodes, tags = decode.decode_entities(blocks)
         n_nodes = nodes.count()
         n_tags = tags.count()
         timings["decode"] = round(time.time() - t0, 3)
 
-    images = spark.read.parquet(fx["images"]).select("image_id", "phash")
+    images = read_parquet(spark, fx["images"]).select("image_id", "phash")
     # repartition BEFORE the replicate crossJoin: the base fixture is one
     # parquet row group = one split, so expanding first would run the whole
     # R-fold expansion in a single task (measured: a 31 s serial stage)
@@ -242,6 +242,7 @@ def main() -> None:
     print(
         json.dumps(
             {
+                "protocol": "r6",
                 "sf_dir": args.sf_dir,
                 "cores": args.cores,
                 "replicate": args.replicate,

@@ -35,6 +35,7 @@ from .operators import (
     text,
 )
 from .operators.indexing import oracle_cell_expr, oracle_zcell_expr
+from .session import read_parquet
 from .sources import audio as audio_source
 from .sources import fixtures, fixtures_text, xml_source
 
@@ -114,7 +115,7 @@ EMB_DUPS = _p(f"emb_dups_{fixtures.n_dup_vecs_for(_N)}.parquet")
 
 
 def _images_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(fixtures.ensure_images(fixtures.n_images_for_sf(sf_dir)))
+    return read_parquet(spark, fixtures.ensure_images(fixtures.n_images_for_sf(sf_dir)))
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -335,7 +336,7 @@ def q_polygon_stats(spark, sf_dir):
     codegen, one pass over the polygon scan. See
     operators/spatial_join.polygon_stats."""
     n = fixtures.n_images_for_sf(sf_dir)
-    polys = spark.read.parquet(fixtures.ensure_polygons(fixtures.n_polygons_for(n)))
+    polys = read_parquet(spark, fixtures.ensure_polygons(fixtures.n_polygons_for(n)))
     from .operators import spatial_join
 
     return spatial_join.polygon_stats(polys)
@@ -409,27 +410,23 @@ def q_knn_global(spark, sf_dir):
 
 
 def q_decode_nodes(spark, sf_dir):
-    blocks = spark.read.parquet(fixtures.ensure_blocks(fixtures.n_images_for_sf(sf_dir)))
+    blocks = read_parquet(spark, fixtures.ensure_blocks(fixtures.n_images_for_sf(sf_dir)))
     return decode.decode_nodes(decode.widen_if_narrow(blocks))
 
 
 def q_decode_tags(spark, sf_dir):
-    blocks = spark.read.parquet(fixtures.ensure_blocks(fixtures.n_images_for_sf(sf_dir)))
+    blocks = read_parquet(spark, fixtures.ensure_blocks(fixtures.n_images_for_sf(sf_dir)))
     _, tags = decode.decode_entities(decode.widen_if_narrow(blocks))
     return tags
 
 
 def q_decode_way_refs(spark, sf_dir):
-    wb = spark.read.parquet(
-        fixtures.ensure_way_blocks(fixtures.n_images_for_sf(sf_dir))
-    )
+    wb = read_parquet(spark, fixtures.ensure_way_blocks(fixtures.n_images_for_sf(sf_dir)))
     return decode.decode_way_refs(wb)
 
 
 def q_decode_rel_members(spark, sf_dir):
-    rb = spark.read.parquet(
-        fixtures.ensure_rel_blocks(fixtures.n_images_for_sf(sf_dir))
-    )
+    rb = read_parquet(spark, fixtures.ensure_rel_blocks(fixtures.n_images_for_sf(sf_dir)))
     return decode.decode_rel_members(rb)
 
 
@@ -439,8 +436,8 @@ def q_way_geometry(spark, sf_dir):
     node stream, the nod_way ⋈ nod walk a pbf2sqlite consumer runs. See
     operators/decode.way_geometry."""
     n = fixtures.n_images_for_sf(sf_dir)
-    wb = spark.read.parquet(fixtures.ensure_way_blocks(n))
-    blocks = spark.read.parquet(fixtures.ensure_blocks(n))
+    wb = read_parquet(spark, fixtures.ensure_way_blocks(n))
+    blocks = read_parquet(spark, fixtures.ensure_blocks(n))
     return decode.way_geometry(wb, decode.widen_if_narrow(blocks))
 
 
@@ -454,8 +451,8 @@ def q_way_simplify(spark, sf_dir):
     (~3.5%% of vertices drop at sf0.01); the z13-pixel default 2^14 would
     correctly keep everything. See operators/decode.way_simplify."""
     n = fixtures.n_images_for_sf(sf_dir)
-    wb = spark.read.parquet(fixtures.ensure_way_blocks(n))
-    blocks = spark.read.parquet(fixtures.ensure_blocks(n))
+    wb = read_parquet(spark, fixtures.ensure_way_blocks(n))
+    blocks = read_parquet(spark, fixtures.ensure_blocks(n))
     return decode.way_simplify(wb, decode.widen_if_narrow(blocks), snap_e7=1 << 26)
 
 
@@ -683,7 +680,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multi_branch_union": relational.multi_branch_union,
         "caption_exact_dedup": q_caption_exact_dedup,
         "decode_metrics": lambda spark, sf_dir: decode.decode_metrics(
-            spark.read.parquet(fixtures.ensure_blocks(fixtures.n_images_for_sf(sf_dir)))
+            read_parquet(spark, fixtures.ensure_blocks(fixtures.n_images_for_sf(sf_dir)))
         ),
         "audio_window_energy": multimodal.audio_window_energy,
         "iso3166_countries": lambda spark, sf_dir: relational.iso3166_countries(

@@ -40,6 +40,7 @@ from ..functions.hashing import (
     minhash_sigs_batch,
     simhash_batch,
 )
+from ..session import read_parquet
 
 NUM_PERM = 64
 NUM_BANDS = 16
@@ -69,7 +70,7 @@ def simhash_udf(text: pd.Series) -> pd.Series:
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
 
 
 def minhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

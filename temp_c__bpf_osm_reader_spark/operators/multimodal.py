@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions import codec
 from ..functions.hashing import phash64_batch
+from ..session import read_parquet
 from ..sources import fixtures
 
 
@@ -48,7 +49,7 @@ def _map_images(spark: SparkSession, sf_dir: str, kernel, schema: str,
     per image: the `keep` columns passed through, then the kernel's columns
     (1-D results as scalar columns, 2-D results as array columns). Rows come
     out grouped by shape within each batch; no operator depends on order."""
-    images = spark.read.parquet(fixtures.ensure_images(fixtures.n_images_for_sf(sf_dir)))
+    images = read_parquet(spark, fixtures.ensure_images(fixtures.n_images_for_sf(sf_dir)))
 
     def gen(batches):
         for pdf in batches:
@@ -214,7 +215,7 @@ def audio_window_energy(spark: SparkSession, sf_dir: str, win: int = 512) -> Dat
     from ..sources import audio as audio_src
 
     n = audio_src.n_clips_for(fixtures.n_images_for_sf(sf_dir))
-    clips = spark.read.parquet(audio_src.ensure_audio(n)).select(
+    clips = read_parquet(spark, audio_src.ensure_audio(n)).select(
         "audio_id", "bytes", "n_samples"
     )
 

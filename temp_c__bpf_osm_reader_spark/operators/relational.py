@@ -15,9 +15,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import read_parquet
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _cents(col) -> F.Column:
@@ -33,7 +35,7 @@ def typed_members(spark: SparkSession, sf_dir: str, collections_path: str) -> Da
     → the rel_mem-shaped sparse table (pbf2sqlite.c:811-857 dispatch;
     FIXTURES.md §4): exactly one of image_id/polygon_id/sub_collection_id
     non-null per row, image refs resolved to their string ids."""
-    mem = spark.read.parquet(collections_path)
+    mem = read_parquet(spark, collections_path)
     t = F.col("member_type")
     return mem.select(
         "collection_id",
@@ -118,7 +120,7 @@ def caption_kv(images: DataFrame) -> DataFrame:
 
 def tag_pivot(spark: SparkSession, sf_dir: str, images_path: str) -> DataFrame:
     """EAV → wide via max(CASE) pivot — post_process/addr.sql:19-42 shape."""
-    images = spark.read.parquet(images_path)
+    images = read_parquet(spark, images_path)
     eav = caption_kv(images)
     return (
         eav.groupBy("image_id")
@@ -133,7 +135,7 @@ def tag_pivot(spark: SparkSession, sf_dir: str, images_path: str) -> DataFrame:
 
 def caption_semi_join(spark: SparkSession, sf_dir: str, images_path: str) -> DataFrame:
     """Images that have tag q >= 8 — semi-join against the EAV (addr.sql Q2)."""
-    images = spark.read.parquet(images_path)
+    images = read_parquet(spark, images_path)
     eav = caption_kv(images)
     keys = eav.filter((F.col("k") == "q") & (F.col("v").cast("int") >= 8)).select("image_id")
     return images.join(keys, "image_id", "left_semi").select("image_id", "caption")
@@ -144,7 +146,7 @@ def caption_semi_join(spark: SparkSession, sf_dir: str, images_path: str) -> Dat
 def null_scan(spark: SparkSession, sf_dir: str, meta_path: str) -> DataFrame:
     """Data-quality scan over the corrupt EAV fixture —
     queries-null-values-in-tag.sql:1-8."""
-    meta = spark.read.parquet(meta_path)
+    meta = read_parquet(spark, meta_path)
     return meta.filter(F.col("k").isNull() | F.col("v").isNull()).select(
         "image_id", "k", "v"
     )
@@ -327,7 +329,7 @@ def addr_pivot_union(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFra
     Plan shape at scale: per branch one shuffle on the entity id (semi-join
     gate broadcasts the small key set; pivot is a hash agg over the same
     key) — the union is free (no barrier)."""
-    eav = spark.read.parquet(eav_path)
+    eav = read_parquet(spark, eav_path)
     id_cols = ("image_id", "polygon_id", "collection_id")
     branches = []
     for ent in id_cols:
@@ -419,7 +421,7 @@ def rel_tag_freq(
     mem = typed_members(spark, sf_dir, collections_path).filter(
         F.col("collection_id") == rel_of
     )
-    eav = spark.read.parquet(eav_path)
+    eav = read_parquet(spark, eav_path)
     branches = []
     for el, mcol, ecol in (
         ("img", "image_id", "image_id"),
@@ -446,7 +448,7 @@ def denotation_count(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFra
     fixture's sparse cross-entity key, playing 'denotation').
     One filter + one all-null-group aggregate; count(col) skips NULLs in
     both engines."""
-    eav = spark.read.parquet(eav_path)
+    eav = read_parquet(spark, eav_path)
     return eav.filter(F.col("k") == "name").agg(
         F.count("image_id").alias("n_img"),
         F.count("polygon_id").alias("n_pol"),
@@ -469,7 +471,7 @@ def iso3166_countries(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFr
     name lookup is a left join on the entity id — AQE broadcasts the filtered
     slices when small, and at 10^12-row EAV scale all six joins share the
     entity-id shuffle key, so co-partitioning carries across stages."""
-    eav = spark.read.parquet(eav_path)
+    eav = read_parquet(spark, eav_path)
     iso = eav.filter(F.col("k") == "ISO3166-1")
     n = iso.filter(F.col("image_id").isNotNull()).select(
         F.col("v").alias("n_v"), F.col("image_id").alias("nod_id")
@@ -514,7 +516,7 @@ def iso3166_node(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFrame:
     Plan shape at scale: all five probe sides are (k = const) pushed-down
     slices sharing image_id as the join key — one co-partitioning, and AQE
     broadcasts each slice at tag-key density."""
-    eav = spark.read.parquet(eav_path)
+    eav = read_parquet(spark, eav_path)
     iso = eav.filter(
         (F.col("k") == "ISO3166-1")
         & F.col("image_id").isNotNull()
@@ -546,7 +548,7 @@ def route_wide(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFrame:
     All five joins share rel_id as the join key — one co-partitioning, five
     probe sides; every probe side is a (k = const) filtered slice that AQE
     broadcasts at this density."""
-    eav = spark.read.parquet(eav_path).filter(F.col("collection_id").isNotNull())
+    eav = read_parquet(spark, eav_path).filter(F.col("collection_id").isNotNull())
 
     def tag_slice(alias: str, key: str) -> DataFrame:
         return eav.filter(F.col("k") == key).select(
@@ -586,7 +588,7 @@ def rel_member_tags(
     mem = typed_members(spark, sf_dir, collections_path).filter(
         (F.col("collection_id") == rel_of) & F.col("image_id").isNotNull()
     ).select(F.col("image_id").alias("nod_id"))
-    eav = spark.read.parquet(eav_path)
+    eav = read_parquet(spark, eav_path)
 
     def tag_slice(alias: str, key: str) -> DataFrame:
         return eav.filter((F.col("k") == key) & F.col("image_id").isNotNull()).select(
@@ -695,8 +697,8 @@ def ref_query_pack(
     """
     from ..operators import indexing
 
-    eav = spark.read.parquet(eav_path)
-    images = spark.read.parquet(images_path)
+    eav = read_parquet(spark, eav_path)
+    images = read_parquet(spark, images_path)
     pts = indexing.geolocate_expr(images.select("image_id", "phash"))
     S = lambda x: F.lit(x).cast("string")  # noqa: E731
     NL = F.lit(None).cast("string")
@@ -718,7 +720,7 @@ def ref_query_pack(
         ),
         images.agg(F.count(F.lit(1)).alias("n")).select(*pack("count_objects", S("images"), NL, F.col("n"))),
         eav.agg(F.countDistinct("polygon_id").alias("n")).select(*pack("count_objects", S("polygons"), NL, F.col("n"))),
-        spark.read.parquet(collections_path)
+        read_parquet(spark, collections_path)
         .agg(F.countDistinct("collection_id").alias("n"))
         .select(*pack("count_objects", S("collections"), NL, F.col("n"))),
         eav.agg(F.count(F.lit(1)).alias("n")).select(*pack("count_objects", S("tags"), NL, F.col("n"))),

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashing import splitmix64, u01
+from ..session import read_parquet
 
 ANN_K = 10
 NEAR_DUP_TAU = 0.4
@@ -41,7 +42,7 @@ IVF_NPROBE = 6
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, "embeddings.parquet"))
     return df.withColumn("v", F.expr("transform(embedding, x -> cast(x as double))"))
 
 
@@ -464,7 +465,7 @@ def emb_near_dup_bucketed(
     from ..sources import fixtures
 
     nv = fixtures.n_dup_vecs_for(fixtures.n_images_for_sf(sf_dir))
-    df = spark.read.parquet(fixtures.ensure_emb_dups(nv))
+    df = read_parquet(spark, fixtures.ensure_emb_dups(nv))
     base = df.withColumn("v", F.expr("transform(embedding, x -> cast(x as double))"))
     base = _with_norm(base).select("vec_id", "v", "norm")
     bits = nd_bits_for(nv)

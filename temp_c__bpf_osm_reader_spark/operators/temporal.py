@@ -24,13 +24,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import read_parquet
+
 ASOF_LEFT_TYPE = "purchase"
 ASOF_RIGHT_TYPE = "view"
 RANGE_WINDOW_S = 300
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
 
 
 def asof_join(

@@ -11,6 +11,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_parquet
+
 STOPWORDS = {
     "en": ["the", "a", "of"],
     "fr": ["le", "la", "et"],
@@ -20,7 +22,7 @@ STOPWORDS = {
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
 
 
 def _count_token(col, word):
@@ -112,7 +114,7 @@ def exact_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def caption_exact_dedup(spark: SparkSession, sf_dir: str, images_path: str) -> DataFrame:
     """Exact caption dedup over the images fixture (dup clusters by design)."""
-    images = spark.read.parquet(images_path)
+    images = read_parquet(spark, images_path)
     return (
         images.select("image_id", F.md5("caption").alias("fp"))
         .groupBy("fp")

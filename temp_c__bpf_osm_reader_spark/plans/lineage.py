@@ -27,6 +27,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_parquet
+
 MANIFEST = "_MANIFEST.json"
 
 
@@ -107,7 +109,7 @@ class SnapshotPipeline:
         v = self.current_version(name) if version is None else version
         if v is None or self.manifest(name, v) is None:
             raise FileNotFoundError(f"stage {name!r} has no committed version {version!r}")
-        return self.spark.read.parquet(self._paths(name, v)[0])
+        return read_parquet(self.spark, self._paths(name, v)[0])
 
     def rollback(self, name: str, version: int) -> None:
         """Repoint CURRENT at an older snapshot (metadata-only, atomic)."""
@@ -134,13 +136,7 @@ class SnapshotPipeline:
             f.write(str(version))
         os.replace(tmp, os.path.join(sdir, "CURRENT"))
 
-    def run_stage(
-        self,
-        name: str,
-        fn,
-        partition_by: str | None = None,
-        overwrite: bool = False,
-    ) -> DataFrame:
+    def run_stage(self, name: str, fn, overwrite: bool = False) -> DataFrame:
         cur = self.current_version(name)
         if cur is not None and not overwrite:
             return self.read_stage(name, cur)
@@ -157,13 +153,9 @@ class SnapshotPipeline:
         )
 
         t0 = time.time()
-        df = fn()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(data_dir)
+        fn().write.mode("overwrite").parquet(data_dir)
 
-        written = self.spark.read.parquet(data_dir)
+        written = read_parquet(self.spark, data_dir)
         metrics = lineage_metrics(written)
         metrics.write.mode("overwrite").parquet(lineage_dir)
         agg = metrics.agg(
@@ -196,7 +188,7 @@ class SnapshotPipeline:
         m = self.manifest(name, v)
         if m is None:
             return False
-        df = self.spark.read.parquet(self._paths(name, v)[0])
+        df = read_parquet(self.spark, self._paths(name, v)[0])
         agg = lineage_metrics(df).agg(
             F.sum("row_count").alias("rows"), F.sum("checksum").alias("checksum")
         ).collect()[0]

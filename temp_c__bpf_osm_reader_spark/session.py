@@ -1,16 +1,40 @@
-"""SparkSession factory with the engine's scale-oriented defaults.
+"""SparkSession factory with the engine's scale-oriented defaults, and the
+one way the engine opens a parquet table.
 
 Local-mode testing stands in for the multi-executor cluster (no cluster in
 this sandbox); every config below is chosen to also be the right default at
 1000-executor scale — AQE on (runtime re-plan + skew-join splitting), Arrow
 transfer for the pandas-UDF stages, shuffle partitions sized to parallelism.
+
+Two fixed costs sit in front of every Python stage; both are paid once
+here instead of on every query:
+
+  * Python workers start through `worker_daemon` (spark.python.daemon.module).
+    Each task begins with importlib.invalidate_caches(), and under CPython
+    3.11 every zipimporter over pyspark.zip (~20 of them, 1,328 entries)
+    then re-reads the whole zip directory: 230–340 ms per task, measured in
+    the workers. The daemon re-reads an archive only when it has changed.
+    spark.executorEnv.PYTHONPATH carries the package root (a directory, or
+    the zip under spark-submit --py-files): --py-files reaches workers per
+    task, not on the daemon's own path, so without it the daemon fails to
+    import `worker_daemon`.
+  * read_parquet() gives Spark the table's schema from one footer read in
+    this process; spark.read.parquet(path) alone runs a one-task
+    schema-inference job (~120–135 ms) on every table open.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
+
+# footer key under which Spark's parquet writer stores the row schema as JSON
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def get_spark(
@@ -67,6 +91,10 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "snappy")
         # Python Data Source V2 filter pushdown (osmxml shard pruning)
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # see the module docstring: workers skip the per-task zip re-read,
+        # and the daemon finds this package under --py-files too
+        .config("spark.python.daemon.module", "temp_c__bpf_osm_reader_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", pkg_root)
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
@@ -78,3 +106,25 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet(path) with the schema taken from one footer read
+    in this process instead of Spark's schema-inference job. A directory is
+    read through its first *.parquet file in sorted order. Spark-written
+    files carry their row schema as JSON in the footer; any other file's
+    Arrow schema is mapped the way Spark infers parquet types, tz-naive
+    timestamps becoming TIMESTAMP_NTZ."""
+    f = path
+    if os.path.isdir(path):
+        parts = sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
+        if not parts:
+            raise FileNotFoundError(f"no *.parquet file in {path}")
+        f = os.path.join(path, parts[0])
+    arrow = pq.read_schema(f)
+    row_json = (arrow.metadata or {}).get(SPARK_ROW_METADATA)
+    if row_json is not None:
+        schema = StructType.fromJson(json.loads(row_json))
+    else:
+        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+    return spark.read.schema(schema).parquet(path)

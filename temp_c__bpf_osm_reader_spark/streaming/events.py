@@ -16,9 +16,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import read_parquet
+
 
 def _events_schema(spark: SparkSession, sf_dir: str):
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    return read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
 
 
 def _stream_dir(sf_dir: str) -> str:
@@ -128,7 +130,7 @@ def cell_counts_stream(spark: SparkSession, sf_dir: str, query_name: str = "cell
     link = os.path.join(root, os.path.basename(images_path))
     if not os.path.exists(link):
         os.symlink(os.path.abspath(images_path), link)
-    schema = spark.read.parquet(images_path).schema
+    schema = read_parquet(spark, images_path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
