@@ -2,8 +2,9 @@
 
 entry(spark)   — flagship pipeline at sf0.001: geolocate the image table from
                  phash, cell-index at res 7, deterministic tile counts.
-queries()      — one callable per implemented operator (SURVEY.md §2 inventory);
-                 each takes (spark, sf_dir) → DataFrame.
+queries()      — one entry per implemented operator (SURVEY.md §2 inventory);
+                 each is a module-level function called as (spark, sf_dir)
+                 → DataFrame that opens its own inputs.
 oracle_sql()   — DuckDB twins. Conventions that make value-hashes exact are
                  documented in temp_c__bpf_osm_reader_spark/api.py.
 """

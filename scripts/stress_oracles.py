@@ -142,9 +142,11 @@ def main() -> None:
 
     from temp_c__bpf_osm_reader_spark import api
     from temp_c__bpf_osm_reader_spark.session import get_spark
+    from temp_c__bpf_osm_reader_spark.sources import fixtures
 
+    n_images = fixtures.n_images_for_sf(api.ORACLE_SF_DIR)
     t0 = time.time()
-    print(f"[stress] ensuring fixtures at {SF_DIR} (n={api._N}) ...", flush=True)
+    print(f"[stress] ensuring fixtures at {SF_DIR} (n={n_images}) ...", flush=True)
     api.ensure_oracle_fixtures()
     print(f"[stress] fixtures ready in {time.time() - t0:.0f}s", flush=True)
 
@@ -181,7 +183,7 @@ def main() -> None:
                 spdf = sdf.toPandas()
                 rec["spark_s"] = round(time.time() - t1, 1)
                 rec["rows"] = len(spdf)
-                err = ORACLE_QUADRATIC[name](spdf, api._N // 10)
+                err = ORACLE_QUADRATIC[name](spdf, n_images // 10)
                 rec["status"] = "pass_spec" if err is None else "FAIL"
                 rec["oracle"] = "spec-derived (SQL oracle quadratic at stress scale)"
                 if err:
@@ -218,7 +220,7 @@ def main() -> None:
         results[name] = rec
         print(f"[stress] {i + 1}/{len(names)} {name}: {rec['status']} {rec['wall_s']}s", flush=True)
         with open(out_path, "w") as fh:
-            json.dump({"sf_dir": SF_DIR, "n_images": api._N, "results": results}, fh, indent=1)
+            json.dump({"sf_dir": SF_DIR, "n_images": n_images, "results": results}, fh, indent=1)
         spark.catalog.clearCache()
     bad = {
         k: v

@@ -1,5 +1,12 @@
 """Driver contract: the query inventory (SURVEY §2) + DuckDB oracle twins.
 
+Registry rule: every queries() value is a module-level function called as
+(spark, sf_dir) that opens its own inputs — an operator taken directly from
+operators/, or one of the compositions below, which join operators over
+inputs shared through one helper each. Every fixture file is named once, by
+the sources/ function that writes it; oracle_sql() takes each path from
+that function.
+
 Conventions that make the value-hash comparison exact:
   * float *aggregates* go through integer cents/basis-points (round(x*100) →
     BIGINT → exact sum → divide back) on BOTH sides — summation order can't
@@ -18,6 +25,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,103 +39,86 @@ from .operators import (
     relational,
     similarity,
     skew,
+    spatial_join,
     temporal,
     text,
 )
 from .operators.indexing import oracle_cell_expr, oracle_zcell_expr
 from .session import read_parquet
 from .sources import audio as audio_source
-from .sources import fixtures, fixtures_text, xml_source
+from .sources import fixtures, fixtures_text, osm_datasource, xml_source
+from .streaming import events as stream_events
 
 # The driver's correctness harness runs oracles at sf0.01 — fixture paths in
 # oracle SQL are therefore pinned to that scale. The env override exists for
 # the local scale-stress harness (scripts/stress_oracles.py), which rebuilds
 # the whole contract at a bigger synthetic sf; the driver never sets it.
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-_N = fixtures.n_images_for_sf(ORACLE_SF_DIR)          # 10600 at sf0.01
-_M = fixtures.n_polygons_for(_N)                      # 189 at sf0.01
-_SF_BASE = os.path.basename(os.path.normpath(ORACLE_SF_DIR))
 
 
 def ensure_oracle_fixtures() -> None:
-    """Make sure every parquet referenced by oracle SQL exists (idempotent)."""
-    fixtures.ensure_all_for_sf(ORACLE_SF_DIR)
-    fixtures_text.ensure_golden_minhash(ORACLE_SF_DIR)
-    fixtures_text.ensure_golden_simhash(ORACLE_SF_DIR)
-    fixtures_text.ensure_golden_decode(_N)
-    fixtures_text.ensure_golden_frames(_N)
-    fixtures_text.ensure_golden_blockmeans(_N)
-    fixtures_text.ensure_golden_resize(_N)
-    fixtures_text.ensure_golden_laplacian(_N)
-    xml_source.ensure_xml(_N)
-    fixtures.ensure_collections(_N)
-    fixtures.ensure_way_blocks(_N)
-    fixtures.ensure_rel_blocks(_N)
-    fixtures.ensure_golden_knn_global(_N)
-    fixtures.ensure_golden_regions(_N)
-    fixtures_text.ensure_eav_all(_N)
-    fixtures_text.ensure_golden_clusters(ORACLE_SF_DIR)
-    fixtures_text.ensure_golden_kmeans(ORACLE_SF_DIR)
-    fixtures_text.ensure_meta_corrupt(_N)
-    fixtures.ensure_emb_dups(fixtures.n_dup_vecs_for(_N))
-    fixtures_text.ensure_golden_recall_srp(ORACLE_SF_DIR)
-    fixtures_text.ensure_golden_recall_ivf(ORACLE_SF_DIR)
-    from .sources import audio as audio_src
-
-    audio_src.ensure_audio(audio_src.n_clips_for(_N))
-    audio_src.ensure_golden_audio_energy(audio_src.n_clips_for(_N))
-
-
-def _p(name: str) -> str:
-    return os.path.join(fixtures.DATA_DIR, name)
-
-
-IMAGES = _p(f"images_{_N}.parquet")
-# geo-derived goldens: paths via the fixtures path functions (which carry
-# fixtures.GEO_TAG) so a geolocate-spec bump can never point an oracle at a
-# stale cached golden
-GOLDEN_GEO = fixtures.golden_geo_path(_N)
-GOLDEN_PIP = fixtures.golden_pip_path(_N, _M)
-GOLDEN_KNN = fixtures.golden_knn_path(_N)
-GOLDEN_REGIONS = fixtures.golden_regions_path(_N)
-GOLDEN_KNN_GLOBAL = _p(f"golden_knn_global_{_N}_{fixtures.GEO_TAG}.parquet")
-GOLDEN_DECODE = _p(f"golden_decode_{_N}.parquet")
-POLYGONS = _p(f"polygons_{_M}.parquet")
-BLOCKS = fixtures.blocks_path(_N)
-WAY_BLOCKS = _p(f"way_blocks_{_N}.parquet")
-REL_BLOCKS = _p(f"rel_blocks_{_N}.parquet")
-META_CORRUPT = _p(f"meta_corrupt_{_N}.parquet")
-COLLECTIONS = _p(f"collections_{_N}.parquet")
-EAV_ALL = _p(f"eav_all_{_N}_v2.parquet")
-# keyed by the oracle sf basename (matches fixtures_text's path convention)
-GOLDEN_MINHASH = _p(f"golden_minhash_{_SF_BASE}.parquet")
-GOLDEN_SIMHASH = _p(f"golden_simhash_{_SF_BASE}.parquet")
-GOLDEN_CLUSTERS = _p(f"golden_clusters_{_SF_BASE}.parquet")
-GOLDEN_KMEANS = _p(f"golden_kmeans_{_SF_BASE}.parquet")
-GOLDEN_FRAMES = _p(f"golden_frames_{_N}_8.parquet")
-GOLDEN_BLOCKMEANS = _p(f"golden_blockmeans_{_N}_4.parquet")
-GOLDEN_RESIZE = _p(f"golden_resize_{_N}_8.parquet")
-GOLDEN_LAPLACIAN = _p(f"golden_laplacian_{_N}_v2.parquet")
-GOLDEN_RECALL = fixtures_text.golden_recall_srp_path(ORACLE_SF_DIR)
-GOLDEN_RECALL_IVF = fixtures_text.golden_recall_ivf_path(ORACLE_SF_DIR)
-GOLDEN_AUDIO = _p(f"golden_audio_energy_{audio_source.n_clips_for(_N)}_512.parquet")
-EMB_DUPS = _p(f"emb_dups_{fixtures.n_dup_vecs_for(_N)}.parquet")
-
-
-def _images_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet(spark, fixtures.ensure_images(fixtures.n_images_for_sf(sf_dir)))
-
-
-def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return indexing.with_cells(indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=(7, 8, 9))
+    """Make sure every parquet the oracle SQL reads exists (idempotent):
+    oracle_sql() opens each through the sources/ function that writes it."""
+    oracle_sql()
 
 
 # =====================================================================
-# Spark-side query callables
+# Inputs shared by the compositions
+# =====================================================================
+
+def _images_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return fixtures.read_fixture(spark, sf_dir, fixtures.ensure_images)
+
+
+def _cells(spark: SparkSession, sf_dir: str, *resolutions: int, zlevel: int = 0) -> DataFrame:
+    """The geolocated image table with a cell_r{r} column per grid
+    resolution (and zcell_l{zlevel} when zlevel is set)."""
+    return indexing.with_cells(
+        indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=resolutions, zlevel=zlevel
+    )
+
+
+def _checkpointed_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Geolocated (image_id, lat, lon), spread over every core and
+    materialized once. The PIP and kNN joins reference lat/lon in both the
+    cell key and the exact refine; without the barrier the geolocate pass
+    runs once per reference. The repartition lets the join's map side run at
+    full width (the base fixture's row groups give few scan splits);
+    localCheckpoint, not cache, so the storage is released when the
+    DataFrame goes out of scope instead of staying pinned for the session."""
+    return (
+        indexing.geolocate_expr(_images_df(spark, sf_dir))
+        .repartition(spark.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=True)
+    )
+
+
+def _polygons_path(sf_dir: str) -> str:
+    n = fixtures.n_images_for_sf(sf_dir)
+    return fixtures.ensure_polygons(fixtures.n_polygons_for(n))
+
+
+def _blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The node blocks, widened to the session's parallelism for the
+    explode-heavy decoders."""
+    return decode.widen_if_narrow(fixtures.read_fixture(spark, sf_dir, fixtures.ensure_blocks))
+
+
+def _way_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return fixtures.read_fixture(spark, sf_dir, fixtures.ensure_way_blocks)
+
+
+def _stream_name(prefix: str, sf_dir: str) -> str:
+    base = os.path.basename(os.path.normpath(sf_dir))
+    return f"{prefix}_{base.replace('.', '_')}"
+
+
+# =====================================================================
+# Compositions
 # =====================================================================
 
 def q_geolocate_cells(spark, sf_dir):
-    return _points(spark, sf_dir).select(
+    return _cells(spark, sf_dir, 7, 8, 9, zlevel=12).select(
         "image_id", "lat", "lon", "cell_r7", "cell_r8", "cell_r9", "zcell_l12"
     )
 
@@ -137,23 +128,22 @@ def q_tile_assignment(spark, sf_dir):
     # the base table (manifest-statistics role; O(files) driver work, never
     # O(table)) so the shuffle routes directly instead of sampling its input
     # — without them repartitionByRange re-runs the whole geolocate pass.
-    n = fixtures.n_images_for_sf(sf_dir)
     # 16 routed partitions regardless of core count: each bound adds a
     # comparison to the codegen'd searchsorted and a row group to the stats
     # collect — at driver-test scales 16 is plenty of parallelism, and the
     # partition count never changes the output (pytest-pinned)
     n_parts = 16
-    bounds = indexing.sample_cell_bounds(fixtures.ensure_images(n), n_parts, res=7)
-    pts = indexing.with_cells(indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=(7,), zlevel=0)
+    images = fixtures.ensure_images(fixtures.n_images_for_sf(sf_dir))
+    bounds = indexing.sample_cell_bounds(images, n_parts, res=7)
     return indexing.tile_assignment_scalable(
-        pts, 7, partitions=n_parts, bounds=bounds
+        _cells(spark, sf_dir, 7), 7, partitions=n_parts, bounds=bounds
     ).select(
         "cell_id", "image_id", F.col("order_").cast("bigint").alias("order_")
     )
 
 
 def q_cell_counts_salted(spark, sf_dir):
-    pts = indexing.with_cells(indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=(7,), zlevel=0)
+    pts = _cells(spark, sf_dir, 7)
     return skew.salted_group_count(pts.select(F.col("cell_r7").alias("cell_id")), "cell_id")
 
 
@@ -167,12 +157,9 @@ def q_raster_density(spark, sf_dir):
     cell_id ((r<<54)|(i<<27)|j, geo.py header): a map-side-combinable
     groupBy on two small longs — at 10^12 rows the shuffle carries only
     one partial row per (pixel × task)."""
-    pts = indexing.with_cells(
-        indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=(8,), zlevel=0
-    )
     mask = (1 << 27) - 1
     return (
-        pts.select(
+        _cells(spark, sf_dir, 8).select(
             F.shiftright("cell_r8", 27).bitwiseAND(F.lit(mask)).alias("row_i"),
             F.col("cell_r8").bitwiseAND(F.lit(mask)).alias("col_j"),
             "image_id",
@@ -187,28 +174,19 @@ def q_tile_pyramid(spark, sf_dir):
 
     The map-tile-server rollup: level r-1 aggregates level r's raster, not
     the raw points — see operators/raster.pyramid for the scale argument."""
-    pts = indexing.with_cells(
-        indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=(8,), zlevel=0
-    )
-    return raster.pyramid(pts, "cell_r8", base_res=8, min_res=5)
+    return raster.pyramid(_cells(spark, sf_dir, 8), "cell_r8", base_res=8, min_res=5)
 
 
 def q_focal_sum(spark, sf_dir):
     """3×3 focal-sum raster statistic at res 8 (lon wraps, lat clamps)."""
-    pts = indexing.with_cells(
-        indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=(8,), zlevel=0
-    )
-    return raster.focal_sum(pts, "cell_r8", res=8)
+    return raster.focal_sum(_cells(spark, sf_dir, 8), "cell_r8", res=8)
 
 
 def q_spatial_autocorr(spark, sf_dir):
     """Global Moran's I (rook weights, cylinder topology) of the res-8
     density raster — exact BIGINT components + one fixed-expression DOUBLE.
     See operators/raster.global_autocorr."""
-    pts = indexing.with_cells(
-        indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=(8,), zlevel=0
-    )
-    return raster.global_autocorr(pts, "cell_r8", res=8)
+    return raster.global_autocorr(_cells(spark, sf_dir, 8), "cell_r8", res=8)
 
 
 def q_adaptive_grid(spark, sf_dir):
@@ -216,20 +194,16 @@ def q_adaptive_grid(spark, sf_dir):
     emitted cells partition the occupied space (first sparse node on the
     way down, or an overloaded res-8 leaf). See
     operators/raster.adaptive_grid."""
-    pts = indexing.with_cells(
-        indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=(8,), zlevel=0
+    return raster.adaptive_grid(
+        _cells(spark, sf_dir, 8), "cell_r8", base_res=8, min_res=5, threshold=3
     )
-    return raster.adaptive_grid(pts, "cell_r8", base_res=8, min_res=5, threshold=3)
 
 
 def q_local_autocorr(spark, sf_dir):
     """Per-pixel local Moran's I (LISA hotspot map) over the res-8 density
     raster — exact BIGINT neighbor sums + fixed-expression DOUBLE indicator.
     See operators/raster.local_autocorr."""
-    pts = indexing.with_cells(
-        indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=(8,), zlevel=0
-    )
-    return raster.local_autocorr(pts, "cell_r8", res=8)
+    return raster.local_autocorr(_cells(spark, sf_dir, 8), "cell_r8", res=8)
 
 
 def q_zonal_stats(spark, sf_dir):
@@ -241,12 +215,9 @@ def q_zonal_stats(spark, sf_dir):
     The join key is image_id (unique), the groupBy has one row per polygon
     — count/min/sum are all map-side combinable, so polygon skew (a dense
     city polygon at 10^12 rows) collapses before the shuffle."""
-    pip = q_pip_join(spark, sf_dir)
-    pts = indexing.geolocate_expr(_images_df(spark, sf_dir)).select(
-        "image_id", "lat", "lon"
-    )
+    pts = indexing.geolocate_expr(_images_df(spark, sf_dir))
     return (
-        pip.join(pts, "image_id")
+        q_pip_join(spark, sf_dir).join(pts, "image_id")
         .groupBy("polygon_id")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
@@ -266,10 +237,7 @@ def q_raster_polygonize(spark, sf_dir):
     raster-bounded component graph (≤131k nodes at res 8 regardless of
     input size); oracled by an independent sequential union-find golden
     (sources/fixtures.ensure_golden_regions)."""
-    pts = indexing.with_cells(
-        indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=(8,), zlevel=0
-    )
-    return raster.polygonize(pts, "cell_r8", res=8)
+    return raster.polygonize(_cells(spark, sf_dir, 8), "cell_r8", res=8)
 
 
 # eps must be ≤ a res-16 cell side (180/2^16 = 0.00275°) for 3x3-blocking
@@ -289,13 +257,8 @@ def q_box_pairs(spark, sf_dir):
     DWITHIN pair join next to pip_join and knn. See
     operators/spatial_join.box_self_join for the scale plan and the BOX_RES
     comment above for why the blocking res tracks eps."""
-    from .operators import spatial_join
-
-    pts = indexing.with_cells(
-        indexing.geolocate_expr(_images_df(spark, sf_dir)), resolutions=(BOX_RES,), zlevel=0
-    )
     return spatial_join.box_self_join(
-        pts, f"cell_r{BOX_RES}", eps_deg=BOX_EPS_DEG, res=BOX_RES
+        _cells(spark, sf_dir, BOX_RES), f"cell_r{BOX_RES}", eps_deg=BOX_EPS_DEG, res=BOX_RES
     )
 
 
@@ -305,27 +268,14 @@ def q_cell_compact(spark, sf_dir):
     step a tile-serving consumer runs on the indexed layer. All bit
     arithmetic on the Morton ids; shuffles only on the (small) cell domain.
     See operators/indexing.cell_compact."""
-    return indexing.cell_compact(_points(spark, sf_dir), level=12, min_level=10)
+    return indexing.cell_compact(
+        _cells(spark, sf_dir, 7, 8, 9, zlevel=12), level=12, min_level=10
+    )
 
 
 def q_pip_join(spark, sf_dir):
-    import pandas as pd
-
-    n = fixtures.n_images_for_sf(sf_dir)
-    polys = pd.read_parquet(fixtures.ensure_polygons(fixtures.n_polygons_for(n)))
-    # materialization barrier: the join references lat/lon in both the
-    # prefilter key and the exact refine — without it the geolocate pass
-    # would run once per reference. localCheckpoint (not cache) so the
-    # storage is GC-released when the DataFrame goes out of scope instead
-    # of staying pinned for the session (50-query harness).
-    pts = (
-        indexing.geolocate_expr(_images_df(spark, sf_dir))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
-    from .operators import spatial_join
-
-    return spatial_join.pip_join(pts, polys)
+    polys = pd.read_parquet(_polygons_path(sf_dir))
+    return spatial_join.pip_join(_checkpointed_points(spark, sf_dir), polys)
 
 
 def q_polygon_stats(spark, sf_dir):
@@ -335,58 +285,32 @@ def q_polygon_stats(spark, sf_dir):
     422-428). Shuffle-free: transform/aggregate HOFs inside whole-stage
     codegen, one pass over the polygon scan. See
     operators/spatial_join.polygon_stats."""
-    n = fixtures.n_images_for_sf(sf_dir)
-    polys = read_parquet(spark, fixtures.ensure_polygons(fixtures.n_polygons_for(n)))
-    from .operators import spatial_join
-
-    return spatial_join.polygon_stats(polys)
+    return spatial_join.polygon_stats(read_parquet(spark, _polygons_path(sf_dir)))
 
 
 def q_pip_by_kind(spark, sf_dir):
-    import pandas as pd
-
-    n = fixtures.n_images_for_sf(sf_dir)
-    polys_pdf = pd.read_parquet(fixtures.ensure_polygons(fixtures.n_polygons_for(n)))
-    pip = q_pip_join(spark, sf_dir)
-    polys = spark.createDataFrame(polys_pdf[["polygon_id", "kind"]])
-    return pip.join(F.broadcast(polys), "polygon_id").groupBy("kind").agg(
+    kinds = read_parquet(spark, _polygons_path(sf_dir)).select("polygon_id", "kind")
+    return q_pip_join(spark, sf_dir).join(F.broadcast(kinds), "polygon_id").groupBy("kind").agg(
         F.count(F.lit(1)).alias("n")
     )
 
 
-def q_knn(spark, sf_dir):
-    """Default kNN = fixed ring-2 plan. The r4 verdict asked for the
-    escalating-ring plan as default, citing the sf1.0 stress (knn 88.5 s vs
-    knn_global 18.9 s) — but that signal was a session-order artifact, not
-    structure: escalation's ROUND 1 is the identical ring-2 join over the
-    identical query set, so escalation is strictly round-1 + extra passes
-    and cannot beat the fixed plan on a warm session. Re-measured under
-    controlled same-session conditions at sf0.1 (bench r5): fixed 2.2 s vs
-    escalating 14.0 s (3 full points-table passes + ring-8/32 expansions for
-    the sparse tail). The sf1.0 stress runs knn ~50 positions before
-    knn_global in one long session — the 88.5 s reading absorbed first-heavy-
-    trig-query warmup/contention. Closed with a 6-run warm interleaved probe
-    at sf1.0 (BASELINE.md r5): fixed 29.0/25.4/13.3 s vs escalating
-    154.1/79.0/39.2 s — fixed ~3x faster in every round. Both plans stay
-    registered (escalation = `knn_global`, the k-completeness form for
-    sparse regions); the bounded fixed ring is the scalable default, exactly
-    as the module docstring (operators/knn.py) argues for the 10^12-point
-    contract."""
-    # repartition before checkpointing: the base fixture's row groups give
-    # few scan splits, and the candidate-join + haversine map side should
-    # run at full width (a 106k-row shuffle is ~free next to the trig)
-    pts = (
-        indexing.geolocate_expr(_images_df(spark, sf_dir))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
+def _knn_rows(spark, sf_dir, join):
+    """kNN of every 100th image against all images, through `join`."""
+    pts = _checkpointed_points(spark, sf_dir)
     queries = pts.filter(
         (F.regexp_extract("image_id", r"img_(\d+)", 1).cast("long") % 100) == 0
     )
-    out = knn.knn_join(pts, queries)
-    return out.select(
+    return join(pts, queries).select(
         "query_image_id", "neighbor_image_id", F.col("rank").cast("bigint").alias("rank"), "dist_m"
     )
+
+
+def q_knn(spark, sf_dir):
+    """Default kNN: the fixed ring-2 plan. The escalating plan (knn_global)
+    runs this same ring-2 join as its first round and only adds passes, so
+    it cannot be faster (measurements in BASELINE.md)."""
+    return _knn_rows(spark, sf_dir, knn.knn_join)
 
 
 def q_knn_global(spark, sf_dir):
@@ -395,39 +319,31 @@ def q_knn_global(spark, sf_dir):
     neighbors exist. Costs round-1 (≡ the fixed plan) + one extra
     points-table pass per escalation round, so it is the completeness
     option, not the throughput default (see q_knn)."""
-    pts = (
-        indexing.geolocate_expr(_images_df(spark, sf_dir))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
-    queries = pts.filter(
-        (F.regexp_extract("image_id", r"img_(\d+)", 1).cast("long") % 100) == 0
-    )
-    out = knn.knn_join_global(pts, queries)
-    return out.select(
-        "query_image_id", "neighbor_image_id", F.col("rank").cast("bigint").alias("rank"), "dist_m"
-    )
+    return _knn_rows(spark, sf_dir, knn.knn_join_global)
 
 
 def q_decode_nodes(spark, sf_dir):
-    blocks = read_parquet(spark, fixtures.ensure_blocks(fixtures.n_images_for_sf(sf_dir)))
-    return decode.decode_nodes(decode.widen_if_narrow(blocks))
+    return decode.decode_nodes(_blocks(spark, sf_dir))
 
 
 def q_decode_tags(spark, sf_dir):
-    blocks = read_parquet(spark, fixtures.ensure_blocks(fixtures.n_images_for_sf(sf_dir)))
-    _, tags = decode.decode_entities(decode.widen_if_narrow(blocks))
+    _, tags = decode.decode_entities(_blocks(spark, sf_dir))
     return tags
 
 
 def q_decode_way_refs(spark, sf_dir):
-    wb = read_parquet(spark, fixtures.ensure_way_blocks(fixtures.n_images_for_sf(sf_dir)))
-    return decode.decode_way_refs(wb)
+    return decode.decode_way_refs(_way_blocks(spark, sf_dir))
 
 
 def q_decode_rel_members(spark, sf_dir):
-    rb = read_parquet(spark, fixtures.ensure_rel_blocks(fixtures.n_images_for_sf(sf_dir)))
-    return decode.decode_rel_members(rb)
+    return decode.decode_rel_members(
+        fixtures.read_fixture(spark, sf_dir, fixtures.ensure_rel_blocks)
+    )
+
+
+def q_decode_metrics(spark, sf_dir):
+    # a per-block projection: the unwidened scan is already as wide as needed
+    return decode.decode_metrics(fixtures.read_fixture(spark, sf_dir, fixtures.ensure_blocks))
 
 
 def q_way_geometry(spark, sf_dir):
@@ -435,10 +351,7 @@ def q_way_geometry(spark, sf_dir):
     with antimeridian wrap, e7 bbox) — decode_way_refs joined back to the
     node stream, the nod_way ⋈ nod walk a pbf2sqlite consumer runs. See
     operators/decode.way_geometry."""
-    n = fixtures.n_images_for_sf(sf_dir)
-    wb = read_parquet(spark, fixtures.ensure_way_blocks(n))
-    blocks = read_parquet(spark, fixtures.ensure_blocks(n))
-    return decode.way_geometry(wb, decode.widen_if_narrow(blocks))
+    return decode.way_geometry(_way_blocks(spark, sf_dir), _blocks(spark, sf_dir))
 
 
 def q_way_simplify(spark, sf_dir):
@@ -450,10 +363,7 @@ def q_way_simplify(spark, sf_dir):
     that is the coarsest-zoom scale where the collapse branch is live
     (~3.5%% of vertices drop at sf0.01); the z13-pixel default 2^14 would
     correctly keep everything. See operators/decode.way_simplify."""
-    n = fixtures.n_images_for_sf(sf_dir)
-    wb = read_parquet(spark, fixtures.ensure_way_blocks(n))
-    blocks = read_parquet(spark, fixtures.ensure_blocks(n))
-    return decode.way_simplify(wb, decode.widen_if_narrow(blocks), snap_e7=1 << 26)
+    return decode.way_simplify(_way_blocks(spark, sf_dir), _blocks(spark, sf_dir), snap_e7=1 << 26)
 
 
 def q_phash_near_dup(spark, sf_dir):
@@ -465,33 +375,36 @@ def q_phash_near_dup(spark, sf_dir):
     return dedup.phash_near_dup(_images_df(spark, sf_dir))
 
 
-def q_xml_nodes(spark, sf_dir):
-    """Cross-format dual-decode (SURVEY §5.2): Spark parses the .osm XML
-    shards through the engine's Python Data Source V2 connector
-    (spark.read.format("osmxml") — sources/osm_datasource.py, with shard
-    filter pushdown); the oracle decodes the SAME entities from the
-    PBF-analogue blocks — the reference's XML-vs-PBF golden check. The
-    mapInPandas parse path (xml_source.read_xml_nodes) is pytest-pinned
-    identical."""
-    from .sources import osm_datasource
-
+def _osm_xml(spark, sf_dir, what):
+    """The .osm XML shards parsed by the engine's Python Data Source V2
+    connector (spark.read.format("osmxml") — sources/osm_datasource.py,
+    with shard filter pushdown)."""
     osm_datasource.register(spark)
     return (
         spark.read.format("osmxml")
-        .option("what", "nodes")
+        .option("what", what)
         .load(xml_source.ensure_xml(fixtures.n_images_for_sf(sf_dir)))
     )
+
+
+def q_xml_nodes(spark, sf_dir):
+    """Cross-format dual-decode (SURVEY §5.2): Spark parses the .osm XML
+    shards; the oracle decodes the SAME entities from the PBF-analogue
+    blocks — the reference's XML-vs-PBF golden check."""
+    return _osm_xml(spark, sf_dir, "nodes")
+
+
+def q_xml_tags(spark, sf_dir):
+    """The tag side of the XML dual-decode (oracle: the blocks' EAV rows)."""
+    return _osm_xml(spark, sf_dir, "tags")
 
 
 def q_events_windowed_stream(spark, sf_dir):
     """Structured Streaming twin of events_windowed, driven to completion
     against a file source — stream≡batch equivalence as a driver-checked
     oracle (the batch GROUP BY is the oracle SQL)."""
-    from .streaming import events as stream_events
-
-    base = os.path.basename(os.path.normpath(sf_dir))
     return stream_events.windowed_counts_stream(
-        spark, sf_dir, query_name=f"win_out_{base.replace('.', '_')}"
+        spark, sf_dir, query_name=_stream_name("win_out", sf_dir)
     )
 
 
@@ -500,71 +413,17 @@ def q_user_totals_stream(spark, sf_dir):
     running (n_events, total_value) state driven to completion over the file
     source; the final state per user must equal the batch GROUP BY (the
     oracle). The API the task brief names for custom stateful operators."""
-    from .streaming import events as stream_events
-
-    base = os.path.basename(os.path.normpath(sf_dir))
     return stream_events.stateful_user_totals(
-        spark, sf_dir, query_name=f"user_tot_{base.replace('.', '_')}"
+        spark, sf_dir, query_name=_stream_name("user_tot", sf_dir)
     )
 
 
 def q_cell_counts_stream(spark, sf_dir):
     """Streaming ingest ≡ batch: per-cell counts maintained as streaming
     state over incrementally-consumed input; oracle is the batch GROUP BY."""
-    from .streaming import events as stream_events
-
-    base = os.path.basename(os.path.normpath(sf_dir))
     return stream_events.cell_counts_stream(
-        spark, sf_dir, query_name=f"cells_out_{base.replace('.', '_')}"
+        spark, sf_dir, query_name=_stream_name("cells_out", sf_dir)
     )
-
-
-def q_xml_tags(spark, sf_dir):
-    return xml_source.read_xml_tags(
-        spark, xml_source.ensure_xml(fixtures.n_images_for_sf(sf_dir))
-    )
-
-
-def q_tag_pivot(spark, sf_dir):
-    return relational.tag_pivot(spark, sf_dir, fixtures.ensure_images(fixtures.n_images_for_sf(sf_dir)))
-
-
-def q_caption_semi_join(spark, sf_dir):
-    return relational.caption_semi_join(
-        spark, sf_dir, fixtures.ensure_images(fixtures.n_images_for_sf(sf_dir))
-    )
-
-
-def q_null_scan(spark, sf_dir):
-    return relational.null_scan(
-        spark, sf_dir, fixtures_text.ensure_meta_corrupt(fixtures.n_images_for_sf(sf_dir))
-    )
-
-
-def q_caption_exact_dedup(spark, sf_dir):
-    return text.caption_exact_dedup(
-        spark, sf_dir, fixtures.ensure_images(fixtures.n_images_for_sf(sf_dir))
-    )
-
-
-def q_decode_integrity(spark, sf_dir):
-    return multimodal.decode_integrity(spark, sf_dir)
-
-
-def q_block_features(spark, sf_dir):
-    return multimodal.block_mean_features(spark, sf_dir)
-
-
-def q_minhash_pairs(spark, sf_dir):
-    return dedup.minhash_lsh_pairs(spark, sf_dir)
-
-
-def q_simhash_pairs(spark, sf_dir):
-    return dedup.simhash_pairs(spark, sf_dir)
-
-
-def q_ann_srp(spark, sf_dir):
-    return similarity.ann_topk_srp(spark, sf_dir)
 
 
 # =====================================================================
@@ -572,10 +431,11 @@ def q_ann_srp(spark, sf_dir):
 # =====================================================================
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order is significant: the first 50 entries are the
-    hard-signal rows, and every capability class keeps one oracled
-    representative there. The tail holds the class twins and the rows-only
-    entries."""
+    """Each value is a module-level function called as (spark, sf_dir) that
+    opens its own inputs: an operator, or a composition above. Registry
+    order is significant: the first 50 entries are the hard-signal rows,
+    and every capability class keeps one oracled representative there. The
+    tail holds the class twins and the rows-only entries."""
     return {
         # geo / tiling / spatial join / knn (north-star operators)
         "geolocate_cells": q_geolocate_cells,
@@ -602,30 +462,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "xml_tags": q_xml_tags,
         "focal_sum": q_focal_sum,
         # multimodal plumbing (golden-oracled — S4/S5/D4 ride these)
-        "decode_integrity": q_decode_integrity,
+        "decode_integrity": multimodal.decode_integrity,
         "block_features_flat": multimodal.block_features_flat,
         "box_pairs": q_box_pairs,
         # reference queries/ dir 1:1 twins
-        "addr_pivot_union": lambda spark, sf_dir: relational.addr_pivot_union(
-            spark, sf_dir, fixtures_text.ensure_eav_all(fixtures.n_images_for_sf(sf_dir))
-        ),
+        "addr_pivot_union": relational.addr_pivot_union,
         "way_geometry": q_way_geometry,
-        "iso3166_node": lambda spark, sf_dir: relational.iso3166_node(
-            spark, sf_dir, fixtures_text.ensure_eav_all(fixtures.n_images_for_sf(sf_dir))
-        ),
+        "iso3166_node": relational.iso3166_node,
         # relational layer (SURVEY §2.3 + §2.4)
         "q1_lineitem_agg": relational.q1_lineitem_agg,
         "way_simplify": q_way_simplify,
         "adaptive_grid": q_adaptive_grid,
         "image_metrics": multimodal.image_metrics,
         "decontaminate": text.decontaminate,
-        "ref_query_pack": lambda spark, sf_dir: relational.ref_query_pack(
-            spark,
-            sf_dir,
-            fixtures.ensure_images(fixtures.n_images_for_sf(sf_dir)),
-            fixtures_text.ensure_eav_all(fixtures.n_images_for_sf(sf_dir)),
-            fixtures.ensure_collections(fixtures.n_images_for_sf(sf_dir)),
-        ),
+        "ref_query_pack": relational.ref_query_pack,
         "ordered_reassembly": relational.ordered_reassembly,
         "topk_orders_per_customer": relational.topk_orders_per_customer,
         "cube_lineitem": relational.cube_lineitem,
@@ -640,19 +490,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # text analysis / dedup (training-data pipeline layer)
         "local_autocorr": q_local_autocorr,
         "phash_near_dup": q_phash_near_dup,
-        "minhash_lsh_pairs": q_minhash_pairs,
+        "minhash_lsh_pairs": dedup.minhash_lsh_pairs,
         "dedup_clusters": dedup.dedup_clusters,
         "repetition_stats": text.repetition_stats,
-        "simhash_pairs": q_simhash_pairs,
+        "simhash_pairs": dedup.simhash_pairs,
         # similarity search (golden-oracled recall for BOTH approximate paths)
         "ann_recall_srp": similarity.ann_recall_srp,
         "ann_recall_ivf": similarity.ann_recall_ivf,
         # ---- tail: capability-duplicate oracled twins
         "emb_near_dup_bucketed": similarity.emb_near_dup_bucketed,
         "quality_score": text.quality_score,
-        "typed_members": lambda spark, sf_dir: relational.typed_members(
-            spark, sf_dir, fixtures.ensure_collections(fixtures.n_images_for_sf(sf_dir))
-        ),
+        "typed_members": relational.typed_members,
         "ann_topk": similarity.ann_topk_bruteforce,
         "emb_near_dup": similarity.near_dup_pairs,
         "knn_global": q_knn_global,
@@ -660,54 +508,36 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_windowed_stream": q_events_windowed_stream,
         "frame_sample": multimodal.frame_sample,
         "resize_nn": multimodal.resize_nn,
-        "denotation_count": lambda spark, sf_dir: relational.denotation_count(
-            spark, sf_dir, fixtures_text.ensure_eav_all(fixtures.n_images_for_sf(sf_dir))
-        ),
-        "route_wide": lambda spark, sf_dir: relational.route_wide(
-            spark, sf_dir, fixtures_text.ensure_eav_all(fixtures.n_images_for_sf(sf_dir))
-        ),
-        "rel_member_tags": lambda spark, sf_dir: relational.rel_member_tags(
-            spark,
-            sf_dir,
-            fixtures.ensure_collections(fixtures.n_images_for_sf(sf_dir)),
-            fixtures_text.ensure_eav_all(fixtures.n_images_for_sf(sf_dir)),
-        ),
+        "denotation_count": relational.denotation_count,
+        "route_wide": relational.route_wide,
+        "rel_member_tags": relational.rel_member_tags,
         "lang_id": text.lang_id,
         "events_pivot": relational.events_pivot,
         "ngram_jaccard_pairs": text.ngram_jaccard_pairs,
-        "caption_semi_join": q_caption_semi_join,
+        "caption_semi_join": relational.caption_semi_join,
         "fingerprint": text.fingerprint,
         "multi_branch_union": relational.multi_branch_union,
-        "caption_exact_dedup": q_caption_exact_dedup,
-        "decode_metrics": lambda spark, sf_dir: decode.decode_metrics(
-            read_parquet(spark, fixtures.ensure_blocks(fixtures.n_images_for_sf(sf_dir)))
-        ),
+        "caption_exact_dedup": text.caption_exact_dedup,
+        "decode_metrics": q_decode_metrics,
         "audio_window_energy": multimodal.audio_window_energy,
-        "iso3166_countries": lambda spark, sf_dir: relational.iso3166_countries(
-            spark, sf_dir, fixtures_text.ensure_eav_all(fixtures.n_images_for_sf(sf_dir))
-        ),
+        "iso3166_countries": relational.iso3166_countries,
         "semi_join_orders": relational.semi_join_orders,
         "exact_dedup_groups": text.exact_dedup_groups,
         "token_stats": text.token_stats,
         "kmeans_assign": similarity.kmeans_assign,
-        "tag_pivot": q_tag_pivot,
+        "tag_pivot": relational.tag_pivot,
         "events_windowed": relational.events_windowed,
         "user_totals_stream": q_user_totals_stream,
-        "rel_tag_freq": lambda spark, sf_dir: relational.rel_tag_freq(
-            spark,
-            sf_dir,
-            fixtures.ensure_collections(fixtures.n_images_for_sf(sf_dir)),
-            fixtures_text.ensure_eav_all(fixtures.n_images_for_sf(sf_dir)),
-        ),
-        "null_scan": q_null_scan,
+        "rel_tag_freq": relational.rel_tag_freq,
+        "null_scan": relational.null_scan,
         "rollup_lineitem": relational.rollup_lineitem,
         "revenue_by_segment": relational.revenue_by_segment,
         "event_pairs_window": temporal.event_pairs_window,
         "date_projection": relational.date_projection,
         # ---- tail: approximate / array-typed — rows-only by design
-        "ann_topk_srp": q_ann_srp,
+        "ann_topk_srp": similarity.ann_topk_srp,
         "ann_topk_ivf": similarity.ann_topk_ivf,
-        "block_features": q_block_features,
+        "block_features": multimodal.block_mean_features,
     }
 
 
@@ -738,6 +568,37 @@ def _lang_votes() -> dict[str, str]:
 
 
 def oracle_sql() -> dict[str, str]:
+    # every path comes from the sources/ function that writes the file
+    # (generating it if missing)
+    sf = ORACLE_SF_DIR
+    n = fixtures.n_images_for_sf(sf)                   # 10600 at sf0.01
+    m = fixtures.n_polygons_for(n)                     # 189 at sf0.01
+    images = fixtures.ensure_images(n)
+    polygons = fixtures.ensure_polygons(m)
+    blocks = fixtures.ensure_blocks(n)
+    way_blocks = fixtures.ensure_way_blocks(n)
+    rel_blocks = fixtures.ensure_rel_blocks(n)
+    collections = fixtures.ensure_collections(n)
+    emb_dups = fixtures.ensure_emb_dups(fixtures.n_dup_vecs_for(n))
+    eav_all = fixtures_text.ensure_eav_all(n)
+    meta_corrupt = fixtures_text.ensure_meta_corrupt(n)
+    golden_geo = fixtures.ensure_golden_geo(n)
+    golden_pip = fixtures.ensure_golden_pip(n, m)
+    golden_knn = fixtures.ensure_golden_knn(n)
+    golden_knn_global = fixtures.ensure_golden_knn_global(n)
+    golden_regions = fixtures.ensure_golden_regions(n)
+    golden_decode = fixtures_text.ensure_golden_decode(n)
+    golden_frames = fixtures_text.ensure_golden_frames(n)
+    golden_blockmeans = fixtures_text.ensure_golden_blockmeans(n)
+    golden_resize = fixtures_text.ensure_golden_resize(n)
+    golden_laplacian = fixtures_text.ensure_golden_laplacian(n)
+    golden_audio = audio_source.ensure_golden_audio_energy(audio_source.n_clips_for(n))
+    golden_minhash = fixtures_text.ensure_golden_minhash(sf)
+    golden_simhash = fixtures_text.ensure_golden_simhash(sf)
+    golden_clusters = fixtures_text.ensure_golden_clusters(sf)
+    golden_kmeans = fixtures_text.ensure_golden_kmeans(sf)
+    golden_recall = fixtures_text.ensure_golden_recall_srp(sf)
+    golden_recall_ivf = fixtures_text.ensure_golden_recall_ivf(sf)
     v = _lang_votes()
     best = f"greatest({v['en']}, {v['fr']}, {v['de']}, {v['es']})"
     decode_nodes_sql = f"""
@@ -748,7 +609,7 @@ def oracle_sql() -> dict[str, str]:
                      unnest(lon_dz) AS lonz,
                      unnest(list_transform(image_sid, s -> strtab[s + 1])) AS image_id,
                      unnest(generate_series(0, len(id_delta) - 1)) AS pos
-              FROM '{BLOCKS}')
+              FROM '{blocks}')
             SELECT block_id, CAST(pos AS INTEGER) AS pos,
                    CAST(sum(idd) OVER w AS BIGINT) AS id,
                    image_id,
@@ -763,34 +624,34 @@ def oracle_sql() -> dict[str, str]:
             SELECT image_id, lat, lon,
                    {_CELL7} AS cell_r7, {_CELL8} AS cell_r8, {_CELL9} AS cell_r9,
                    {_ZCELL} AS zcell_l12
-            FROM '{GOLDEN_GEO}'
+            FROM '{golden_geo}'
         """,
         "tile_assignment": f"""
             SELECT {_CELL7} AS cell_id, image_id,
                    row_number() OVER (PARTITION BY {_CELL7} ORDER BY image_id) AS order_
-            FROM '{GOLDEN_GEO}'
+            FROM '{golden_geo}'
         """,
         "cell_counts_salted": f"""
-            SELECT {_CELL7} AS cell_id, count(*) AS n FROM '{GOLDEN_GEO}' GROUP BY 1
+            SELECT {_CELL7} AS cell_id, count(*) AS n FROM '{golden_geo}' GROUP BY 1
         """,
         "cell_counts_stream": f"""
             SELECT {_CELL7} AS cell_id, count(*) AS n_images,
                    min(image_id) AS first_image
-            FROM '{GOLDEN_GEO}' GROUP BY 1
+            FROM '{golden_geo}' GROUP BY 1
         """,
-        "pip_join": f"SELECT image_id, polygon_id FROM '{GOLDEN_PIP}'",
+        "pip_join": f"SELECT image_id, polygon_id FROM '{golden_pip}'",
         "pip_by_kind": f"""
             SELECT p.kind, count(*) AS n
-            FROM '{GOLDEN_PIP}' g JOIN '{POLYGONS}' p USING (polygon_id)
+            FROM '{golden_pip}' g JOIN '{polygons}' p USING (polygon_id)
             GROUP BY 1
         """,
         "knn": f"""
             SELECT query_image_id, neighbor_image_id, CAST(rank AS BIGINT) AS rank, dist_m
-            FROM '{GOLDEN_KNN}'
+            FROM '{golden_knn}'
         """,
         "knn_global": f"""
             SELECT query_image_id, neighbor_image_id, CAST(rank AS BIGINT) AS rank, dist_m
-            FROM '{GOLDEN_KNN_GLOBAL}'
+            FROM '{golden_knn_global}'
         """,
         "decode_nodes": decode_nodes_sql,
         # way-refs delta decode (readosm.c:1423-1433 → pbf2sqlite.c:755-770):
@@ -799,7 +660,7 @@ def oracle_sql() -> dict[str, str]:
         "decode_way_refs": f"""
             WITH w AS (
               SELECT unnest(way_id) AS way_id, unnest(refs_dz) AS refs
-              FROM '{WAY_BLOCKS}'),
+              FROM '{way_blocks}'),
             e AS (
               SELECT way_id,
                      unnest(refs) AS dz,
@@ -825,7 +686,7 @@ def oracle_sql() -> dict[str, str]:
                      unnest(memids_dz) AS dz_l,
                      unnest(types) AS typ_l,
                      unnest(roles_sid) AS sid_l
-              FROM '{REL_BLOCKS}'),
+              FROM '{rel_blocks}'),
             e AS (
               SELECT rel_of, strtab,
                      unnest(dz_l) AS dz,
@@ -849,7 +710,7 @@ def oracle_sql() -> dict[str, str]:
             FROM d
         """,
         "phash_near_dup": f"""
-            WITH ph AS (SELECT phash, count(*) AS c FROM '{IMAGES}' GROUP BY 1),
+            WITH ph AS (SELECT phash, count(*) AS c FROM '{images}' GROUP BY 1),
             nb AS (
               SELECT a.phash,
                      CAST(sum(b.c) AS INTEGER) AS near_image_count,
@@ -862,12 +723,12 @@ def oracle_sql() -> dict[str, str]:
                    CAST(ph.c - 1 AS INTEGER) AS dup_count,
                    coalesce(nb.near_image_count, 0) AS near_image_count,
                    coalesce(nb.near_hash_count, 0) AS near_hash_count
-            FROM '{IMAGES}' i JOIN ph USING (phash) LEFT JOIN nb USING (phash)
+            FROM '{images}' i JOIN ph USING (phash) LEFT JOIN nb USING (phash)
         """,
         "way_geometry": f"""
             WITH w AS (
               SELECT unnest(way_id) AS way_id, unnest(refs_dz) AS refs
-              FROM '{WAY_BLOCKS}'),
+              FROM '{way_blocks}'),
             we AS (
               SELECT way_id,
                      unnest(refs) AS dz,
@@ -887,7 +748,7 @@ def oracle_sql() -> dict[str, str]:
                      unnest(lat_dz) AS latz,
                      unnest(lon_dz) AS lonz,
                      unnest(generate_series(0, len(id_delta) - 1)) AS pos
-              FROM '{BLOCKS}'),
+              FROM '{blocks}'),
             nodes AS (
               SELECT CAST(sum(idd) OVER nw AS BIGINT) AS nod_id,
                      CAST(sum(xor(latz >> 1, -(latz & 1))) OVER nw AS BIGINT) AS lat_e7,
@@ -915,7 +776,7 @@ def oracle_sql() -> dict[str, str]:
         "way_simplify": f"""
             WITH w AS (
               SELECT unnest(way_id) AS way_id, unnest(refs_dz) AS refs
-              FROM '{WAY_BLOCKS}'),
+              FROM '{way_blocks}'),
             we AS (
               SELECT way_id,
                      unnest(refs) AS dz,
@@ -935,7 +796,7 @@ def oracle_sql() -> dict[str, str]:
                      unnest(lat_dz) AS latz,
                      unnest(lon_dz) AS lonz,
                      unnest(generate_series(0, len(id_delta) - 1)) AS pos
-              FROM '{BLOCKS}'),
+              FROM '{blocks}'),
             nodes AS (
               SELECT CAST(sum(idd) OVER nw AS BIGINT) AS nod_id,
                      CAST(sum(xor(latz >> 1, -(latz & 1))) OVER nw AS BIGINT) AS lat_e7,
@@ -968,7 +829,7 @@ def oracle_sql() -> dict[str, str]:
         # (level 12 -> 10) as explicit CTEs; 281474976710656 = 2^48 (the
         # Morton id's level-prefix stride, oracle_zcell_expr)
         "cell_compact": f"""
-            WITH c12 AS (SELECT DISTINCT {_ZCELL} AS cell FROM '{GOLDEN_GEO}'),
+            WITH c12 AS (SELECT DISTINCT {_ZCELL} AS cell FROM '{golden_geo}'),
             g12 AS (
               SELECT CAST((cell - 12 * 281474976710656) // 4
                           + 11 * 281474976710656 AS BIGINT) AS pcell,
@@ -1002,7 +863,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT (({_CELL8}) >> 27) & 134217727 AS row_i,
                      ({_CELL8}) & 134217727 AS col_j,
                      count(*) AS c
-              FROM '{GOLDEN_GEO}' GROUP BY 1, 2),
+              FROM '{golden_geo}' GROUP BY 1, 2),
             probes AS (
               SELECT row_i + di AS ci, (col_j + dj) % 512 AS cj, c AS src_c
               FROM base, (VALUES (0, 1), (1, 0)) o(di, dj)
@@ -1047,7 +908,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT (({_CELL8}) >> 27) & 134217727 AS row_i,
                      ({_CELL8}) & 134217727 AS col_j,
                      count(*) AS n_images
-              FROM '{GOLDEN_GEO}' GROUP BY 1, 2),
+              FROM '{golden_geo}' GROUP BY 1, 2),
             b7 AS (SELECT row_i >> 1 AS row_i, col_j >> 1 AS col_j,
                           CAST(sum(n_images) AS BIGINT) AS n_images
                    FROM b8 GROUP BY 1, 2),
@@ -1085,7 +946,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT (({_CELL8}) >> 27) & 134217727 AS row_i,
                      ({_CELL8}) & 134217727 AS col_j,
                      count(*) AS c
-              FROM '{GOLDEN_GEO}' GROUP BY 1, 2),
+              FROM '{golden_geo}' GROUP BY 1, 2),
             g AS (SELECT CAST(count(*) AS BIGINT) AS g_n,
                          CAST(sum(c) AS BIGINT) AS g_s FROM base),
             probes AS (
@@ -1115,7 +976,7 @@ def oracle_sql() -> dict[str, str]:
                      list_transform(ring_lat, x -> CAST(floor(x * 1e7) AS BIGINT)) AS la,
                      list_transform(ring_lon, x -> CAST(floor(x * 1e7) AS BIGINT)) AS lo,
                      len(ring_lat) - 1 AS n
-              FROM '{POLYGONS}')
+              FROM '{polygons}')
             SELECT polygon_id, kind,
                    CAST(n AS BIGINT) AS n_vertices,
                    CAST(list_sum(list_transform(range(1, n + 1), i ->
@@ -1135,7 +996,7 @@ def oracle_sql() -> dict[str, str]:
                    CAST(len(keys_vals) AS INTEGER) AS n_kv_stream,
                    greatest(CAST(list_max(image_sid) AS BIGINT),
                             CAST(list_max(keys_vals) AS BIGINT)) AS max_sid
-            FROM '{BLOCKS}'
+            FROM '{blocks}'
         """,
         # cross-format dual-decode (SURVEY §5.2): Spark parses .osm XML,
         # the oracle decodes the same entities from the PBF-analogue blocks
@@ -1145,7 +1006,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT block_id,
                      unnest(list_transform(keys_vals, s -> strtab[s + 1])) AS s,
                      unnest(generate_series(0, len(keys_vals) - 1)) AS pos
-              FROM '{BLOCKS}'),
+              FROM '{blocks}'),
             with_ent AS (
               SELECT block_id, s, pos,
                      count(*) FILTER (WHERE s = '') OVER (
@@ -1166,7 +1027,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT block_id,
                      unnest(list_transform(image_sid, s -> strtab[s + 1])) AS image_id,
                      unnest(generate_series(0, len(image_sid) - 1)) AS ent
-              FROM '{BLOCKS}')
+              FROM '{blocks}')
             SELECT n.image_id, p.k, p.v FROM pairs p JOIN nodes n USING (block_id, ent)
         """,
         "q1_lineitem_agg": """
@@ -1194,13 +1055,13 @@ def oracle_sql() -> dict[str, str]:
             WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
         """,
         "tag_pivot": f"""
-            WITH t AS (SELECT image_id, string_split(caption, ' ') AS w FROM '{IMAGES}')
+            WITH t AS (SELECT image_id, string_split(caption, ' ') AS w FROM '{images}')
             SELECT image_id, w[5] AS place, substr(w[6], 7) AS style,
                    substr(w[7], 3) AS q, w[3] AS noun
             FROM t
         """,
         "addr_pivot_union": f"""
-            WITH t AS (SELECT * FROM '{EAV_ALL}')
+            WITH t AS (SELECT * FROM '{eav_all}')
             SELECT image_id, CAST(NULL AS BIGINT) AS polygon_id,
                    CAST(NULL AS BIGINT) AS collection_id,
                    max(CASE WHEN k='name'  THEN v END) AS name,
@@ -1239,11 +1100,11 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY collection_id
         """,
         "caption_semi_join": f"""
-            SELECT image_id, caption FROM '{IMAGES}'
+            SELECT image_id, caption FROM '{images}'
             WHERE CAST(substr(string_split(caption, ' ')[7], 3) AS INTEGER) >= 8
         """,
         "null_scan": f"""
-            SELECT image_id, k, v FROM '{META_CORRUPT}' WHERE k IS NULL OR v IS NULL
+            SELECT image_id, k, v FROM '{meta_corrupt}' WHERE k IS NULL OR v IS NULL
         """,
         "typed_members": f"""
             SELECT collection_id, CAST(order_ AS INTEGER) AS order_,
@@ -1252,7 +1113,7 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN member_type = 1 THEN member_ref END AS polygon_id,
                    CASE WHEN member_type = 2 THEN member_ref END AS sub_collection_id,
                    role
-            FROM '{COLLECTIONS}'
+            FROM '{collections}'
         """,
         "multi_branch_union": """
             SELECT 'urgent' AS branch, o_orderkey, o_totalprice FROM orders
@@ -1408,20 +1269,20 @@ def oracle_sql() -> dict[str, str]:
         """,
         "caption_exact_dedup": f"""
             SELECT md5(caption) AS fp, count(*) AS n_dups, min(image_id) AS canonical
-            FROM '{IMAGES}' GROUP BY 1 HAVING count(*) > 1
+            FROM '{images}' GROUP BY 1 HAVING count(*) > 1
         """,
         "raster_density": f"""
             SELECT (({_CELL8}) >> 27) & 134217727 AS row_i,
                    ({_CELL8}) & 134217727 AS col_j,
                    count(*) AS n_images, min(image_id) AS first_image
-            FROM '{GOLDEN_GEO}' GROUP BY 1, 2
+            FROM '{golden_geo}' GROUP BY 1, 2
         """,
         "tile_pyramid": f"""
             WITH b8 AS (
               SELECT (({_CELL8}) >> 27) & 134217727 AS row_i,
                      ({_CELL8}) & 134217727 AS col_j,
                      count(*) AS n_images
-              FROM '{GOLDEN_GEO}' GROUP BY 1, 2),
+              FROM '{golden_geo}' GROUP BY 1, 2),
             b7 AS (SELECT row_i >> 1 AS row_i, col_j >> 1 AS col_j,
                           CAST(sum(n_images) AS BIGINT) AS n_images
                    FROM b8 GROUP BY 1, 2),
@@ -1441,14 +1302,14 @@ def oracle_sql() -> dict[str, str]:
         """,
         "raster_polygonize": f"""
             SELECT region_id, n_cells, n_images, min_i, max_i, min_j, max_j
-            FROM '{GOLDEN_REGIONS}'
+            FROM '{golden_regions}'
         """,
         "box_pairs": f"""
             WITH p AS (
               SELECT image_id, lat, lon,
                      (({_CELL16}) >> 27) & 134217727 AS row_i,
                      ({_CELL16}) & 134217727 AS col_j
-              FROM '{GOLDEN_GEO}'),
+              FROM '{golden_geo}'),
             off AS (
               SELECT di.di, dj.dj
               FROM (VALUES (-1), (0), (1)) di(di),
@@ -1470,7 +1331,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT (({_CELL8}) >> 27) & 134217727 AS row_i,
                      ({_CELL8}) & 134217727 AS col_j,
                      count(*) AS n_images
-              FROM '{GOLDEN_GEO}' GROUP BY 1, 2),
+              FROM '{golden_geo}' GROUP BY 1, 2),
             off AS (
               SELECT di.di, dj.dj
               FROM (VALUES (-1), (0), (1)) di(di),
@@ -1493,7 +1354,7 @@ def oracle_sql() -> dict[str, str]:
                        AS sum_lat_e6,
                    CAST(sum(CAST(floor(lon * 1000000.0) AS BIGINT)) AS BIGINT)
                        AS sum_lon_e6
-            FROM '{GOLDEN_PIP}' JOIN '{GOLDEN_GEO}' USING (image_id)
+            FROM '{golden_pip}' JOIN '{golden_geo}' USING (image_id)
             GROUP BY 1
         """,
         # per-doc repetition signal: most frequent 2-gram via the identical
@@ -1557,10 +1418,10 @@ def oracle_sql() -> dict[str, str]:
             JOIN sizes s2 ON s2.doc_id = doc2
             WHERE i / (s1.sz + s2.sz - i) >= 0.5
         """,
-        "minhash_lsh_pairs": f"SELECT doc1, doc2, sig_match FROM '{GOLDEN_MINHASH}'",
-        "dedup_clusters": f"SELECT doc_id, cluster_id FROM '{GOLDEN_CLUSTERS}'",
-        "kmeans_assign": f"SELECT vec_id, cluster, dist2 FROM '{GOLDEN_KMEANS}'",
-        "simhash_pairs": f"SELECT doc1, doc2, hamming FROM '{GOLDEN_SIMHASH}'",
+        "minhash_lsh_pairs": f"SELECT doc1, doc2, sig_match FROM '{golden_minhash}'",
+        "dedup_clusters": f"SELECT doc_id, cluster_id FROM '{golden_clusters}'",
+        "kmeans_assign": f"SELECT vec_id, cluster, dist2 FROM '{golden_kmeans}'",
+        "simhash_pairs": f"SELECT doc1, doc2, hamming FROM '{golden_simhash}'",
         "ann_topk": """
             WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
             n AS (SELECT vec_id, v,
@@ -1588,25 +1449,25 @@ def oracle_sql() -> dict[str, str]:
             WHERE round(list_sum(list_transform(generate_series(1, len(a.v)),
                          i -> a.v[i] * b.v[i])) / (a.nrm * b.nrm), 6) >= 0.4
         """,
-        "decode_integrity": f"SELECT image_id, fmt, pix_sum, phash_dec FROM '{GOLDEN_DECODE}'",
+        "decode_integrity": f"SELECT image_id, fmt, pix_sum, phash_dec FROM '{golden_decode}'",
         "frame_sample": (
-            f"SELECT image_id, frame_idx, frame_sum, frame_mean FROM '{GOLDEN_FRAMES}'"
+            f"SELECT image_id, frame_idx, frame_sum, frame_mean FROM '{golden_frames}'"
         ),
         "block_features_flat": (
-            f"SELECT image_id, feat_idx, value FROM '{GOLDEN_BLOCKMEANS}'"
+            f"SELECT image_id, feat_idx, value FROM '{golden_blockmeans}'"
         ),
-        "resize_nn": f"SELECT image_id, r_sum, r_phash FROM '{GOLDEN_RESIZE}'",
+        "resize_nn": f"SELECT image_id, r_sum, r_phash FROM '{golden_resize}'",
         "image_metrics": f"""
             SELECT d.image_id, d.fmt, d.pix_sum, d.phash_dec,
                    l.lap_sq_sum, l.lap_abs_sum, l.n_interior
-            FROM '{GOLDEN_DECODE}' d JOIN '{GOLDEN_LAPLACIAN}' l USING (image_id)
+            FROM '{golden_decode}' d JOIN '{golden_laplacian}' l USING (image_id)
         """,
         "blur_metric": (
             f"SELECT image_id, lap_sq_sum, lap_abs_sum, n_interior"
-            f" FROM '{GOLDEN_LAPLACIAN}'"
+            f" FROM '{golden_laplacian}'"
         ),
         "audio_window_energy": (
-            f"SELECT audio_id, win_idx, energy FROM '{GOLDEN_AUDIO}'"
+            f"SELECT audio_id, win_idx, energy FROM '{golden_audio}'"
         ),
         # queries/rel.sql:10-50 twin — member→tag frequency for one pinned
         # collection, per member-type branch, UNION ALL
@@ -1616,16 +1477,16 @@ def oracle_sql() -> dict[str, str]:
                           THEN printf('img_%07d', member_ref) END AS image_id,
                      CASE WHEN member_type = 1 THEN member_ref END AS polygon_id,
                      CASE WHEN member_type = 2 THEN member_ref END AS sub_collection_id
-              FROM '{COLLECTIONS}' WHERE collection_id = 1),
+              FROM '{collections}' WHERE collection_id = 1),
             i_c AS (
               SELECT 'img' AS el, count(*) AS cnt, k
-              FROM mem JOIN '{EAV_ALL}' t ON mem.image_id = t.image_id GROUP BY k),
+              FROM mem JOIN '{eav_all}' t ON mem.image_id = t.image_id GROUP BY k),
             p_c AS (
               SELECT 'pol' AS el, count(*) AS cnt, k
-              FROM mem JOIN '{EAV_ALL}' t ON mem.polygon_id = t.polygon_id GROUP BY k),
+              FROM mem JOIN '{eav_all}' t ON mem.polygon_id = t.polygon_id GROUP BY k),
             c_c AS (
               SELECT 'col' AS el, count(*) AS cnt, k
-              FROM mem JOIN '{EAV_ALL}' t ON mem.sub_collection_id = t.collection_id GROUP BY k)
+              FROM mem JOIN '{eav_all}' t ON mem.sub_collection_id = t.collection_id GROUP BY k)
             SELECT el, cnt, k FROM i_c
             UNION ALL SELECT el, cnt, k FROM p_c
             UNION ALL SELECT el, cnt, k FROM c_c
@@ -1634,12 +1495,12 @@ def oracle_sql() -> dict[str, str]:
         "denotation_count": f"""
             SELECT count(image_id) AS n_img, count(polygon_id) AS n_pol,
                    count(collection_id) AS n_col
-            FROM '{EAV_ALL}' WHERE k = 'name'
+            FROM '{eav_all}' WHERE k = 'name'
         """,
         # queries/ISO3166-1-countries.sql:1-33 twin — FULL OUTER JOIN of the
         # node-side and rel-side ISO tag slices + 5 left self-joins for names
         "iso3166_countries": f"""
-            WITH t AS (SELECT * FROM '{EAV_ALL}'),
+            WITH t AS (SELECT * FROM '{eav_all}'),
             n AS (SELECT v, image_id AS nod_id FROM t
                   WHERE k = 'ISO3166-1' AND image_id IS NOT NULL),
             r AS (SELECT v, collection_id AS rel_id FROM t
@@ -1665,7 +1526,7 @@ def oracle_sql() -> dict[str, str]:
         # queries/ISO3166-1-node.sql:16-47 twin — node-keyed N-way left
         # self-join with a pinned-id NOT IN exclusion
         "iso3166_node": f"""
-            WITH t AS (SELECT image_id, k, v FROM '{EAV_ALL}'
+            WITH t AS (SELECT image_id, k, v FROM '{eav_all}'
                        WHERE image_id IS NOT NULL)
             SELECT iso.image_id AS nod_id, iso.v AS v,
                    n.v AS n, wd.v AS wd, en_n.v AS en_n,
@@ -1681,7 +1542,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # queries/route.sql:1-20 twin — join-per-key EAV wide-row assembly
         "route_wide": f"""
-            WITH t AS (SELECT collection_id, k, v FROM '{EAV_ALL}'
+            WITH t AS (SELECT collection_id, k, v FROM '{eav_all}'
                        WHERE collection_id IS NOT NULL)
             SELECT tag_type.collection_id AS rel_id,
                    tag_name.v AS tag_name, tag_route.v AS tag_route,
@@ -1706,9 +1567,9 @@ def oracle_sql() -> dict[str, str]:
         "rel_member_tags": f"""
             WITH mem AS (
               SELECT printf('img_%07d', member_ref) AS nod_id
-              FROM '{COLLECTIONS}'
+              FROM '{collections}'
               WHERE collection_id = 1 AND member_type = 0),
-            t AS (SELECT image_id, k, v FROM '{EAV_ALL}'
+            t AS (SELECT image_id, k, v FROM '{eav_all}'
                   WHERE image_id IS NOT NULL)
             SELECT mem.nod_id, ref.v AS ref_v, ans.v AS ans_v,
                    CAST(ref.v AS INTEGER) AS ref_int
@@ -1720,7 +1581,7 @@ def oracle_sql() -> dict[str, str]:
         # path must reproduce it value-for-value (recall 1 by construction)
         "emb_near_dup_bucketed": f"""
             WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                       FROM '{EMB_DUPS}'),
+                       FROM '{emb_dups}'),
             n AS (SELECT vec_id, v,
                          sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
             SELECT a.vec_id AS vec1, b.vec_id AS vec2,
@@ -1730,8 +1591,8 @@ def oracle_sql() -> dict[str, str]:
             WHERE round(list_sum(list_transform(generate_series(1, len(a.v)),
                          i -> a.v[i] * b.v[i])) / (a.nrm * b.nrm), 6) >= 0.8
         """,
-        "ann_recall_srp": f"SELECT query_id, recall FROM '{GOLDEN_RECALL}'",
-        "ann_recall_ivf": f"SELECT query_id, recall FROM '{GOLDEN_RECALL_IVF}'",
+        "ann_recall_srp": f"SELECT query_id, recall FROM '{golden_recall}'",
+        "ann_recall_ivf": f"SELECT query_id, recall FROM '{golden_recall_ivf}'",
         "user_totals_stream": """
             SELECT user_id, count(*) AS n_events,
                    round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2) AS total_value
@@ -1740,8 +1601,8 @@ def oracle_sql() -> dict[str, str]:
         # the reference's small ad-hoc queries/ corpus, one row-pack — each
         # branch a 1:1 transcription (see relational.ref_query_pack docstring)
         "ref_query_pack": f"""
-            WITH eav AS (SELECT * FROM '{EAV_ALL}'),
-            geo AS (SELECT lat, lon FROM '{GOLDEN_GEO}')
+            WITH eav AS (SELECT * FROM '{eav_all}'),
+            geo AS (SELECT lat, lon FROM '{golden_geo}')
             SELECT 'most_frequent_keys' AS query, k AS c1, NULL AS c2,
                    count(*) AS cnt FROM eav GROUP BY k
             UNION ALL
@@ -1753,13 +1614,13 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY v HAVING count(*) > 1000
             UNION ALL
             SELECT 'count_objects', 'images', NULL,
-                   (SELECT count(*) FROM '{IMAGES}')
+                   (SELECT count(*) FROM '{images}')
             UNION ALL
             SELECT 'count_objects', 'polygons', NULL,
                    count(DISTINCT polygon_id) FROM eav
             UNION ALL
             SELECT 'count_objects', 'collections', NULL,
-                   count(DISTINCT collection_id) FROM '{COLLECTIONS}'
+                   count(DISTINCT collection_id) FROM '{collections}'
             UNION ALL
             SELECT 'count_objects', 'tags', NULL, count(*) FROM eav
             UNION ALL
@@ -1788,7 +1649,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT 'max_lat', NULL, NULL, CAST(round(max(lat) * 10000000) AS BIGINT) FROM geo
             UNION ALL
             SELECT 'cnt_nodes_in_way', CAST(cell_id AS VARCHAR), NULL, cnt FROM (
-              SELECT {_CELL7} AS cell_id, count(*) AS cnt FROM '{GOLDEN_GEO}'
+              SELECT {_CELL7} AS cell_id, count(*) AS cnt FROM '{golden_geo}'
               GROUP BY 1 ORDER BY cnt DESC, cell_id LIMIT 100)
             UNION ALL
             SELECT 'type_by_entity', 'img', v, count(*) FROM eav

@@ -29,8 +29,13 @@ from .hashing import u01, xxh64_long, xxh64_str_array
 JITTER_DEG = 0.2  # full width of per-image jitter square, degrees
 LAT_EPS = 1e-9
 
-# frozen escalation schedule for global kNN — single source of truth shared by
-# operators/knn.knn_join_global and sources/fixtures.ensure_golden_knn_global
+# frozen kNN spec — single source of truth shared by operators/knn and its
+# goldens (sources/fixtures.ensure_golden_knn, ensure_golden_knn_global):
+# k neighbours from the res-KNN_RES cells within KNN_RING of the query's
+# cell; the global plan escalates through KNN_RINGS
+KNN_K = 5
+KNN_RES = 7
+KNN_RING = 2
 KNN_RINGS = (2, 8, 32)
 
 
@@ -73,7 +78,7 @@ def latlon_from_phash(phash: np.ndarray, image_ids) -> tuple[np.ndarray, np.ndar
     return lat, lon
 
 
-def latlon_cols(image_id_col="image_id", phash_col="phash"):
+def latlon_cols():
     """The SAME frozen spec as latlon_from_phash, as pure-JVM Spark column
     expressions (built-in xxhash64 + double arithmetic — ANSI-safe, whole-
     stage-codegen, zero Python crossing). Returns (lat_col, lon_col).
@@ -87,9 +92,9 @@ def latlon_cols(image_id_col="image_id", phash_col="phash"):
     def u01c(h):
         return F.shiftrightunsigned(h, 11) / F.lit(float(1 << 53))
 
-    u = F.xxhash64(F.col(phash_col))
+    u = F.xxhash64(F.col("phash"))
     v = F.xxhash64(u)
-    j1 = F.xxhash64(F.col(image_id_col))
+    j1 = F.xxhash64(F.col("image_id"))
     j2 = F.xxhash64(j1)
     base_lat = u01c(u) * 180.0 - 90.0
     base_lon = u01c(v) * 360.0 - 180.0
@@ -174,25 +179,6 @@ def k_ring(cell: int, k: int) -> np.ndarray:
     ii, jj = ii[keep], np.mod(jj[keep], nx)
     cells = (np.int64(res) << np.int64(RES_SHIFT)) | (ii << np.int64(I_SHIFT)) | jj
     return np.unique(cells)
-
-
-def k_ring_table(cells: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized k-ring for many cells → (src_cell_repeated, neighbor_cell)."""
-    c = np.unique(np.asarray(cells, dtype=np.int64))
-    if c.size == 0:
-        return c, c
-    res = int(c[0] >> np.int64(RES_SHIFT))
-    ny, nx = grid_dims(res)
-    _, i0, j0 = cell_parts(c)
-    d = np.arange(-k, k + 1)
-    di, dj = np.meshgrid(d, d, indexing="ij")
-    di, dj = di.ravel(), dj.ravel()  # (m,)
-    ii = i0[:, None] + di[None, :]
-    jj = np.mod(j0[:, None] + dj[None, :], nx)
-    src = np.broadcast_to(c[:, None], ii.shape)
-    keep = (ii >= 0) & (ii < ny)
-    nb = (np.int64(res) << np.int64(RES_SHIFT)) | (ii[keep] << np.int64(I_SHIFT)) | jj[keep]
-    return src[keep], nb
 
 
 # ---------------------------------------------------------------- z-order cells

@@ -92,15 +92,6 @@ def fnv1a64_str_array(strs) -> np.ndarray:
     return h
 
 
-def u64_to_i64(x: np.ndarray) -> np.ndarray:
-    """Reinterpret uint64 bits as int64 (two's complement) — for parquet/Spark LongType."""
-    return np.asarray(x, dtype=U64).view(np.int64)
-
-
-def i64_to_u64(x: np.ndarray) -> np.ndarray:
-    return np.asarray(x, dtype=np.int64).view(U64)
-
-
 def u01(x: np.ndarray) -> np.ndarray:
     """uint64 → float64 uniform in [0, 1) using the top 53 bits."""
     return (np.asarray(x, dtype=U64) >> U64(11)).astype(np.float64) / float(1 << 53)

@@ -73,17 +73,13 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
 
 
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    return docs.select(F.col(id_col).alias("doc_id"), minhash_sig_udf(F.col(text_col)).alias("sig"))
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    return docs.select("doc_id", minhash_sig_udf(F.col("text")).alias("sig"))
 
 
-def minhash_lsh_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5, docs: DataFrame | None = None
-) -> DataFrame:
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.5) -> DataFrame:
     """→ (doc1, doc2, sig_match) candidate near-dup pairs (spec above)."""
-    if docs is None:
-        docs = _docs(spark, sf_dir)
-    sigs = minhash_signatures(docs).cache()
+    sigs = minhash_signatures(_docs(spark, sf_dir)).cache()
     # Band key folded to ONE BIGINT: xxhash64(band_id, band slice) — the LSH
     # self-join then shuffles (bkey, doc_id) longs instead of an array<long>
     # key PLUS the full 64-long sig on both sides (~4x less shuffle bytes),
@@ -131,17 +127,14 @@ def minhash_lsh_pairs(
 
 
 def simhash_pairs(
-    spark: SparkSession, sf_dir: str, max_hamming: int = SIMHASH_MAX_HAMMING,
-    docs: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, max_hamming: int = SIMHASH_MAX_HAMMING
 ) -> DataFrame:
     """→ (doc1, doc2, hamming) pairs with simhash hamming distance ≤ max_hamming.
 
     Candidates via 16-bit band equality (pigeonhole: ≤6 differing bits over 4
     bands leaves ≥1 intact band only if ≤3 bands are hit — with 6 bit flips a
     band can be missed; this is the standard approximate recall trade)."""
-    if docs is None:
-        docs = _docs(spark, sf_dir)
-    sh = docs.select("doc_id", simhash_udf(F.col("text")).alias("sh"))
+    sh = _docs(spark, sf_dir).select("doc_id", simhash_udf(F.col("text")).alias("sh"))
     bands = sh.select(
         "doc_id",
         "sh",

@@ -18,20 +18,17 @@ from pyspark.sql import functions as F
 from ..functions.geo import RES_SHIFT, I_SHIFT
 
 
-def geolocate_expr(df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """(image_id, phash, …) → (image_id, …extra, lat, lon): the frozen
-    geolocate spec as pure-JVM column expressions (functions/geo.latlon_cols)
-    — whole-stage codegen, no Python crossing, no shuffle. Payload columns are
-    pruned at the scan. The numpy kernel geo.latlon_from_phash is the test
-    oracle; the doubles are bit-identical (tests/test_spark_geo.py).
+def geolocate_expr(df: DataFrame) -> DataFrame:
+    """(image_id, phash, …) → (image_id, lat, lon): the frozen geolocate spec
+    as pure-JVM column expressions (functions/geo.latlon_cols) — whole-stage
+    codegen, no Python crossing, no shuffle. Payload columns are pruned at
+    the scan. The numpy kernel geo.latlon_from_phash is the test oracle; the
+    doubles are bit-identical (tests/test_spark_geo.py).
     """
     from ..functions.geo import latlon_cols
 
-    keep = ["image_id", *extra_cols]
-    src = df.select(*dict.fromkeys(keep + ["phash"]))
-    out_cols = [f.name for f in src.schema.fields if f.name != "phash" or "phash" in keep]
     lat, lon = latlon_cols()
-    return src.select(*out_cols, lat.alias("lat"), lon.alias("lon"))
+    return df.select("image_id", lat.alias("lat"), lon.alias("lon"))
 
 
 def grid_cell_col(lat: Column, lon: Column, res: int) -> Column:

@@ -22,12 +22,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.geo import RES_SHIFT, I_SHIFT, IJ_MASK, EARTH_R_M, KNN_RINGS
+from ..functions.geo import (
+    EARTH_R_M,
+    I_SHIFT,
+    IJ_MASK,
+    KNN_K,
+    KNN_RES,
+    KNN_RING,
+    KNN_RINGS,
+    RES_SHIFT,
+)
 from .indexing import grid_cell_col
-
-KNN_RES = 7
-KNN_RING = 2
-KNN_K = 5
 
 
 def haversine_m_col(lat1, lon1, lat2, lon2):
@@ -48,16 +53,15 @@ def expand_query_cells(
     queries: DataFrame,
     res: int = KNN_RES,
     ring: int = KNN_RING,
-    lat_col: str = "qlat",
-    lon_col: str = "qlon",
 ) -> DataFrame:
-    """(query …, cell) × ring offsets → (neighbor cell_id, query …) — JVM-side k-ring."""
+    """(query …, qlat, qlon) × ring offsets → (neighbor cell_id, query …) —
+    JVM-side k-ring."""
     spark = queries.sparkSession
     ny, nx = 1 << res, 1 << (res + 1)
     offsets = spark.range(-ring, ring + 1).select(F.col("id").alias("di")).crossJoin(
         spark.range(-ring, ring + 1).select(F.col("id").alias("dj"))
     )
-    q = queries.withColumn("qcell", grid_cell_col(F.col(lat_col), F.col(lon_col), res))
+    q = queries.withColumn("qcell", grid_cell_col(F.col("qlat"), F.col("qlon"), res))
     qi = F.shiftright(F.col("qcell"), I_SHIFT).bitwiseAND(F.lit(IJ_MASK))
     qj = F.col("qcell").bitwiseAND(F.lit(IJ_MASK))
     expanded = (

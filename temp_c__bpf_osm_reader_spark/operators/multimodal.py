@@ -49,7 +49,7 @@ def _map_images(spark: SparkSession, sf_dir: str, kernel, schema: str,
     per image: the `keep` columns passed through, then the kernel's columns
     (1-D results as scalar columns, 2-D results as array columns). Rows come
     out grouped by shape within each batch; no operator depends on order."""
-    images = read_parquet(spark, fixtures.ensure_images(fixtures.n_images_for_sf(sf_dir)))
+    images = fixtures.read_fixture(spark, sf_dir, fixtures.ensure_images)
 
     def gen(batches):
         for pdf in batches:

@@ -16,6 +16,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import read_parquet
+from ..sources import fixtures, fixtures_text
+
+
+def _eav(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return fixtures.read_fixture(spark, sf_dir, fixtures_text.ensure_eav_all)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -30,12 +35,12 @@ def _cents(col) -> F.Column:
 
 # ------------------------------------------------------- D11: typed-member dispatch
 
-def typed_members(spark: SparkSession, sf_dir: str, collections_path: str) -> DataFrame:
+def typed_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wire-form members (collection_id, order_, member_type, member_ref, role)
     → the rel_mem-shaped sparse table (pbf2sqlite.c:811-857 dispatch;
     FIXTURES.md §4): exactly one of image_id/polygon_id/sub_collection_id
     non-null per row, image refs resolved to their string ids."""
-    mem = read_parquet(spark, collections_path)
+    mem = fixtures.read_fixture(spark, sf_dir, fixtures.ensure_collections)
     t = F.col("member_type")
     return mem.select(
         "collection_id",
@@ -118,9 +123,9 @@ def caption_kv(images: DataFrame) -> DataFrame:
     )
 
 
-def tag_pivot(spark: SparkSession, sf_dir: str, images_path: str) -> DataFrame:
+def tag_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EAV → wide via max(CASE) pivot — post_process/addr.sql:19-42 shape."""
-    images = read_parquet(spark, images_path)
+    images = fixtures.read_fixture(spark, sf_dir, fixtures.ensure_images)
     eav = caption_kv(images)
     return (
         eav.groupBy("image_id")
@@ -133,9 +138,9 @@ def tag_pivot(spark: SparkSession, sf_dir: str, images_path: str) -> DataFrame:
     )
 
 
-def caption_semi_join(spark: SparkSession, sf_dir: str, images_path: str) -> DataFrame:
+def caption_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Images that have tag q >= 8 — semi-join against the EAV (addr.sql Q2)."""
-    images = read_parquet(spark, images_path)
+    images = fixtures.read_fixture(spark, sf_dir, fixtures.ensure_images)
     eav = caption_kv(images)
     keys = eav.filter((F.col("k") == "q") & (F.col("v").cast("int") >= 8)).select("image_id")
     return images.join(keys, "image_id", "left_semi").select("image_id", "caption")
@@ -143,10 +148,10 @@ def caption_semi_join(spark: SparkSession, sf_dir: str, images_path: str) -> Dat
 
 # ---------------------------------------------------------------- Q1: null scan
 
-def null_scan(spark: SparkSession, sf_dir: str, meta_path: str) -> DataFrame:
+def null_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality scan over the corrupt EAV fixture —
     queries-null-values-in-tag.sql:1-8."""
-    meta = read_parquet(spark, meta_path)
+    meta = fixtures.read_fixture(spark, sf_dir, fixtures_text.ensure_meta_corrupt)
     return meta.filter(F.col("k").isNull() | F.col("v").isNull()).select(
         "image_id", "k", "v"
     )
@@ -318,7 +323,7 @@ def events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 ADDR_PIVOT_KEYS = ("name", "place", "style", "q", "noun", "kind")
 
 
-def addr_pivot_union(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFrame:
+def addr_pivot_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's flagship SQL workload (post_process/addr.sql:18-90)
     rebuilt 1:1: for EACH entity type (image/polygon/collection, the
     nod/way/rel analogue), keep entities having the gate key (k='place', the
@@ -329,7 +334,7 @@ def addr_pivot_union(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFra
     Plan shape at scale: per branch one shuffle on the entity id (semi-join
     gate broadcasts the small key set; pivot is a hash agg over the same
     key) — the union is free (no barrier)."""
-    eav = read_parquet(spark, eav_path)
+    eav = _eav(spark, sf_dir)
     id_cols = ("image_id", "polygon_id", "collection_id")
     branches = []
     for ent in id_cols:
@@ -399,13 +404,7 @@ def cube_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ queries/rel.sql + denotation-count
 
-def rel_tag_freq(
-    spark: SparkSession,
-    sf_dir: str,
-    collections_path: str,
-    eav_path: str,
-    rel_of: int = 1,
-) -> DataFrame:
+def rel_tag_freq(spark: SparkSession, sf_dir: str, rel_of: int = 1) -> DataFrame:
     """1:1 twin of the reference's per-relation member→tag frequency query
     (queries/rel.sql:10-50): pin ONE collection (rel_of, the rel.sql
     `rel_of = 12120978` analogue), join each member-type branch of its
@@ -418,10 +417,10 @@ def rel_tag_freq(
 
     Plan: the pinned collection's members are a handful of rows → broadcast;
     the EAV side never shuffles except the per-branch GROUP BY k."""
-    mem = typed_members(spark, sf_dir, collections_path).filter(
+    mem = typed_members(spark, sf_dir).filter(
         F.col("collection_id") == rel_of
     )
-    eav = read_parquet(spark, eav_path)
+    eav = _eav(spark, sf_dir)
     branches = []
     for el, mcol, ecol in (
         ("img", "image_id", "image_id"),
@@ -442,13 +441,13 @@ def rel_tag_freq(
     return out
 
 
-def denotation_count(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFrame:
+def denotation_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1:1 twin of queries/denotation-count.sql:1-9: conditional non-null
     counts of the three sparse id columns for one key — here k='name' (the
     fixture's sparse cross-entity key, playing 'denotation').
     One filter + one all-null-group aggregate; count(col) skips NULLs in
     both engines."""
-    eav = read_parquet(spark, eav_path)
+    eav = _eav(spark, sf_dir)
     return eav.filter(F.col("k") == "name").agg(
         F.count("image_id").alias("n_img"),
         F.count("polygon_id").alias("n_pol"),
@@ -458,7 +457,7 @@ def denotation_count(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFra
 
 # --------------------------- queries/ISO3166-1-countries.sql + route family
 
-def iso3166_countries(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFrame:
+def iso3166_countries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1:1 transcription of queries/ISO3166-1-countries.sql:1-33 — the
     reference's only FULL OUTER JOIN plus its N-way left-self-join wide-row
     assembly, in one query: node-side and rel-side `k='ISO3166-1'` tag slices
@@ -471,7 +470,7 @@ def iso3166_countries(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFr
     name lookup is a left join on the entity id — AQE broadcasts the filtered
     slices when small, and at 10^12-row EAV scale all six joins share the
     entity-id shuffle key, so co-partitioning carries across stages."""
-    eav = read_parquet(spark, eav_path)
+    eav = _eav(spark, sf_dir)
     iso = eav.filter(F.col("k") == "ISO3166-1")
     n = iso.filter(F.col("image_id").isNotNull()).select(
         F.col("v").alias("n_v"), F.col("image_id").alias("nod_id")
@@ -500,7 +499,7 @@ def iso3166_countries(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFr
     )
 
 
-def iso3166_node(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFrame:
+def iso3166_node(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1:1 transcription of queries/ISO3166-1-node.sql:16-47 (the live,
     uncommented SELECT) — the node-keyed variant of the countries query: the
     `k='ISO3166-1'` node slice, minus two pinned "wrong" node ids (the
@@ -516,7 +515,7 @@ def iso3166_node(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFrame:
     Plan shape at scale: all five probe sides are (k = const) pushed-down
     slices sharing image_id as the join key — one co-partitioning, and AQE
     broadcasts each slice at tag-key density."""
-    eav = read_parquet(spark, eav_path)
+    eav = _eav(spark, sf_dir)
     iso = eav.filter(
         (F.col("k") == "ISO3166-1")
         & F.col("image_id").isNotNull()
@@ -537,7 +536,7 @@ def iso3166_node(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFrame:
     return out.select("nod_id", "v", "n", "wd", "en_n", "de_n", "place")
 
 
-def route_wide(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFrame:
+def route_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1:1 transcription of queries/route.sql:1-20 — the reference's
     join-per-key EAV wide-row assembly (the second workhorse pattern after
     the max-CASE pivot): five left self-joins of `tag` on rel_id, each pinned
@@ -548,7 +547,7 @@ def route_wide(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFrame:
     All five joins share rel_id as the join key — one co-partitioning, five
     probe sides; every probe side is a (k = const) filtered slice that AQE
     broadcasts at this density."""
-    eav = read_parquet(spark, eav_path).filter(F.col("collection_id").isNotNull())
+    eav = _eav(spark, sf_dir).filter(F.col("collection_id").isNotNull())
 
     def tag_slice(alias: str, key: str) -> DataFrame:
         return eav.filter(F.col("k") == key).select(
@@ -571,13 +570,7 @@ def route_wide(spark: SparkSession, sf_dir: str, eav_path: str) -> DataFrame:
     )
 
 
-def rel_member_tags(
-    spark: SparkSession,
-    sf_dir: str,
-    collections_path: str,
-    eav_path: str,
-    rel_of: int = 1,
-) -> DataFrame:
+def rel_member_tags(spark: SparkSession, sf_dir: str, rel_of: int = 1) -> DataFrame:
     """1:1 transcription of queries/rel-12120978.sql:1-15 — one relation's
     node members left-joined to two pinned-key tag slices, with the
     CAST-to-integer ordering key materialized as a column (`ref_int`; the
@@ -585,10 +578,10 @@ def rel_member_tags(
     the capability is value-checked, row order being irrelevant to the
     comparison). Mapping: rel_mem→collections members, rel_of→collection_id,
     ref→'q' (numeric-string tag), answer→'noun'."""
-    mem = typed_members(spark, sf_dir, collections_path).filter(
+    mem = typed_members(spark, sf_dir).filter(
         (F.col("collection_id") == rel_of) & F.col("image_id").isNotNull()
     ).select(F.col("image_id").alias("nod_id"))
-    eav = read_parquet(spark, eav_path)
+    eav = _eav(spark, sf_dir)
 
     def tag_slice(alias: str, key: str) -> DataFrame:
         return eav.filter((F.col("k") == key) & F.col("image_id").isNotNull()).select(
@@ -606,13 +599,7 @@ def rel_member_tags(
     )
 
 
-def ref_query_pack(
-    spark: SparkSession,
-    sf_dir: str,
-    images_path: str,
-    eav_path: str,
-    collections_path: str,
-) -> DataFrame:
+def ref_query_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's small ad-hoc `queries/` corpus, transcribed 1:1 into
     one uniform (query, c1, c2, cnt) table — a user of the reference can run
     every one of these today; this is their home here. Sources map
@@ -697,8 +684,8 @@ def ref_query_pack(
     """
     from ..operators import indexing
 
-    eav = read_parquet(spark, eav_path)
-    images = read_parquet(spark, images_path)
+    eav = _eav(spark, sf_dir)
+    images = fixtures.read_fixture(spark, sf_dir, fixtures.ensure_images)
     pts = indexing.geolocate_expr(images.select("image_id", "phash"))
     S = lambda x: F.lit(x).cast("string")  # noqa: E731
     NL = F.lit(None).cast("string")
@@ -720,7 +707,7 @@ def ref_query_pack(
         ),
         images.agg(F.count(F.lit(1)).alias("n")).select(*pack("count_objects", S("images"), NL, F.col("n"))),
         eav.agg(F.countDistinct("polygon_id").alias("n")).select(*pack("count_objects", S("polygons"), NL, F.col("n"))),
-        read_parquet(spark, collections_path)
+        fixtures.read_fixture(spark, sf_dir, fixtures.ensure_collections)
         .agg(F.countDistinct("collection_id").alias("n"))
         .select(*pack("count_objects", S("collections"), NL, F.col("n"))),
         eav.agg(F.count(F.lit(1)).alias("n")).select(*pack("count_objects", S("tags"), NL, F.col("n"))),

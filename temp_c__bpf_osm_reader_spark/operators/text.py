@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import read_parquet
+from ..sources import fixtures
 
 STOPWORDS = {
     "en": ["the", "a", "of"],
@@ -112,9 +113,9 @@ def exact_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def caption_exact_dedup(spark: SparkSession, sf_dir: str, images_path: str) -> DataFrame:
+def caption_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact caption dedup over the images fixture (dup clusters by design)."""
-    images = read_parquet(spark, images_path)
+    images = fixtures.read_fixture(spark, sf_dir, fixtures.ensure_images)
     return (
         images.select("image_id", F.md5("caption").alias("fp"))
         .groupBy("fp")

@@ -20,7 +20,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from ..functions import geo
+from ..functions.geo import KNN_K, KNN_RING
 from ..functions.hashing import splitmix64
+from ..session import read_parquet
 from . import blocks as blocks_mod
 from .images import generate_images
 from .polygons import generate_polygons
@@ -38,10 +40,6 @@ def _default_data_dir() -> str:
 DATA_DIR = _default_data_dir()
 
 SEED = 42
-KNN_K = 5
-KNN_RES = 7
-KNN_RING = 2
-PIP_RES = 8  # kept in sync with operators/spatial_join.PIP_RES (measured default)
 
 
 def n_images_for_sf(sf_dir: str) -> int:
@@ -54,6 +52,11 @@ def n_images_for_sf(sf_dir: str) -> int:
 
 def n_polygons_for(n_images: int) -> int:
     return min(200, max(60, int(60 * (n_images / 1060) ** 0.5)))
+
+
+def read_fixture(spark, sf_dir: str, ensure):
+    """Open the table `ensure(n)` writes for the image count of sf_dir."""
+    return read_parquet(spark, ensure(n_images_for_sf(sf_dir)))
 
 
 # ---------------------------------------------------------------- writers

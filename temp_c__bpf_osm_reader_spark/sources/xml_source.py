@@ -8,9 +8,8 @@ was decode equivalence between the two formats over the same entities
   * `write_osm_xml` emits the SAME logical entities as the blocks fixture
     (sources/blocks.py) as standard-shaped `.osm` files, sharded like PBF
     blocks (one file per 1000 entities);
-  * `read_xml_nodes` / `read_xml_tags` parse them distributedly —
-    `spark.read.format("binaryFile")` over the shard files, one
-    xml.etree parse per file inside mapInPandas (files are the parallel
+  * `spark.read.format("osmxml")` (sources/osm_datasource.py) parses them
+    distributedly, one shard file per partition (files are the parallel
     unit, exactly as PBF blocks are);
   * cross-format equivalence `decode(xml) == decode(blocks)` is a driver-
     checked oracle query (api.py: `xml_nodes`, `xml_tags` — DuckDB decodes
@@ -75,71 +74,3 @@ def ensure_xml(n: int) -> str:
         write_osm_xml(images, out_dir)
         open(done, "w").close()
     return out_dir
-
-
-def _parsed(spark, xml_dir: str):
-    """binaryFile scan of the shards → mapInPandas XML parse (file = task)."""
-    # pathGlobFilter on the directory, NOT a glob in the path: a glob path
-    # makes FileStreamSink.hasMetadata stat the literal "*.osm" and log a
-    # FileNotFoundException stack at WARN on every load (harmless but noisy —
-    # it polluted the round-1 bench artifact)
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.osm")
-        .load(xml_dir)
-        .select("path", "content")
-    )
-
-
-def read_xml_nodes(spark, xml_dir: str):
-    """→ (id, image_id, lat, lon) — distributed .osm parse."""
-    import xml.etree.ElementTree as ET
-
-    def gen(batches):
-        for pdf in batches:
-            out_id, out_img, out_lat, out_lon = [], [], [], []
-            for blob in pdf["content"]:
-                for node in ET.fromstring(bytes(blob)).iter("node"):
-                    out_id.append(int(node.get("id")))
-                    out_img.append(node.get("user"))
-                    # identical int/1e7 arithmetic as the blocks decoder →
-                    # bit-equal doubles across formats
-                    out_lat.append(round(float(node.get("lat")) * SCALE) / SCALE)
-                    out_lon.append(round(float(node.get("lon")) * SCALE) / SCALE)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out_id, dtype="int64"),
-                    "image_id": pd.Series(out_img, dtype=object),
-                    "lat": pd.Series(out_lat, dtype="float64"),
-                    "lon": pd.Series(out_lon, dtype="float64"),
-                }
-            )
-
-    return _parsed(spark, xml_dir).mapInPandas(
-        gen, schema="id long, image_id string, lat double, lon double"
-    )
-
-
-def read_xml_tags(spark, xml_dir: str):
-    """→ (image_id, k, v) — the EAV side of the XML parse."""
-    import xml.etree.ElementTree as ET
-
-    def gen(batches):
-        for pdf in batches:
-            img, ks, vs = [], [], []
-            for blob in pdf["content"]:
-                for node in ET.fromstring(bytes(blob)).iter("node"):
-                    u = node.get("user")
-                    for tag in node.iter("tag"):
-                        img.append(u)
-                        ks.append(tag.get("k"))
-                        vs.append(tag.get("v"))
-            yield pd.DataFrame(
-                {
-                    "image_id": pd.Series(img, dtype=object),
-                    "k": pd.Series(ks, dtype=object),
-                    "v": pd.Series(vs, dtype=object),
-                }
-            )
-
-    return _parsed(spark, xml_dir).mapInPandas(gen, schema="image_id string, k string, v string")

@@ -159,33 +159,6 @@ def test_ann_recall_ivf_threshold(spark):
     assert (pdf["recall"] >= 0.4).all()
 
 
-def test_osmxml_datasource_matches_mapinpandas(spark):
-    """The Python DataSource V2 connector and the binaryFile+mapInPandas
-    parse must produce identical rows (both decode paths of SURVEY §5.2)."""
-    import pandas as pd
-
-    from temp_c__bpf_osm_reader_spark.sources import osm_datasource, xml_source
-
-    osm_datasource.register(spark)
-    d = xml_source.ensure_xml(1060)
-    ds = (
-        spark.read.format("osmxml").option("what", "nodes").load(d)
-        .toPandas().sort_values("id", ignore_index=True)
-    )
-    mp = xml_source.read_xml_nodes(spark, d).toPandas().sort_values(
-        "id", ignore_index=True
-    )
-    pd.testing.assert_frame_equal(ds, mp)
-    dt = (
-        spark.read.format("osmxml").option("what", "tags").load(d)
-        .toPandas().sort_values(["image_id", "k", "v"], ignore_index=True)
-    )
-    mt = xml_source.read_xml_tags(spark, d).toPandas().sort_values(
-        ["image_id", "k", "v"], ignore_index=True
-    )
-    pd.testing.assert_frame_equal(dt, mt)
-
-
 def test_osmxml_filter_pushdown_prunes_shards(spark):
     """An id predicate must reach the Python source and prune whole shard
     files (the Python-source analogue of Parquet row-group pruning)."""
