@@ -31,10 +31,6 @@ def n_clips_for(n_images: int) -> int:
     return max(200, n_images // 10)
 
 
-def audio_path(n: int) -> str:
-    return os.path.join(fixtures.DATA_DIR, f"audio_{n}.parquet")
-
-
 def clip_samples(i: int) -> np.ndarray:
     """int16 samples of clip i (frozen spec — the golden replays it in
     plain python)."""
@@ -49,7 +45,7 @@ def clip_samples(i: int) -> np.ndarray:
 
 
 def ensure_audio(n: int) -> str:
-    path = audio_path(n)
+    path = os.path.join(fixtures.DATA_DIR, f"audio_{n}.parquet")
     if os.path.exists(path):
         return path
     ids, blobs, srs, lens = [], [], [], []

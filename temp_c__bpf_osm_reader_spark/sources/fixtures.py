@@ -100,12 +100,8 @@ def ensure_images(n: int) -> str:
     return p
 
 
-def polygons_path(m: int) -> str:
-    return os.path.join(DATA_DIR, f"polygons_{m}.parquet")
-
-
 def ensure_polygons(m: int) -> str:
-    p = polygons_path(m)
+    p = os.path.join(DATA_DIR, f"polygons_{m}.parquet")
     if not os.path.exists(p):
         df = generate_polygons(m, seed=SEED)
         schema = pa.schema(
@@ -127,12 +123,8 @@ def ensure_polygons(m: int) -> str:
 GEO_TAG = "x2"
 
 
-def blocks_path(n: int) -> str:
-    return os.path.join(DATA_DIR, f"blocks_{n}_{GEO_TAG}.parquet")
-
-
 def ensure_blocks(n: int) -> str:
-    p = blocks_path(n)
+    p = os.path.join(DATA_DIR, f"blocks_{n}_{GEO_TAG}.parquet")
     if not os.path.exists(p):
         images = pd.read_parquet(ensure_images(n))
         df = blocks_mod.encode_blocks(images)
@@ -151,15 +143,11 @@ def ensure_blocks(n: int) -> str:
     return p
 
 
-def way_blocks_path(n: int) -> str:
-    return os.path.join(DATA_DIR, f"way_blocks_{n}.parquet")
-
-
 def ensure_way_blocks(n: int) -> str:
     """Way-stream blocks (refs zigzag-delta-coded within each way) — input of
     operators/decode.decode_way_refs. Content is pure arithmetic on ordinals
     (no geo spec dependency), so no GEO_TAG in the name."""
-    p = way_blocks_path(n)
+    p = os.path.join(DATA_DIR, f"way_blocks_{n}.parquet")
     if not os.path.exists(p):
         df = blocks_mod.encode_way_blocks(n)
         schema = pa.schema(
@@ -173,15 +161,11 @@ def ensure_way_blocks(n: int) -> str:
     return p
 
 
-def rel_blocks_path(n: int) -> str:
-    return os.path.join(DATA_DIR, f"rel_blocks_{n}.parquet")
-
-
 def ensure_rel_blocks(n: int) -> str:
     """Relation-stream blocks (memids zigzag-delta-coded within each relation,
     typed member dispatch + role string table) — input of
     operators/decode.decode_rel_members. Pure arithmetic on ordinals."""
-    p = rel_blocks_path(n)
+    p = os.path.join(DATA_DIR, f"rel_blocks_{n}.parquet")
     if not os.path.exists(p):
         df = blocks_mod.encode_rel_blocks(n)
         schema = pa.schema(
@@ -200,13 +184,9 @@ def ensure_rel_blocks(n: int) -> str:
 
 # ---------------------------------------------------------------- goldens
 
-def golden_geo_path(n: int) -> str:
-    return os.path.join(DATA_DIR, f"golden_geo_{n}_{GEO_TAG}.parquet")
-
-
 def ensure_golden_geo(n: int) -> str:
     """image_id, lat, lon, cell_r7/r8/r9, zcell_l12 — straight numpy, no Spark."""
-    p = golden_geo_path(n)
+    p = os.path.join(DATA_DIR, f"golden_geo_{n}_{GEO_TAG}.parquet")
     if not os.path.exists(p):
         images = pd.read_parquet(ensure_images(n))
         lat, lon = geo.latlon_from_phash(images["phash"].to_numpy(), images["image_id"].to_numpy())
@@ -225,13 +205,9 @@ def ensure_golden_geo(n: int) -> str:
     return p
 
 
-def golden_pip_path(n: int, m: int) -> str:
-    return os.path.join(DATA_DIR, f"golden_pip_{n}_{m}_{GEO_TAG}.parquet")
-
-
 def ensure_golden_pip(n: int, m: int) -> str:
     """Brute-force all-points × all-polygons PIP — no prefilter, the exact row set."""
-    p = golden_pip_path(n, m)
+    p = os.path.join(DATA_DIR, f"golden_pip_{n}_{m}_{GEO_TAG}.parquet")
     if not os.path.exists(p):
         gg = pd.read_parquet(ensure_golden_geo(n))
         polys = pd.read_parquet(ensure_polygons(m))
@@ -251,17 +227,13 @@ def ensure_golden_pip(n: int, m: int) -> str:
     return p
 
 
-def golden_regions_path(n: int) -> str:
-    return os.path.join(DATA_DIR, f"golden_regions_{n}_{GEO_TAG}.parquet")
-
-
 def ensure_golden_regions(n: int, res: int = 8) -> str:
     """4-connected raster regions — sequential union-find, the independent
     twin of operators/raster.polygonize (which labels by distributed
     min-label propagation + pointer jumping).  Adjacency: col wraps mod nx,
     rows clamp; region_id = min packed (i<<27)|j key of the component;
     j-bbox is plain min/max (NOT wrap-corrected — same spec both sides)."""
-    p = golden_regions_path(n)
+    p = os.path.join(DATA_DIR, f"golden_regions_{n}_{GEO_TAG}.parquet")
     if not os.path.exists(p):
         gg = pd.read_parquet(ensure_golden_geo(n))
         cells = gg[f"cell_r{res}"].to_numpy()
@@ -321,10 +293,6 @@ def ensure_golden_regions(n: int, res: int = 8) -> str:
     return p
 
 
-def golden_knn_path(n: int) -> str:
-    return os.path.join(DATA_DIR, f"golden_knn_{n}_{GEO_TAG}.parquet")
-
-
 def ensure_golden_knn(n: int) -> str:
     """Ring-bounded kNN golden, brute force per query (spec in operators/knn.py).
 
@@ -332,7 +300,7 @@ def ensure_golden_knn(n: int) -> str:
     cell lies in k_ring(query_cell, 2), excluding the query itself. Rank by
     (haversine_m, neighbor_image_id), keep k=5.
     """
-    p = golden_knn_path(n)
+    p = os.path.join(DATA_DIR, f"golden_knn_{n}_{GEO_TAG}.parquet")
     if not os.path.exists(p):
         gg = pd.read_parquet(ensure_golden_geo(n))
         lat = gg["lat"].to_numpy()
@@ -402,17 +370,13 @@ def ensure_all_for_sf(sf_dir: str) -> dict[str, str]:
     }
 
 
-def collections_path(n: int) -> str:
-    return os.path.join(DATA_DIR, f"collections_{n}.parquet")
-
-
 def ensure_collections(n: int) -> str:
     """Wire-form typed-membership fixture — the rel_mem analogue
     (pbf2sqlite.c:430-439; member-type enum osmformat.proto:245-249):
     (collection_id, order_, member_type {0=image,1=polygon,2=collection},
     member_ref, role). The engine's D11 dispatch routes member_ref into
     sparse typed columns; roles cycle like OSM's outer/inner/label."""
-    p = collections_path(n)
+    p = os.path.join(DATA_DIR, f"collections_{n}.parquet")
     if not os.path.exists(p):
         m = n_polygons_for(n)
         n_coll = max(n // 80, 3)
@@ -447,10 +411,6 @@ def n_dup_vecs_for(n_images: int) -> int:
     return max(1000, n_images // 10)
 
 
-def emb_dups_path(n: int) -> str:
-    return os.path.join(DATA_DIR, f"emb_dups_{n}.parquet")
-
-
 def ensure_emb_dups(n: int) -> str:
     """Embedding table with PLANTED near-duplicates: every vec_id % 4 == 1 is
     a tiny-noise copy of its predecessor (cosine ≈ 0.9994); all other pairs
@@ -459,7 +419,7 @@ def ensure_emb_dups(n: int) -> str:
     bucketed near-dup EXACT on this table: the planted pairs collide in ≥1
     band with probability 1 - ~1e-17, the background never crosses the
     refine threshold. Generation asserts both margins."""
-    path = emb_dups_path(n)
+    path = os.path.join(DATA_DIR, f"emb_dups_{n}.parquet")
     if os.path.exists(path):
         return path
     dim = EMB_DUPS_DIM

@@ -413,24 +413,6 @@ def ensure_meta_corrupt(n: int) -> str:
     return p
 
 
-def golden_recall_srp_path(
-    sf_dir: str,
-    k: int = 10,
-    query_mod: int = 20,
-    seed: int = 1234,
-    probe_hamming: int = 2,
-) -> str:
-    """Cache filename keyed by EVERY parameter that changes the golden's
-    content (k, query_mod, seed, probe radius) — a default change can't
-    silently reuse a stale replay. (The bits scaling law is keyed implicitly:
-    it is a pure function of n, which sf_dir pins.)"""
-    base = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        fixtures.DATA_DIR,
-        f"golden_recall_srp_{base}_k{k}_m{query_mod}_s{seed}_h{probe_hamming}.parquet",
-    )
-
-
 def ensure_golden_recall_srp(
     sf_dir: str,
     k: int = 10,
@@ -446,9 +428,16 @@ def ensure_golden_recall_srp(
 
     Dot products are LEFT FOLDS in array order (one accumulation per
     dimension) — the exact arithmetic of Spark's aggregate(zip_with(...)),
-    not a BLAS matmul."""
-    p = golden_recall_srp_path(
-        sf_dir, k=k, query_mod=query_mod, seed=seed, probe_hamming=probe_hamming
+    not a BLAS matmul.
+
+    The cache filename is keyed by EVERY parameter that changes the
+    golden's content, so a default change can't silently reuse a stale
+    replay. (The bits scaling law is keyed implicitly: it is a pure
+    function of n, which sf_dir pins.)"""
+    base = os.path.basename(os.path.normpath(sf_dir))
+    p = os.path.join(
+        fixtures.DATA_DIR,
+        f"golden_recall_srp_{base}_k{k}_m{query_mod}_s{seed}_h{probe_hamming}.parquet",
     )
     if not os.path.exists(p):
         import numpy as np
@@ -522,22 +511,6 @@ def ensure_golden_recall_srp(
     return p
 
 
-def golden_recall_ivf_path(
-    sf_dir: str,
-    k: int = 10,
-    query_mod: int = 20,
-    centroid_mod: int = 50,
-    nprobe: int = 6,  # lockstep with similarity.IVF_NPROBE (import cycle)
-) -> str:
-    """Cache filename keyed by every content-changing parameter (same
-    discipline as golden_recall_srp_path)."""
-    base = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        fixtures.DATA_DIR,
-        f"golden_recall_ivf_{base}_k{k}_m{query_mod}_c{centroid_mod}_p{nprobe}.parquet",
-    )
-
-
 def ensure_golden_recall_ivf(
     sf_dir: str,
     k: int = 10,
@@ -555,9 +528,12 @@ def ensure_golden_recall_ivf(
     Spark's Arrow-batched UDFs agree bit-for-bit).
 
     Dot products are LEFT FOLDS in array order, like every numpy twin of a
-    Spark aggregate(zip_with(...))."""
-    p = golden_recall_ivf_path(
-        sf_dir, k=k, query_mod=query_mod, centroid_mod=centroid_mod, nprobe=nprobe
+    Spark aggregate(zip_with(...)). The cache filename is keyed by every
+    content-changing parameter (as in ensure_golden_recall_srp)."""
+    base = os.path.basename(os.path.normpath(sf_dir))
+    p = os.path.join(
+        fixtures.DATA_DIR,
+        f"golden_recall_ivf_{base}_k{k}_m{query_mod}_c{centroid_mod}_p{nprobe}.parquet",
     )
     if not os.path.exists(p):
         import numpy as np
