@@ -42,13 +42,6 @@ def main() -> None:
         "cluster must not get a smaller task graph",
     )
     ap.add_argument(
-        "--pip-res",
-        type=int,
-        default=None,
-        help="cell resolution of the PIP classified cover (default "
-        "spatial_join.PIP_RES); finer = fewer ray casts, 4x cover rows/level",
-    )
-    ap.add_argument(
         "--snapshot-dir",
         default=None,
         help="run the pipeline as snapshot-committed stages with per-partition "
@@ -68,7 +61,7 @@ def main() -> None:
 
     # partitions follow the data when not pinned: ~50k points per partition,
     # capped by the task-slot multiple — a tiny input must not pay a
-    # 128-partition stats/bounds fixed cost (scaling runs always pin this)
+    # 128-partition stats fixed cost (scaling runs always pin this)
     n_points_est = fixtures.n_images_for_sf(args.sf_dir) * max(args.replicate, 1)
     n_parts = args.partitions or min(args.cores * 4, max(8, n_points_est // 50_000))
     fx = fixtures.ensure_all_for_sf(args.sf_dir)
@@ -122,23 +115,9 @@ def main() -> None:
     # materialization); lat/lon ride through the shuffle so ONE cached
     # dataset serves tile stats, order assignment, checksum, and the PIP
     # join — one cache fill + one full pass fewer than the unfused form.
-    # Range bounds for the tile shuffle, from a BOUNDED prefix sample of the
-    # base table through the SAME frozen numpy spec (the role Iceberg
-    # manifest statistics play on a real lakehouse; O(files) driver work,
-    # never O(table)): repartitionByRange would instead SAMPLE its input — a
-    # second full geolocate pass per run. Bounds only affect balance, never
-    # placement correctness (searchsorted routing).
-    bounds = indexing.sample_cell_bounds(
-        fx["images"], n_parts, res=7,
-        id_suffix="#0" if args.replicate > 1 else "",
-    )
-    # Precompiled slot-map router (indexing.CellRouter): broadcast
-    # slot->bucket table built ONCE from the bounds (driver O(32k)); routing
-    # is then an O(1) probe per row at any partition count. Built in setup
-    # for the same reason bounds are: on a lakehouse both derive from table
-    # statistics, amortized across the job.
-    router = indexing.CellRouter(spark, bounds, n_parts, res=7)
-
+    # No precomputed bounds: repartitionByRange samples the geolocated
+    # input, a JVM-only pass (tile_assignment_scalable docstring).
+    #
     # pre-compile the pipeline's PLAN SHAPES on a tiny sample (stats agg,
     # broadcast order join, checksum agg, PIP join): whole-stage-codegen
     # Janino compilation + JVM JIT are driver/JVM one-time costs a
@@ -150,41 +129,33 @@ def main() -> None:
         "image_id", "lat", "lon"
     )
     warm_tiles, warm_rp = indexing.tile_assignment_scalable(
-        warm_pts, 7, partitions=n_parts, keep_cols=("lat", "lon"),
-        return_rp=True, router=router,
+        warm_pts, 7, partitions=n_parts, keep_cols=("lat", "lon"), return_rp=True
     )
     warm_tiles.select(
         F.sum(F.hash("cell_id", "image_id", "order_").cast("bigint")),
         F.count(F.lit(1)),
     ).collect()
-    pip_res = args.pip_res or spatial_join.PIP_RES
     # polygon-layer statistics, built once in setup (lakehouse role: layer
     # metadata amortized across joins): classified cover + edge table
-    pip_cover = spatial_join.polygon_cover(spark, polys, pip_res)
+    pip_cover = spatial_join.polygon_cover(spark, polys)
     pip_edges = spatial_join._polygon_edges(spark, polys)
     spatial_join.pip_join(
-        warm_rp.select("image_id", "lat", "lon"), polys, res=pip_res,
-        cover=pip_cover, edges=pip_edges,
+        warm_rp.select("image_id", "lat", "lon"), polys, cover=pip_cover, edges=pip_edges
     ).count()
     warm_rp.unpersist()
 
     region_start_ms = int(time.time() * 1000)
     t0 = time.time()
-    # the whole map side — geolocate, cell, slot probe, route — is one
-    # whole-stage-codegen stage; the timed region runs no Python stage
+    # the whole map side — geolocate, cell, range route — is JVM
+    # expressions; the timed region runs no Python stage
     points = indexing.geolocate_expr(images).select("image_id", "lat", "lon")
     tiles, rp = indexing.tile_assignment_scalable(
-        points,
-        7,
-        partitions=n_parts,
-        keep_cols=("lat", "lon"),
-        return_rp=True,
-        router=router,
+        points, 7, partitions=n_parts, keep_cols=("lat", "lon"), return_rp=True
     )
     # sub-phase split for scaling diagnosis: tile_stats is the first action
-    # (geolocate → routed shuffle → sort → cache fill → per-(pid,cell)
-    # stats collect); tile_order is the second (cache read → broadcast
-    # order join → checksum agg)
+    # (range sample → geolocate → range shuffle → sort → cache fill →
+    # per-(pid,cell) stats collect); tile_order is the second (cache read →
+    # broadcast order join → checksum agg)
     t_mid = time.time()
     checksum, n_tiles = tiles.select(
         F.sum(F.hash("cell_id", "image_id", "order_").cast("bigint")).alias("s"),
@@ -198,8 +169,7 @@ def main() -> None:
     # PIP reads the SAME cached range-shuffled frame the tile stage built —
     # no second materialization of the points
     pip = spatial_join.pip_join(
-        rp.select("image_id", "lat", "lon"), polys, res=pip_res,
-        cover=pip_cover, edges=pip_edges,
+        rp.select("image_id", "lat", "lon"), polys, cover=pip_cover, edges=pip_edges
     )
     n_pip = pip.count()
     timings["pip_join"] = round(time.time() - t0, 3)
@@ -231,7 +201,7 @@ def main() -> None:
             "tiles",
             lambda: indexing.tile_assignment_scalable(pts_s, 7, partitions=n_parts),
         )
-        sp.run_stage("pip", lambda: spatial_join.pip_join(pts_s, polys, res=pip_res))
+        sp.run_stage("pip", lambda: spatial_join.pip_join(pts_s, polys))
         snapshot = {
             "resumed": resumed,
             "manifests": {n: sp.manifest(n) for n in stage_names},

@@ -18,8 +18,6 @@ from __future__ import annotations
 
 import numpy as np
 
-FORMATS = ("raw", "rle")
-
 
 def quantize_rle(pixels: np.ndarray) -> np.ndarray:
     return (pixels & np.uint8(0xFC)) | np.uint8(0x02)

@@ -86,20 +86,18 @@ def with_cells(df: DataFrame, resolutions=(7, 8, 9), zlevel: int = 12) -> DataFr
     return df
 
 
-def sample_cell_bounds(
-    images_path: str,
-    n_parts: int,
-    res: int = 7,
-    max_rows: int = 8192,
-    id_suffix: str = "",
-) -> list:
+# rows sample_cell_bounds reads, summed over all files of the table
+BOUNDS_SAMPLE_ROWS = 8192
+
+
+def sample_cell_bounds(images_path: str, n_parts: int, res: int = 7) -> list:
     """Range cut points [(cell_id, image_id), ...] for the tile shuffle from
     a BOUNDED driver-side read: row-group batches SPREAD EVENLY across each
-    parquet file, capped at max_rows rows total — O(n_files) driver work and
-    O(max_rows) memory regardless of table size. This plays the role Iceberg
-    manifest statistics play on a real lakehouse; footer min/max stats can't
-    carry the DERIVED cell key (cell = f(phash)), so a bounded scattered
-    sample per file stands in.
+    parquet file, capped at BOUNDS_SAMPLE_ROWS rows total — O(n_files) driver
+    work and O(BOUNDS_SAMPLE_ROWS) memory regardless of table size. This
+    plays the role Iceberg manifest statistics play on a real lakehouse;
+    footer min/max stats can't carry the DERIVED cell key (cell = f(phash)),
+    so a bounded scattered sample per file stands in.
 
     Scattered, not prefix: a prefix sample is only unbiased if key structure
     is uncorrelated with row order, and the Zipf pattern pool violates that
@@ -111,11 +109,8 @@ def sample_cell_bounds(
     routing in tile_assignment_scalable; output equality is pytest-pinned),
     so sampled bounds are exactly as correct as full-column bounds — and
     they remove the O(table) driver read that is a driver OOM at 10^12
-    rows. Deterministic: same files + max_rows -> same bounds, independent
-    of core count (tile_checksum stability across parallelism levels).
-
-    id_suffix: the flagship's replicate mode derives bounds from the '#0'
-    replica's keyspace; the other replicas interleave across the same cuts.
+    rows. Deterministic: same files -> same bounds, independent of core
+    count.
     """
     import glob
     import os
@@ -130,7 +125,7 @@ def sample_cell_bounds(
         paths = sorted(glob.glob(os.path.join(images_path, "*.parquet")))
     else:
         paths = [images_path]
-    per_file = max(64, max_rows // max(1, len(paths)))
+    per_file = max(64, BOUNDS_SAMPLE_ROWS // max(1, len(paths)))
     chunks = []
     for p in paths:
         pf = pq.ParquetFile(p)
@@ -155,7 +150,7 @@ def sample_cell_bounds(
         finally:
             pf.close()
     sample = pd.concat(chunks, ignore_index=True)
-    ids = (sample["image_id"] + id_suffix).tolist()
+    ids = sample["image_id"].tolist()
     lat, lon = geo_fns.latlon_from_phash(sample["phash"].to_numpy(), ids)
     cell = geo_fns.grid_cell(lat, lon, res)
     order = np.lexsort((np.array(ids), cell))
@@ -165,12 +160,11 @@ def sample_cell_bounds(
 
 def tile_assignment_scalable(
     points: DataFrame,
-    res: int = 7,
-    partitions: int | None = None,
+    res: int,
+    partitions: int,
     keep_cols: tuple[str, ...] = (),
     return_rp: bool = False,
     bounds=None,
-    router: "CellRouter | None" = None,
 ):
     """Deterministic (cell_id, image_id, order_) table — byte-for-byte stable
     across runs and parallelism levels (north-rule exactness criterion).
@@ -181,7 +175,7 @@ def tile_assignment_scalable(
     No one-task-per-cell window: at 10^12 rows a hot cell (Zipf head) would
     serialize an entire reducer. Instead:
 
-      1. repartitionByRange(cell_id, image_id) + sortWithinPartitions — hot
+      1. range shuffle on (cell_id, image_id) + sortWithinPartitions — hot
          cells SPAN partitions instead of landing on one;
       2. per-(partition, cell) (count, min monotonic id) → driver (bounded by
          #cells + #partitions because ranges are contiguous) → cross-partition
@@ -190,8 +184,8 @@ def tile_assignment_scalable(
          hash join — entirely JVM-side.
 
     Output equals the numpy rank-by-image_id reference (and the DuckDB
-    tile_assignment oracle) at every partition count, bounds and router —
-    pinned by test_spark_geo.
+    tile_assignment oracle) at every partition count, with and without
+    bounds — pinned by test_spark_geo.
 
     keep_cols: extra point columns carried through the shuffle and emitted
     untouched alongside (cell_id, image_id, order_) — lets downstream
@@ -199,21 +193,22 @@ def tile_assignment_scalable(
     instead of a second materialization of the points (one cache fill and one
     full pass fewer in the fused flagship pipeline).
 
-    bounds: optional precomputed range cut points [(cell_id, image_id), ...]
-    (partitions-1 of them, ascending). repartitionByRange SAMPLES its input to
-    find bounds — a full extra pass over the upstream plan (for the flagship,
-    a second whole geolocate). With bounds supplied, rows route DIRECTLY to
-    their partition through a codegen searchsorted + magic-key hash
-    repartition (magic_partition_keys), skipping the sample pass entirely —
-    the write-time bucketing pattern: on a real lakehouse the bounds come
-    from table statistics (manifests), not a per-job sample. Output is
-    byte-identical as long as bounds are ascending (balance, not placement,
-    is all sampling ever bought). Bounds quality only affects partition
+    The range shuffle takes one of two routes:
+
+      * bounds given — precomputed range cut points [(cell_id, image_id),
+        ...] (partitions-1 of them, ascending; sample_cell_bounds): rows
+        route DIRECTLY to their partition through a codegen searchsorted
+        (bounds_bucket_col) + magic-key hash repartition
+        (magic_partition_keys) — the write-time bucketing pattern, where the
+        bounds come from table statistics, not a per-job sample;
+      * no bounds — repartitionByRange, which samples its input in an extra
+        pass over the upstream plan (geolocate is JVM expressions, so that
+        pass runs no Python).
+
+    Both give byte-identical output; bounds quality only affects partition
     balance, never correctness.
     """
     spark = points.sparkSession
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism * 2
     # Preconditions of the folded _okey broadcast key (step 3 below): pid must
     # fit in 15 bits (sign bit safety) and the low 48 bits of cell_id must be
     # unique per cell, which holds for res <= 15 ((i<<27)|j < 2^42). Violating
@@ -234,17 +229,7 @@ def tile_assignment_scalable(
         F.col("lat"), F.col("lon"), res
     )
     sel = points.select(cell.alias("cell_id"), "image_id", *keep_cols)
-    # auto-build a slot-map router only when the partition count makes the
-    # chained-when searchsorted expensive: the router's driver build +
-    # broadcast costs ~0.4 s, which a 16-partition query pays for nothing
-    # (15 compares/row is cheap); the flagship passes a prebuilt router
-    if router is None and bounds is not None and res <= 8 and partitions > 24:
-        router = CellRouter(spark, bounds, partitions, res=res)
-    if router is not None:
-        rp = router.route(sel).sortWithinPartitions("cell_id", "image_id").cache()
-    elif bounds is not None:
-        # res too fine for a slot map: fall back to the chained-when
-        # searchsorted (O(partitions) per row — fine for small counts)
+    if bounds is not None:
         magic = magic_partition_keys(partitions)
         # LongType matters: HashPartitioning murmur3-hashes an INT over 4
         # bytes but a BIGINT over 8 — magic keys are computed for BIGINT
@@ -385,75 +370,6 @@ def magic_partition_keys(n: int) -> list[int]:
             found[r] = m
         m += 1
     return [found[i] for i in range(n)]
-
-
-class CellRouter:
-    """Precompiled range router for the tile shuffle: slot -> (base bucket,
-    intra-cell image_id cuts) as a BROADCAST map over the res-r linear cell
-    grid (2^(2r+1) slots; 32k at res 7). Routing a row is then an O(1)
-    broadcast-join probe + at most a couple of string compares (only for
-    rows in one of the <= partitions-1 cut cells) — independent of the
-    partition count, unlike the chained-when searchsorted expression
-    (bounds_bucket_col), whose O(partitions) per-row comparison chain blows
-    past codegen limits and costs 4x wall at 96 partitions (measured r3).
-
-    Build once per job (driver-side, O(slots)); reuse across every stage
-    that shuffles on the same bounds. On a real lakehouse this is the
-    "write-time bucketing spec" artifact: derived from table statistics,
-    shipped to executors as a broadcast.
-    """
-
-    def __init__(self, spark, bounds, partitions: int, res: int = 7):
-        import numpy as np
-        import pandas as pd
-
-        ny, nx = 1 << res, 1 << (res + 1)
-        if ny * nx > (1 << 21):
-            raise ValueError(f"CellRouter: res {res} grid too large to broadcast")
-        self.partitions = partitions
-        self.res = res
-        base_cell = res << RES_SHIFT
-        cut_cells = np.array([c for c, _ in bounds], dtype=np.int64)
-        slots = np.arange(ny * nx, dtype=np.int64)
-        slot_cells = base_cell | ((slots // nx) << I_SHIFT) | (slots % nx)
-        p_lo = np.searchsorted(cut_cells, slot_cells, side="left").astype(np.int32)
-        cuts_in_cell: dict[int, list[str]] = {}
-        for c, i in bounds:
-            cuts_in_cell.setdefault(int(c), []).append(str(i))
-        self._map_pdf = pd.DataFrame(
-            {
-                "_slot": slots,
-                "_plo": p_lo,
-                "_cuts": [cuts_in_cell.get(int(sc)) for sc in slot_cells],
-            }
-        )
-        self._slot_map = spark.createDataFrame(
-            self._map_pdf, schema="_slot long, _plo int, _cuts array<string>"
-        )
-        self._magic = magic_partition_keys(partitions)
-
-    def route(self, sel: DataFrame) -> DataFrame:
-        """sel must carry (cell_id, image_id). Returns sel hash-repartitioned
-        into `partitions` range buckets (ascending by (cell_id, image_id))."""
-        ny, nx = 1 << self.res, 1 << (self.res + 1)
-        slot = (
-            F.shiftright(F.col("cell_id"), I_SHIFT) % (1 << I_SHIFT)
-        ) * nx + F.pmod(F.col("cell_id"), 1 << I_SHIFT)
-        magic_arr = F.array(*[F.lit(int(m)).cast("long") for m in self._magic])
-        bucket = F.col("_plo") + F.when(F.col("_cuts").isNull(), F.lit(0)).otherwise(
-            F.aggregate(
-                F.col("_cuts"),
-                F.lit(0),
-                lambda acc, c: acc + F.when(F.col("image_id") > c, 1).otherwise(0),
-            )
-        )
-        return (
-            sel.withColumn("_slot", slot)
-            .join(F.broadcast(self._slot_map), "_slot")
-            .withColumn("_route", F.element_at(magic_arr, bucket + 1))
-            .repartition(self.partitions, "_route")
-            .drop("_slot", "_plo", "_cuts", "_route")
-        )
 
 
 def bounds_bucket_col(cell: Column, image_id: Column, bounds) -> Column:

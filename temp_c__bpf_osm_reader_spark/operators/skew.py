@@ -1,4 +1,4 @@
-"""Skew handling: salted two-phase aggregation + AQE-skew-join helpers.
+"""Skew handling: salted two-phase aggregation and salted layout shuffles.
 
 The Zipfian duplicate clusters put ~10% of points in a handful of cells (hot
 tiles — Manhattan, not the Pacific). A single groupBy(cell) would hand one
@@ -40,10 +40,3 @@ def salted_repartition(
     if num_partitions:
         return df.repartition(num_partitions, *cols)
     return df.repartition(*cols)
-
-
-def skew_join_conf(spark) -> None:
-    """AQE skew-join knobs (runtime split of oversized partitions)."""
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "3")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64MB")

@@ -31,9 +31,9 @@ from pyspark.sql import types as T
 from ..functions import geo
 from .indexing import grid_cell_col
 
-# Cover resolution default. Measured at the flagship scale (sf0.1 ×480 =
-# 50.9 M points, pinned 8 cores, 2 interleaved passes; probe script added in
-# commit 9d9061d):
+# Cover resolution of every PIP join. Measured at the flagship scale (sf0.1
+# ×480 = 50.9 M points, pinned 8 cores, 2 interleaved passes; probe script
+# added in commit 9d9061d):
 # res 7 best 4.20 s / res 8 best 3.70 s / res 9 best 3.89 s pip stage; output
 # row set identical (6,103,286) at all three — the refine is exact, res only
 # moves the prefilter/refine split. res 8 quadruples the driver-side cover
@@ -110,10 +110,10 @@ def _classify_cover(polygons: pd.DataFrame, res: int) -> pd.DataFrame:
     return pd.concat(rows, ignore_index=True)
 
 
-def polygon_cover(spark: SparkSession, polygons: pd.DataFrame, res: int = PIP_RES) -> DataFrame:
+def polygon_cover(spark: SparkSession, polygons: pd.DataFrame) -> DataFrame:
     """Driver-side polyfill → small classified (cell_id, polygon_id, _full)
-    cover DataFrame (see _classify_cover)."""
-    pdf = _classify_cover(polygons, res)
+    cover DataFrame at PIP_RES (see _classify_cover)."""
+    pdf = _classify_cover(polygons, PIP_RES)
     schema = T.StructType(
         [
             T.StructField("cell_id", T.LongType()),
@@ -159,26 +159,25 @@ def _polygon_edges(spark: SparkSession, polygons: pd.DataFrame) -> DataFrame:
 def pip_join(
     points: DataFrame,
     polygons: pd.DataFrame,
-    res: int = PIP_RES,
     cover: DataFrame | None = None,
     edges: DataFrame | None = None,
 ) -> DataFrame:
     """points(image_id, lat, lon, ...) ⋈ polygons → (image_id, polygon_id).
 
     Emits every containing polygon per point (a point may fall in >1 polygon).
-    cover/edges are polygon-LAYER statistics (like the tile bounds/router:
-    on a lakehouse they derive from the layer once, amortized across every
-    join against it) — callers running pip repeatedly prebuild them with
-    polygon_cover/_polygon_edges and pass them in; by default they are built
-    per call.
+    The prefilter covers at PIP_RES. cover/edges are polygon-LAYER statistics
+    (like the tile bounds: on a lakehouse they derive from the layer once,
+    amortized across every join against it) — callers running pip repeatedly
+    prebuild them with polygon_cover/_polygon_edges and pass them in; by
+    default they are built per call.
     """
     spark = points.sparkSession
     if cover is None:
-        cover = polygon_cover(spark, polygons, res)
+        cover = polygon_cover(spark, polygons)
     if edges is None:
         edges = _polygon_edges(spark, polygons)
 
-    cell = grid_cell_col(F.col("lat"), F.col("lon"), res)
+    cell = grid_cell_col(F.col("lat"), F.col("lon"), PIP_RES)
     candidates = points.select("image_id", "lat", "lon", cell.alias("cell_id")).join(
         F.broadcast(cover), "cell_id"
     )

@@ -5,7 +5,7 @@ progress counters (pbf2sqlite.c:645-656 BEGIN/COMMIT; :694-701 per-10^6-row
 ticks):
 
   * every stage writes parquet + a lineage table
-    (partition_id, row_count, checksum) + a _MANIFEST.json, committed by an
+    (partition_id, row_count, checksum) + a manifest JSON, committed by an
     atomic rename — readers never see a half-written stage;
   * re-running the pipeline skips stages whose manifest is committed
     (resume-from-last-committed-checkpoint, the north-rule requirement);
@@ -28,8 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import read_parquet
-
-MANIFEST = "_MANIFEST.json"
 
 
 def lineage_metrics(df: DataFrame) -> DataFrame:
@@ -72,19 +70,11 @@ class SnapshotPipeline:
         if os.path.exists(p):
             with open(p) as f:
                 return int(f.read().strip())
-        # pre-versioning layout (data/ + _MANIFEST.json) reads as version 0
-        if os.path.exists(os.path.join(self._stage_dir(name), MANIFEST)):
-            return 0
         return None
 
     def _paths(self, name: str, version: int) -> tuple[str, str, str]:
+        """(data dir, lineage dir, manifest file) of one snapshot version."""
         sdir = self._stage_dir(name)
-        if version == 0 and not os.path.exists(os.path.join(sdir, "data-v0")):
-            return (  # legacy unversioned layout
-                os.path.join(sdir, "data"),
-                os.path.join(sdir, "lineage"),
-                os.path.join(sdir, MANIFEST),
-            )
         return (
             os.path.join(sdir, f"data-v{version}"),
             os.path.join(sdir, f"lineage-v{version}"),
@@ -125,8 +115,6 @@ class SnapshotPipeline:
         for fn in os.listdir(sdir):
             if fn.startswith("manifest-v") and fn.endswith(".json"):
                 out.append(int(fn[len("manifest-v") : -len(".json")]))
-        if os.path.exists(os.path.join(sdir, MANIFEST)):
-            out.append(0)  # legacy unversioned layout
         return out
 
     def _set_current(self, name: str, version: int) -> None:
@@ -144,13 +132,8 @@ class SnapshotPipeline:
         # CURRENT points at an old snapshot and current+1 would clobber a
         # committed one, breaking time travel)
         version = 0 if cur is None else max(self._versions(name), default=cur) + 1
-        sdir = self._stage_dir(name)
-        os.makedirs(sdir, exist_ok=True)
-        data_dir, lineage_dir, manifest_path = (
-            os.path.join(sdir, f"data-v{version}"),
-            os.path.join(sdir, f"lineage-v{version}"),
-            os.path.join(sdir, f"manifest-v{version}.json"),
-        )
+        os.makedirs(self._stage_dir(name), exist_ok=True)
+        data_dir, lineage_dir, manifest_path = self._paths(name, version)
 
         t0 = time.time()
         fn().write.mode("overwrite").parquet(data_dir)

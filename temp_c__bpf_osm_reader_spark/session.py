@@ -98,11 +98,6 @@ def get_spark(
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
-    # ad-hoc tuning hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" (bench experiments)
-    for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        if "=" in kv:
-            k, _, v = kv.partition("=")
-            b = b.config(k.strip(), v.strip())
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

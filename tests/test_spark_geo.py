@@ -124,8 +124,7 @@ def test_pip_join_plan_is_broadcast(spark, fx, polygons_pdf):
 def test_tile_assignment_bounds_routing_matches_numpy_reference(spark, fx, golden_geo_pdf):
     """Direct-routed shuffle (precomputed bounds + magic-key addressing) must
     equal the numpy reference byte-for-byte — including deliberately BAD
-    (unbalanced) bounds, since bounds affect balance only, never placement —
-    both through the chained-when router and the CellRouter slot map."""
+    (unbalanced) bounds, since bounds affect balance only, never placement."""
     pts = load_points(spark, fx)
     ref = tile_reference(golden_geo_pdf)
     n_parts = 7
@@ -138,13 +137,34 @@ def test_tile_assignment_bounds_routing_matches_numpy_reference(spark, fx, golde
             indexing.tile_assignment_scalable(pts, 7, partitions=n_parts, bounds=bounds)
         )
         pd.testing.assert_frame_equal(got, ref)
-        # same bounds through the slot-map router (the flagship path —
-        # auto-build only kicks in above 24 partitions, so drive it directly)
-        router = indexing.CellRouter(spark, bounds, n_parts, res=7)
-        got = tiles_sorted(
-            indexing.tile_assignment_scalable(pts, 7, partitions=n_parts, router=router)
+
+
+def test_tile_assignment_keep_cols_and_rp_on_both_routes(spark, fx, golden_geo_pdf):
+    """The flagship's call shape (keep_cols=("lat", "lon"), return_rp=True)
+    on both routes — sampled bounds, and none at 32 partitions: tiles equal
+    the numpy reference, the carried lat/lon are the geolocate doubles bit
+    for bit, and rp holds every point exactly once."""
+    pts = indexing.geolocate_expr(spark.read.parquet(fx["images"]))
+    ref = tile_reference(golden_geo_pdf)
+    geo_ref = golden_geo_pdf.sort_values("image_id", ignore_index=True)
+    for parts, bounds in ((16, indexing.sample_cell_bounds(fx["images"], 16)), (32, None)):
+        tiles, rp = indexing.tile_assignment_scalable(
+            pts, 7, partitions=parts, keep_cols=("lat", "lon"), return_rp=True, bounds=bounds
         )
-        pd.testing.assert_frame_equal(got, ref)
+        got = tiles.toPandas()
+        pd.testing.assert_frame_equal(
+            got[["cell_id", "image_id", "order_"]]
+            .sort_values(["cell_id", "order_"], ignore_index=True),
+            ref,
+        )
+        for frame in (got, rp.toPandas()):
+            frame = frame.sort_values("image_id", ignore_index=True)
+            assert list(frame["image_id"]) == list(geo_ref["image_id"]), parts
+            for c in ("lat", "lon"):
+                assert np.array_equal(
+                    frame[c].to_numpy().view(np.int64), geo_ref[c].to_numpy().view(np.int64)
+                ), (parts, c)
+        rp.unpersist()
 
 
 def test_magic_partition_keys_route_exactly(spark):
