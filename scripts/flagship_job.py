@@ -10,8 +10,12 @@ session startup and the first-scan warmup are excluded, since the cluster-size
 criterion is about sustained throughput, not fixed startup cost.
 
 Usage:
-  spark-submit --py-files engine.zip scripts/flagship_job.py \
+  spark-submit --driver-memory 8g --py-files engine.zip scripts/flagship_job.py \
       [--sf-dir /root/testdata/sf0.001] [--cores 8] [--replicate 1] [--skip-knn]
+
+The driver heap comes from spark-submit (--driver-memory, default 1 GiB):
+the JVM is already running when get_spark would set it. The JSON record
+reports the heap the job actually ran with as driver_heap_mb.
 """
 
 from __future__ import annotations
@@ -229,6 +233,9 @@ def main() -> None:
                 "timed_region_ms": [region_start_ms, region_end_ms],
                 "app_id": spark.sparkContext.applicationId,
                 "images_per_sec": round(n_points / max(pipeline_s, 1e-9), 1),
+                "driver_heap_mb": (
+                    spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory() >> 20
+                ),
                 **({"snapshot": snapshot} if snapshot else {}),
             }
         )

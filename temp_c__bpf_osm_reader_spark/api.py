@@ -268,9 +268,7 @@ def q_cell_compact(spark, sf_dir):
     step a tile-serving consumer runs on the indexed layer. All bit
     arithmetic on the Morton ids; shuffles only on the (small) cell domain.
     See operators/indexing.cell_compact."""
-    return indexing.cell_compact(
-        _cells(spark, sf_dir, 7, 8, 9, zlevel=12), level=12, min_level=10
-    )
+    return indexing.cell_compact(_cells(spark, sf_dir, 7, 8, 9, zlevel=12))
 
 
 def q_pip_join(spark, sf_dir):
@@ -549,7 +547,7 @@ _CELL7 = oracle_cell_expr("lat", "lon", 7)
 _CELL8 = oracle_cell_expr("lat", "lon", 8)
 _CELL9 = oracle_cell_expr("lat", "lon", 9)
 _CELL16 = oracle_cell_expr("lat", "lon", 16)
-_ZCELL = oracle_zcell_expr("lat", "lon", 12)
+_ZCELL = oracle_zcell_expr("lat", "lon")
 
 
 def _cnt(word: str) -> str:

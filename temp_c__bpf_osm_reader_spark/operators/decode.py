@@ -195,6 +195,29 @@ def decode_rel_members(rel_blocks: DataFrame) -> DataFrame:
     )
 
 
+def _way_points(way_blocks: DataFrame, blocks: DataFrame) -> DataFrame:
+    """Every way ref joined to its node → (way_id, order_, nod_id, lat_e7,
+    lon_e7). The node side is decode_nodes' cumsum windows WITHOUT the
+    fixed-point division, so coords stay exact BIGINTs (the wire's own e7
+    unit, readosm.c:1206-1211). Plan: refs decode (window per way, bounded
+    ≤2000 refs by the reference's block convention) → equi-join to the node
+    stream on nod_id (the one big shuffle; both sides hash-partition, AQE
+    handles hot nodes)."""
+    e = blocks.select(
+        "block_id",
+        F.posexplode(F.arrays_zip("id_delta", "lat_dz", "lon_dz")).alias("pos", "e"),
+    )
+    w = Window.partitionBy("block_id").orderBy("pos").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    nodes = e.select(
+        F.sum(F.col("e.id_delta")).over(w).alias("nod_id"),
+        F.sum(zigzag_decode_col(F.col("e.lat_dz"))).over(w).alias("lat_e7"),
+        F.sum(zigzag_decode_col(F.col("e.lon_dz"))).over(w).alias("lon_e7"),
+    )
+    return decode_way_refs(way_blocks).join(nodes, "nod_id")
+
+
 def way_simplify(
     way_blocks: DataFrame, blocks: DataFrame, snap_e7: int = 1 << 14
 ) -> DataFrame:
@@ -211,28 +234,14 @@ def way_simplify(
     by a power of two is exact in doubles, |coord| ≤ 1.8e9 < 2^53), so the
     kept set is bit-identical across engines and parallelism.
 
-    Plan: refs delta-decode (way-bounded windows) → one equi-join to the
-    node stream on nod_id → lag + row_number over the SAME (way_id, order_)
+    Plan: _way_points → lag + row_number over the SAME (way_id, order_)
     window spec, so the filter and the renumber share one way-keyed
     shuffle.  Per-way state is bounded by the reference's ≤2000 refs/way
     convention — embarrassingly parallel at any table size."""
-    refs = decode_way_refs(way_blocks)
-    e = blocks.select(
-        "block_id",
-        F.posexplode(F.arrays_zip("id_delta", "lat_dz", "lon_dz")).alias("pos", "e"),
-    )
-    w = Window.partitionBy("block_id").orderBy("pos").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    nodes = e.select(
-        F.sum(F.col("e.id_delta")).over(w).alias("nod_id"),
-        F.sum(zigzag_decode_col(F.col("e.lat_dz"))).over(w).alias("lat_e7"),
-        F.sum(zigzag_decode_col(F.col("e.lon_dz"))).over(w).alias("lon_e7"),
-    )
     ww = Window.partitionBy("way_id").orderBy("order_")
     si = F.floor(F.col("lat_e7") / F.lit(float(snap_e7)))
     sj = F.floor(F.col("lon_e7") / F.lit(float(snap_e7)))
-    snapped = refs.join(nodes, "nod_id").select(
+    snapped = _way_points(way_blocks, blocks).select(
         "way_id",
         "order_",
         "nod_id",
@@ -292,33 +301,15 @@ def way_geometry(way_blocks: DataFrame, blocks: DataFrame) -> DataFrame:
     nod_way(way_id, nod_id, order_) back to nod(id, lat, lon)
     (pbf2sqlite.c:755-770 + 460-468) and walking each way in ref order.
 
-    All arithmetic stays in fixed-point e7 BIGINTs (the wire's own unit,
-    readosm.c:1206-1211) — no /1e7 round trip — so every output column is an
-    exact integer and the value hash is parallelism-independent. Path length
-    is the per-segment L1 sum with longitude wrapping at the antimeridian
-    (360e7); bbox is plain min/max.
+    All arithmetic stays in fixed-point e7 BIGINTs — no /1e7 round trip — so
+    every output column is an exact integer and the value hash is
+    parallelism-independent. Path length is the per-segment L1 sum with
+    longitude wrapping at the antimeridian (360e7); bbox is plain min/max.
 
-    Plan: refs decode (window per way, bounded ≤2000 refs by the reference's
-    block convention) → equi-join to the node table on nod_id (the one big
-    shuffle; both sides hash-partition, AQE handles hot nodes) → lead() over
-    (way_id, order_) pairs consecutive nodes → map-side-combinable groupBy.
+    Plan: _way_points → lead() over (way_id, order_) pairs consecutive
+    nodes → map-side-combinable groupBy.
     """
-    refs = decode_way_refs(way_blocks)
-    # integer-coordinate node decode: decode_nodes' cumsum windows WITHOUT
-    # the fixed-point division, so coords stay exact BIGINTs
-    e = blocks.select(
-        "block_id",
-        F.posexplode(F.arrays_zip("id_delta", "lat_dz", "lon_dz")).alias("pos", "e"),
-    )
-    w = Window.partitionBy("block_id").orderBy("pos").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    nodes = e.select(
-        F.sum(F.col("e.id_delta")).over(w).alias("nod_id"),
-        F.sum(zigzag_decode_col(F.col("e.lat_dz"))).over(w).alias("lat_e7"),
-        F.sum(zigzag_decode_col(F.col("e.lon_dz"))).over(w).alias("lon_e7"),
-    )
-    pts = refs.join(nodes, "nod_id")
+    pts = _way_points(way_blocks, blocks)
     ww = Window.partitionBy("way_id").orderBy("order_")
     seg = pts.select(
         "way_id",

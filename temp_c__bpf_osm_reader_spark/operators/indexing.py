@@ -65,8 +65,13 @@ def oracle_cell_expr(lat: str, lon: str, res: int) -> str:
     )
 
 
-def oracle_zcell_expr(lat: str, lon: str, level: int = 12) -> str:
-    """Morton z-cell as ANSI SQL (sum of per-bit terms)."""
+ZCELL_LEVEL = 12  # the z-cell level the oracles and cell_compact use
+COMPACT_MIN_LEVEL = 10
+
+
+def oracle_zcell_expr(lat: str, lon: str) -> str:
+    """Morton level-ZCELL_LEVEL z-cell as ANSI SQL (sum of per-bit terms)."""
+    level = ZCELL_LEVEL
     n = 1 << level
     i = f"CAST(least(greatest(floor(({lat} + 90.0) / 180.0 * {n}), 0), {n - 1}) AS BIGINT)"
     j = f"CAST(((CAST(floor(({lon} + 180.0) / 360.0 * {n}) AS BIGINT) % {n} + {n}) % {n}) AS BIGINT)"
@@ -313,21 +318,19 @@ def tile_assignment_scalable(
     return tiles
 
 
-def write_partitioned(
-    points: DataFrame, path: str, parent_res: int = 3, res: int = 7
-) -> None:
+def write_partitioned(points: DataFrame, path: str) -> None:
     """Hive-partitioned layout keyed by the COARSE cell (the hierarchy's
-    parent, 128 directories at res 3) with fine-cell clustering inside each —
+    res-3 parent, 128 directories) with res-7 cell clustering inside each —
     so a cell predicate prunes directories at planning time (Catalyst
     partition pruning, the §4 'header skip' analogue) and the fine sort gives
     row-group skipping within. The res-3 parent of a res-7 cell is pure bit
     arithmetic on lat/lon, so both keys derive from the same columns."""
     pts = points.withColumn(
-        "p_cell", grid_cell_col(F.col("lat"), F.col("lon"), parent_res)
+        "p_cell", grid_cell_col(F.col("lat"), F.col("lon"), 3)
     )
     (
         pts.repartition(F.col("p_cell"))
-        .sortWithinPartitions("p_cell", f"cell_r{res}", "image_id")
+        .sortWithinPartitions("p_cell", "cell_r7", "image_id")
         .write.mode("overwrite")
         .partitionBy("p_cell")
         .parquet(path)
@@ -336,14 +339,14 @@ def write_partitioned(
 
 # ------------------------------------------------ direct-routed tile shuffle
 
-def _mmh3_long(v: int, seed: int = 42) -> int:
-    """Spark's Murmur3 x86_32 of a BIGINT (two LE 32-bit words) — matches
-    F.hash(bigint) exactly (verified against the JVM)."""
+def _mmh3_long(v: int) -> int:
+    """Spark's Murmur3 x86_32 of a BIGINT (two LE 32-bit words), seed 42 —
+    matches F.hash(bigint) exactly (verified against the JVM)."""
     def rotl(x, r):
         return ((x << r) | (x >> (32 - r))) & 0xFFFFFFFF
 
     c1, c2 = 0xCC9E2D51, 0x1B873593
-    h = seed
+    h = 42
     for k in ((v & 0xFFFFFFFF), ((v >> 32) & 0xFFFFFFFF)):
         k = rotl((k * c1) & 0xFFFFFFFF, 15)
         k = (k * c2) & 0xFFFFFFFF
@@ -385,11 +388,11 @@ def bounds_bucket_col(cell: Column, image_id: Column, bounds) -> Column:
     return b
 
 
-def cell_compact(points: DataFrame, level: int = 12, min_level: int = 10) -> DataFrame:
+def cell_compact(points: DataFrame) -> DataFrame:
     """→ (cell, level) — hierarchical compaction of the occupied z-cell set
     (the H3 `compact` / S2 covering-normalization analogue): any 4 sibling
     cells that are ALL occupied are replaced by their parent, applied
-    bottom-up from `level` to `min_level`.
+    bottom-up from ZCELL_LEVEL to COMPACT_MIN_LEVEL.
 
     The Morton layout (z_cell_col: level·2^48 + interleaved bits) makes the
     hierarchy pure bit arithmetic — a child's parent is
@@ -411,10 +414,10 @@ def cell_compact(points: DataFrame, level: int = 12, min_level: int = 10) -> Dat
     cached intermediates live on the cell domain — grid-bounded at any
     input size.
     """
-    cur = points.select(F.col(f"zcell_l{level}").alias("cell")).distinct().cache()
+    cur = points.select(F.col(f"zcell_l{ZCELL_LEVEL}").alias("cell")).distinct().cache()
     cached = [cur]
     pieces = []
-    for lv in range(level, min_level, -1):
+    for lv in range(ZCELL_LEVEL, COMPACT_MIN_LEVEL, -1):
         g = (
             cur.withColumn(
                 "pcell",
@@ -430,7 +433,7 @@ def cell_compact(points: DataFrame, level: int = 12, min_level: int = 10) -> Dat
             .withColumn("level", F.lit(lv))
         )
         cur = g.where(F.col("c") == 4).select(F.col("pcell").alias("cell"))
-    pieces.append(cur.withColumn("level", F.lit(min_level)))
+    pieces.append(cur.withColumn("level", F.lit(COMPACT_MIN_LEVEL)))
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p)

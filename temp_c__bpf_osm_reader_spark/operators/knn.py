@@ -121,15 +121,10 @@ def knn_join(
     )
 
 
-def knn_join_global(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int = KNN_K,
-    res: int = KNN_RES,
-    rings: tuple[int, ...] = KNN_RINGS,
-) -> DataFrame:
+def knn_join_global(points: DataFrame, queries: DataFrame) -> DataFrame:
     """Escalating-ring kNN: each query's result comes from the FIRST ring in
-    `rings` that yields ≥ k neighbors (the last ring returns whatever exists).
+    KNN_RINGS that yields ≥ KNN_K neighbors (the last ring returns whatever
+    exists).
     Closes the ring-bounded contract of knn_join for sparse regions while
     keeping the scalable shape: round i only re-expands the (shrinking) set of
     still-unsatisfied queries, so the wide rings touch few queries and the
@@ -141,19 +136,19 @@ def knn_join_global(
     remaining = queries
     outs = []
     cached = []
-    for i, ring in enumerate(rings):
-        if i == len(rings) - 1:
+    for i, ring in enumerate(KNN_RINGS):
+        if i == len(KNN_RINGS) - 1:
             # final ring is consumed exactly once — no cache
-            outs.append(knn_join(points, remaining, k=k, res=res, ring=ring))
+            outs.append(knn_join(points, remaining, ring=ring))
             break
         # non-final rounds feed both the done-set and the output → cache
         # (released below once the union is checkpointed)
-        out_r = knn_join(points, remaining, k=k, res=res, ring=ring).cache()
+        out_r = knn_join(points, remaining, ring=ring).cache()
         cached.append(out_r)
         done = (
             out_r.groupBy("query_image_id")
             .count()
-            .filter(F.col("count") >= k)
+            .filter(F.col("count") >= KNN_K)
             .select("query_image_id")
         )
         outs.append(out_r.join(F.broadcast(done), "query_image_id", "left_semi"))

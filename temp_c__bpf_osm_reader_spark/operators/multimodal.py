@@ -146,23 +146,26 @@ def image_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def block_mean_features(spark: SparkSession, sf_dir: str, grid: int = 4) -> DataFrame:
-    """Feature extraction: per-image grid×grid block-mean vector rounded to 6
+BLOCK_GRID = 4
+
+
+def block_mean_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Feature extraction: per-image BLOCK_GRID² block-mean vector rounded to 6
     places (the resize/feature step of an image pipeline) → (image_id,
     features array)."""
     return _map_images(
-        spark, sf_dir, lambda m, W, H: {"features": np.round(_block_means(m, W, H, grid), 6)},
+        spark, sf_dir, lambda m, W, H: {"features": np.round(_block_means(m, W, H, BLOCK_GRID), 6)},
         "image_id string, features array<double>",
     )
 
 
-def block_features_flat(spark: SparkSession, sf_dir: str, grid: int = 4) -> DataFrame:
+def block_features_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """block_mean_features unrounded and exploded to (image_id, feat_idx,
     value) — the oracle-checkable flat form. value = block_sum / (bh*bw) with
     an exact integer numerator, so the pure-Python golden twin
     (fixtures_text.ensure_golden_blockmeans) reproduces it bit-for-bit."""
     feats = _map_images(
-        spark, sf_dir, lambda m, W, H: {"v": _block_means(m, W, H, grid)},
+        spark, sf_dir, lambda m, W, H: {"v": _block_means(m, W, H, BLOCK_GRID)},
         "image_id string, v array<double>",
     )
     return feats.select("image_id", F.posexplode("v").alias("feat_idx", "value"))
@@ -171,12 +174,12 @@ def block_features_flat(spark: SparkSession, sf_dir: str, grid: int = 4) -> Data
 RESIZE_TO = 8
 
 
-def resize_nn(spark: SparkSession, sf_dir: str, size: int = RESIZE_TO) -> DataFrame:
-    """Nearest-neighbor resize of every payload to size×size (pure numpy
+def resize_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nearest-neighbor resize of every payload to RESIZE_TO² (pure numpy
     gather, no image libs) → (image_id, r_sum, r_phash): exact pixel sum +
     phash of the resized image, compact outputs that keep the oracle scalar."""
     return _map_images(
-        spark, sf_dir, lambda m, W, H: _resize_stats(m, W, H, size),
+        spark, sf_dir, lambda m, W, H: _resize_stats(m, W, H, RESIZE_TO),
         "image_id string, r_sum long, r_phash long",
     )
 
@@ -184,28 +187,32 @@ def resize_nn(spark: SparkSession, sf_dir: str, size: int = RESIZE_TO) -> DataFr
 FRAME_STRIDE = 8
 
 
-def frame_sample(spark: SparkSession, sf_dir: str, stride: int = FRAME_STRIDE) -> DataFrame:
+def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over binary payloads: each image row is treated as a
     frame sequence (h frames of w samples — the video analogue); every
-    `stride`-th frame is emitted with its exact sum and mean.
+    FRAME_STRIDE-th frame is emitted with its exact sum and mean.
 
     → (image_id, frame_idx, frame_sum, frame_mean). The kernel emits one
-    frame-sum array per image; the 1→many explode, frame_idx = pos * stride
+    frame-sum array per image; the 1→many explode, frame_idx = pos * FRAME_STRIDE
     and frame_mean = frame_sum / w (pure IEEE division — bit-equal to the
     pure-Python golden) run JVM-side."""
     frames = _map_images(
-        spark, sf_dir, lambda m, W, H: {"s": _frame_sums(m, W, H, stride)},
+        spark, sf_dir, lambda m, W, H: {"s": _frame_sums(m, W, H, FRAME_STRIDE)},
         "image_id string, w int, s array<long>", keep=("image_id", "w"),
     )
     return frames.select("image_id", "w", F.posexplode("s").alias("pos", "frame_sum")).select(
-        "image_id", (F.col("pos") * stride).alias("frame_idx"),
+        "image_id", (F.col("pos") * FRAME_STRIDE).alias("frame_idx"),
         "frame_sum", (F.col("frame_sum") / F.col("w")).alias("frame_mean"),
     )
 
 
-def audio_window_energy(spark: SparkSession, sf_dir: str, win: int = 512) -> DataFrame:
+AUDIO_WIN = 512
+
+
+def audio_window_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio leg of the multimodal family: PCM16 clips (opaque binary +
-    typed metadata) → per-window exact energy, 1→many rows via mapInPandas.
+    typed metadata) → per-AUDIO_WIN-sample-window exact energy, 1→many rows
+    via mapInPandas.
 
     Whole-batch kernel: all clips' bytes join into one int16 buffer, window
     energies come from one np.add.reduceat over x² at precomputed window
@@ -227,13 +234,13 @@ def audio_window_energy(spark: SparkSession, sf_dir: str, win: int = 512) -> Dat
             ns = pdf["n_samples"].to_numpy().astype(np.int64)
             flat = np.frombuffer(b"".join(pdf["bytes"]), dtype="<i2").astype(np.int64)
             clip_off = np.concatenate(([0], np.cumsum(ns)))
-            wins_per = (ns + win - 1) // win
+            wins_per = (ns + AUDIO_WIN - 1) // AUDIO_WIN
             # window start offsets, per clip, in the flat buffer
             total_w = int(wins_per.sum())
             first_w = np.concatenate(([0], np.cumsum(wins_per)))[:-1]
             wstart = (
                 np.repeat(clip_off[:-1], wins_per)
-                + (np.arange(total_w) - np.repeat(first_w, wins_per)) * win
+                + (np.arange(total_w) - np.repeat(first_w, wins_per)) * AUDIO_WIN
             )
             energy = np.add.reduceat(flat * flat, wstart)
             win_idx = (np.arange(total_w) - np.repeat(first_w, wins_per)).astype("int32")

@@ -3,7 +3,7 @@
 The engine's raster↔vector pair (OPERATORS.md north-rule table) started as
 tile_assignment (raster→vector: grid cell → deterministic ordered image
 table) and raster_density (vector→raster: rasterize the point layer onto
-the res-8 pixel grid).  This module adds the two classic raster analytics
+the res-8 pixel grid).  This module adds the classic raster analytics
 that sit on top of a rasterized layer:
 
   * pyramid()   — multi-resolution rollup (map-tile pyramid): each base
@@ -16,14 +16,16 @@ that sit on top of a rasterized layer:
   * focal_sum() — 3×3 neighborhood (focal/convolution) statistic: each
     occupied pixel's count plus its 8 neighbors'.  Runs entirely on the
     aggregated raster (bounded by the grid, 2^res × 2^(res+1) pixels), via
-    a 9-way offset explode (center tagged) + one pixel-keyed shuffle;
+    the offset _stencil (center tagged) + one pixel-keyed shuffle;
     longitude wraps (mod nx), latitude clamps (rows outside [0, ny) are
     dropped), matching the cylinder topology of geo.grid_cell
-    (functions/geo.py:119-137).
+    (functions/geo.py:119-137).  global_autocorr() and local_autocorr()
+    (Moran's I, global and per pixel) run on the same stencil.
   * polygonize() — raster→vector region extraction: 4-connected component
     labeling over the occupied pixels, emitting one REGION row per
     component (GDAL's gdal_polygonize / PostGIS ST_DumpAsPolygons class).
-    Only the rasterization touches the input table; the labeling runs on
+    Only the rasterization touches the input table; the labeling
+    (dedup.connected_components) runs on
     the raster itself, whose size is capped by the GRID (2^res × 2^(res+1)
     pixels) no matter how many input rows fed it — at 10^12 images and
     res 8 the component graph still has ≤ 131k nodes.
@@ -39,18 +41,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-IJ_MASK = (1 << 27) - 1
+from ..functions.geo import I_SHIFT, IJ_MASK
+from .dedup import connected_components
 
 
 def density(points: DataFrame, cell_col: str) -> DataFrame:
     """Rasterize a point layer: (row_i, col_j, n_images) per occupied pixel."""
     return (
         points.select(
-            F.shiftright(cell_col, 27).bitwiseAND(F.lit(IJ_MASK)).alias("row_i"),
+            F.shiftright(cell_col, I_SHIFT).bitwiseAND(F.lit(IJ_MASK)).alias("row_i"),
             F.col(cell_col).bitwiseAND(F.lit(IJ_MASK)).alias("col_j"),
         )
         .groupBy("row_i", "col_j")
         .agg(F.count(F.lit(1)).alias("n_images"))
+    )
+
+
+def _stencil(points: DataFrame, cell_col: str, res: int, offsets) -> DataFrame:
+    """Offset stencil over the rasterized layer: every occupied pixel sends
+    its count to each (di, dj) offset's target pixel → (ci, cj, n_images,
+    is_center), is_center tagging the (0, 0) offset. col_j wraps modulo nx
+    (longitude is periodic; at nx == 2 a column's east and west borders are
+    two distinct adjacencies); targets beyond the poles (row_i outside
+    [0, ny)) are dropped. Callers group by the target pixel: the center tag
+    folds "join back to the base raster" into that one aggregate, so a
+    statistic costs the rasterization (the only full-table pass) plus one
+    raster-bounded shuffle — a join back would re-run the full-table
+    rasterization for the probe side (no cross-subtree exchange reuse;
+    .cache() measured slower at sf1.0 — see pyramid())."""
+    ny, nx = 1 << res, 1 << (res + 1)
+    arr = F.array(
+        *[F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj")) for di, dj in offsets]
+    )
+    return (
+        density(points, cell_col)
+        .select("row_i", "col_j", "n_images", F.explode(arr).alias("o"))
+        .select(
+            (F.col("row_i") + F.col("o.di")).alias("ci"),
+            F.pmod(F.col("col_j") + F.col("o.dj"), F.lit(nx)).alias("cj"),
+            "n_images",
+            ((F.col("o.di") == 0) & (F.col("o.dj") == 0)).alias("is_center"),
+        )
+        .where((F.col("ci") >= 0) & (F.col("ci") < ny))
     )
 
 
@@ -98,39 +130,16 @@ def focal_sum(points: DataFrame, cell_col: str, res: int) -> DataFrame:
     """3×3 focal (neighborhood) sum over the rasterized layer.
 
     For every OCCUPIED pixel: its own count plus the counts of its 8 grid
-    neighbors (missing neighbors contribute 0).  col_j wraps modulo nx
-    (longitude is periodic); row_i clamps (no pixels beyond the poles).
-
-    Plan: rasterize (the only full-table pass), explode each raster row to
-    its 9 (target-pixel, contribution) rows with the (0,0) offset tagged as
-    the center, then ONE groupBy shuffle on the target pixel computes both
-    focal_n (sum of all contributions) and the center's own count; keeping
-    only groups that saw a center contribution IS the "center must be
-    occupied" filter.  A join back to the base raster would re-run the
-    full-table rasterization for the probe side (no cross-subtree exchange
-    reuse; .cache() measured slower at sf1.0 — see pyramid()); the center
-    tag folds the join into the aggregate, so the whole statistic is one
-    pass + one raster-bounded shuffle.  The center contribution is
+    neighbors (missing neighbors contribute 0), on the cylinder topology of
+    _stencil. Plan: the 9-offset stencil, then ONE groupBy on the target
+    pixel computes both focal_n (sum of all contributions) and the center's
+    own count; keeping only groups that saw a center contribution IS the
+    "center must be occupied" filter. The center contribution is
     unambiguous under wrap/clamp: offset (0,0) maps a pixel to itself only.
     """
-    ny, nx = 1 << res, 1 << (res + 1)
-    base = density(points, cell_col)
-    offsets = F.array(
-        *[
-            F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
-            for di in (-1, 0, 1)
-            for dj in (-1, 0, 1)
-        ]
-    )
+    offsets = [(di, dj) for di in (-1, 0, 1) for dj in (-1, 0, 1)]
     return (
-        base.select("row_i", "col_j", "n_images", F.explode(offsets).alias("o"))
-        .select(
-            (F.col("row_i") + F.col("o.di")).alias("ci"),
-            F.pmod(F.col("col_j") + F.col("o.dj"), F.lit(nx)).alias("cj"),
-            "n_images",
-            ((F.col("o.di") == 0) & (F.col("o.dj") == 0)).alias("is_center"),
-        )
-        .where((F.col("ci") >= 0) & (F.col("ci") < ny))
+        _stencil(points, cell_col, res, offsets)
         .groupBy("ci", "cj")
         .agg(
             F.sum("n_images").alias("focal_n"),
@@ -146,9 +155,7 @@ def focal_sum(points: DataFrame, cell_col: str, res: int) -> DataFrame:
     )
 
 
-def polygonize(
-    points: DataFrame, cell_col: str, res: int, max_iter: int = 30
-) -> DataFrame:
+def polygonize(points: DataFrame, cell_col: str, res: int) -> DataFrame:
     """Raster→vector region extraction: 4-connected components over the
     occupied pixels → one row per region: (region_id, n_cells, n_images,
     min_i, max_i, min_j, max_j), region_id = min packed pixel key
@@ -162,94 +169,34 @@ def polygonize(
 
     Scale shape: the only full-table pass is density(); the component graph
     is raster-bounded (≤ 2^res × 2^(res+1) nodes — 131k at res 8 — however
-    many input rows produced it), so the iterative part costs the same at
-    10^12 images as at 10^4.  Labels converge by min-label propagation PLUS
-    pointer-jumping each round (label := label of own label), the halving
-    trick that makes rounds O(log diameter) instead of O(diameter) — a
-    res-8 raster's worst-case path is ~768 pixels, ~10 rounds with jumping
-    vs ~768 without.  Each round is two raster-bounded shuffles +
-    localCheckpoint to truncate lineage; non-convergence raises (same
-    contract as dedup.dedup_clusters)."""
+    many input rows produced it), so the labeling (dedup.connected_components,
+    min-label propagation with pointer jumping: a res-8 raster's worst-case
+    path is ~768 pixels, ~10 rounds) costs the same at 10^12 images as at
+    10^4."""
     ny, nx = 1 << res, 1 << (res + 1)
-    mask = (1 << 27) - 1
-    raster = (
-        points.select(
-            F.shiftright(cell_col, 27).bitwiseAND(F.lit(mask)).alias("row_i"),
-            F.col(cell_col).bitwiseAND(F.lit(mask)).alias("col_j"),
-        )
-        .groupBy("row_i", "col_j")
-        .agg(F.count(F.lit(1)).alias("n_images"))
-    )
-    key = F.shiftleft("row_i", 27).bitwiseOR(F.col("col_j"))
-    nodes = raster.select(
+    key = F.shiftleft("row_i", I_SHIFT).bitwiseOR(F.col("col_j"))
+    nodes = density(points, cell_col).select(
         key.alias("cell"), "row_i", "col_j", "n_images"
     ).localCheckpoint()
     # Candidate edges: each occupied pixel → its right (j+1 mod nx) and down
     # (i+1, clamped) neighbor keys; a semi-style join against the node set
-    # keeps only occupied→occupied pairs, then both directions are emitted.
-    # All raster-bounded (≤ 2 edges per occupied pixel before the join).
-    right = F.shiftleft("row_i", 27).bitwiseOR(F.pmod(F.col("col_j") + 1, F.lit(nx)))
-    down = F.shiftleft(F.col("row_i") + 1, 27).bitwiseOR(F.col("col_j"))
+    # keeps only occupied→occupied pairs. All raster-bounded (≤ 2 edges per
+    # occupied pixel before the join).
+    right = F.shiftleft("row_i", I_SHIFT).bitwiseOR(F.pmod(F.col("col_j") + 1, F.lit(nx)))
+    down = F.shiftleft(F.col("row_i") + 1, I_SHIFT).bitwiseOR(F.col("col_j"))
     cand = nodes.select(
-        "cell",
+        F.col("cell").alias("src"),
         F.explode(
             F.when(
                 F.col("row_i") + 1 < ny, F.array(right, down)
             ).otherwise(F.array(right))
-        ).alias("nbr"),
-    ).where(F.col("cell") != F.col("nbr"))  # nx == 1 would self-loop via wrap
-    half = cand.join(
-        nodes.select(F.col("cell").alias("nbr")), "nbr", "inner"
-    ).select("cell", "nbr")
-    edges = (
-        half.select(F.col("cell").alias("src"), F.col("nbr").alias("dst"))
-        .unionByName(
-            half.select(F.col("nbr").alias("src"), F.col("cell").alias("dst"))
-        )
-        .localCheckpoint()
-    )
-    labels = nodes.select("cell", F.col("cell").alias("lab")).localCheckpoint()
-    for _ in range(max_iter):
-        neigh_min = (
-            edges.join(labels, edges["dst"] == labels["cell"])
-            .groupBy("src")
-            .agg(F.min("lab").alias("nmin"))
-        )
-        prop = labels.join(
-            neigh_min, labels["cell"] == neigh_min["src"], "left"
-        ).select(
-            "cell",
-            F.least(F.col("lab"), F.coalesce("nmin", "lab")).alias("lab"),
-        )
-        # pointer jumping: lab := lab's own label (labels is a forest rooted
-        # at each component's current min — jumping halves path lengths)
-        jump = prop.alias("a").join(
-            prop.select(
-                F.col("cell").alias("jc"), F.col("lab").alias("jlab")
-            ).alias("b"),
-            F.col("a.lab") == F.col("b.jc"),
-        )
-        new_labels = jump.select(
-            F.col("a.cell").alias("cell"),
-            F.least(F.col("a.lab"), F.col("jlab")).alias("lab"),
-        ).localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "cell")
-            .filter(F.col("n.lab") != F.col("o.lab"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"polygonize did not converge in {max_iter} rounds "
-            f"({changed} labels still changing) — raise max_iter"
-        )
+        ).alias("dst"),
+    ).where(F.col("src") != F.col("dst"))  # nx == 1 would self-loop via wrap
+    pairs = cand.join(nodes.select(F.col("cell").alias("dst")), "dst").select("src", "dst")
+    labels = connected_components(nodes.select(F.col("cell").alias("id")), pairs)
     return (
-        nodes.join(labels, "cell")
-        .groupBy(F.col("lab").alias("region_id"))
+        nodes.join(labels.withColumnRenamed("id", "cell"), "cell")
+        .groupBy(F.col("label").alias("region_id"))
         .agg(
             F.count(F.lit(1)).alias("n_cells"),
             F.sum("n_images").alias("n_images"),
@@ -267,10 +214,9 @@ def global_autocorr(points: DataFrame, cell_col: str, res: int) -> DataFrame:
     PySAL `esda.Moran` class) answering "are dense pixels next to dense
     pixels more than chance predicts?".
 
-    Adjacency is the raster's rook topology with the engine's cylinder
-    convention (col_j wraps mod nx, row_i clamps at the poles — same as
-    focal_sum); each undirected occupied-pixel pair is counted ONCE by
-    probing only East and South.
+    Adjacency is the raster's rook topology on _stencil's cylinder (col_j
+    wraps mod nx, row_i clamps at the poles); each undirected
+    occupied-pixel pair is counted ONCE by probing only East and South.
 
     Everything that must hash identically across engines/parallelism is an
     exact BIGINT: the six Moran components
@@ -284,35 +230,14 @@ def global_autocorr(points: DataFrame, cell_col: str, res: int) -> DataFrame:
     identical parse tree in the DuckDB oracle so the float result is
     bit-identical; NULL when P = 0 or the variance term is 0.
 
-    Plan (the focal_sum lesson — a join back to the raster would re-run the
-    full-table rasterization for the probe side): rasterize (the only
-    full-table pass, map-side combinable) → explode each pixel to
-    {center, East-probe, South-probe} → ONE raster-bounded groupBy on the
-    target pixel folds the pair join into an aggregate (center_n ·
+    Plan: the {center, East, South} _stencil → ONE raster-bounded groupBy
+    on the target pixel folds the pair join into an aggregate (center_n ·
     src_sum = Σ products, src_cnt = pairs at that center) → global agg to
     a single row.  Cost beyond the rasterization is bounded by the GRID at
     any input size.
     """
-    ny, nx = 1 << res, 1 << (res + 1)
-    base = density(points, cell_col)
-    offsets = F.array(
-        *[
-            F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
-            for di, dj in ((0, 0), (0, 1), (1, 0))
-        ]
-    )
-    # cylinder wrap at every nx (grids have nx = 2^(res+1) >= 2; at nx == 2
-    # each column's east and west borders are two distinct adjacencies)
-    cj_expr = F.pmod(F.col("col_j") + F.col("o.dj"), F.lit(nx))
     per_pixel = (
-        base.select("row_i", "col_j", "n_images", F.explode(offsets).alias("o"))
-        .select(
-            (F.col("row_i") + F.col("o.di")).alias("ci"),
-            cj_expr.alias("cj"),
-            "n_images",
-            ((F.col("o.di") == 0) & (F.col("o.dj") == 0)).alias("is_center"),
-        )
-        .where((F.col("ci") >= 0) & (F.col("ci") < ny))
+        _stencil(points, cell_col, res, ((0, 0), (0, 1), (1, 0)))
         .groupBy("ci", "cj")
         .agg(
             F.max(F.when(F.col("is_center"), F.col("n_images"))).alias("center_n"),
@@ -372,33 +297,14 @@ def local_autocorr(points: DataFrame, cell_col: str, res: int) -> DataFrame:
     overflow at extreme skew (bound n²S²), doubles are scale-safe and
     bit-identical across engines for the identical parse tree.
 
-    Plan: rasterize (the only full-table pass) → 5-way offset explode +
-    ONE raster-bounded center-tagged groupBy (focal_sum's no-join-back
-    shape) → the global scalars (n, S) come from a second aggregate over
+    Plan: the 5-offset _stencil + ONE raster-bounded center-tagged
+    groupBy → the global scalars (n, S) come from a second aggregate over
     the CACHED per-pixel table (raster-bounded, ≤ 2^(2·res+1) rows — the
     cache is what keeps the scalar pass from re-running the full-table
     rasterization) broadcast back via a 1-row cross join.
     """
-    ny, nx = 1 << res, 1 << (res + 1)
-    base = density(points, cell_col)
-    offsets = F.array(
-        *[
-            F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
-            for di, dj in ((0, 0), (0, 1), (0, -1), (1, 0), (-1, 0))
-        ]
-    )
-    # cylinder wrap at every nx (grids have nx = 2^(res+1) >= 2; at nx == 2
-    # each column's east and west borders are two distinct adjacencies)
-    cj_expr = F.pmod(F.col("col_j") + F.col("o.dj"), F.lit(nx))
     per_pixel = (
-        base.select("row_i", "col_j", "n_images", F.explode(offsets).alias("o"))
-        .select(
-            (F.col("row_i") + F.col("o.di")).alias("ci"),
-            cj_expr.alias("cj"),
-            "n_images",
-            ((F.col("o.di") == 0) & (F.col("o.dj") == 0)).alias("is_center"),
-        )
-        .where((F.col("ci") >= 0) & (F.col("ci") < ny))
+        _stencil(points, cell_col, res, ((0, 0), (0, 1), (0, -1), (1, 0), (-1, 0)))
         .groupBy("ci", "cj")
         .agg(
             F.max(F.when(F.col("is_center"), F.col("n_images"))).alias("center_n"),

@@ -193,12 +193,16 @@ def ordered_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- top-k / window
 
-def topk_orders_per_customer(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
+TOPK_ORDERS = 3
+SESSION_GAP_MINUTES = 30
+
+
+def topk_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
     return (
         orders.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= TOPK_ORDERS)
         .select("o_custkey", "o_orderkey", "o_totalprice", "rnk")
     )
 
@@ -216,12 +220,12 @@ def running_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sessionize(spark: SparkSession, sf_dir: str, gap_minutes: int = 30) -> DataFrame:
+def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: lag + gap>threshold cumsum (guide 'Common OLAP patterns')."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    new_sess = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
+    new_sess = F.when(gap.isNull() | (gap > SESSION_GAP_MINUTES * 60), 1).otherwise(0)
     # count-style running sum (bigint both engines; duckdb sum(int) would be HUGEINT)
     return ev.withColumn("new_sess", new_sess).withColumn(
         "session_id",
@@ -404,9 +408,12 @@ def cube_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ queries/rel.sql + denotation-count
 
-def rel_tag_freq(spark: SparkSession, sf_dir: str, rel_of: int = 1) -> DataFrame:
+REL_OF = 1  # the pinned collection of the rel.sql twins
+
+
+def rel_tag_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1:1 twin of the reference's per-relation member→tag frequency query
-    (queries/rel.sql:10-50): pin ONE collection (rel_of, the rel.sql
+    (queries/rel.sql:10-50): pin ONE collection (REL_OF, the rel.sql
     `rel_of = 12120978` analogue), join each member-type branch of its
     members to the EAV tag table on that type's id column, GROUP BY k, and
     UNION ALL the branches → (el, cnt, k). Members joined as-is (no
@@ -418,7 +425,7 @@ def rel_tag_freq(spark: SparkSession, sf_dir: str, rel_of: int = 1) -> DataFrame
     Plan: the pinned collection's members are a handful of rows → broadcast;
     the EAV side never shuffles except the per-branch GROUP BY k."""
     mem = typed_members(spark, sf_dir).filter(
-        F.col("collection_id") == rel_of
+        F.col("collection_id") == REL_OF
     )
     eav = _eav(spark, sf_dir)
     branches = []
@@ -570,7 +577,7 @@ def route_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def rel_member_tags(spark: SparkSession, sf_dir: str, rel_of: int = 1) -> DataFrame:
+def rel_member_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1:1 transcription of queries/rel-12120978.sql:1-15 — one relation's
     node members left-joined to two pinned-key tag slices, with the
     CAST-to-integer ordering key materialized as a column (`ref_int`; the
@@ -579,7 +586,7 @@ def rel_member_tags(spark: SparkSession, sf_dir: str, rel_of: int = 1) -> DataFr
     comparison). Mapping: rel_mem→collections members, rel_of→collection_id,
     ref→'q' (numeric-string tag), answer→'noun'."""
     mem = typed_members(spark, sf_dir).filter(
-        (F.col("collection_id") == rel_of) & F.col("image_id").isNotNull()
+        (F.col("collection_id") == REL_OF) & F.col("image_id").isNotNull()
     ).select(F.col("image_id").alias("nod_id"))
     eav = _eav(spark, sf_dir)
 

@@ -25,10 +25,11 @@ from pyspark.sql import types as T
 
 from ..functions.hashing import splitmix64, u01
 from ..session import read_parquet
+from .dedup import band_candidate_pairs
 
 ANN_K = 10
+ANN_QUERY_MOD = 20  # queries = vec_id % 20 == 0
 NEAR_DUP_TAU = 0.4
-SRP_BITS = 16
 SRP_DIM = 64
 SRP_SEED = 1234
 IVF_CENTROID_MOD = 50  # centroids = the deterministic sample vec_id % 50 == 1
@@ -51,7 +52,7 @@ _DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, e) -> acc + e)"
 EMB_DIM = 64  # embeddings table + emb_dups fixture dimension
 
 
-def _dot(a: str, b: str, dim: int = EMB_DIM) -> str:
+def _dot(a: str, b: str) -> str:
     """Left-fold dot product, codegen edition. Higher-order functions
     (aggregate/zip_with) are CodegenFallback in Spark — every element costs an
     interpreted lambda invocation, which dominates the pair-hot ANN / near-dup
@@ -62,9 +63,9 @@ def _dot(a: str, b: str, dim: int = EMB_DIM) -> str:
     twins replay), but it stays inside whole-stage codegen. Arrays of any
     other length take the HOF fold via a lazily-evaluated CASE branch, so the
     hot branch never pays for the fallback."""
-    terms = " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim))
+    terms = " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(EMB_DIM))
     return (
-        f"(CASE WHEN size({a}) = {dim} AND size({b}) = {dim} "
+        f"(CASE WHEN size({a}) = {EMB_DIM} AND size({b}) = {EMB_DIM} "
         f"THEN 0D + {terms} ELSE {_DOT.format(a=a, b=b)} END)"
     )
 
@@ -91,33 +92,49 @@ def _with_norm(df: DataFrame) -> DataFrame:
     return df.withColumn("norm", F.sqrt(F.expr(_dot("v", "v"))))
 
 
-def ann_topk_bruteforce(
-    spark: SparkSession, sf_dir: str, k: int = ANN_K, query_mod: int = 20
-) -> DataFrame:
-    """Exact cosine top-k: queries = vec_id % query_mod == 0 vs the full table.
-    → (query_id, neighbor_id, rnk, sim). Rank by (round(sim,6) desc, neighbor_id).
-
-    Plan: broadcast the small query side; candidates never shuffle; the only
-    shuffle is the per-query window top-k (keyed by query count)."""
-    base = _with_norm(_emb(spark, sf_dir))
-    queries = base.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qnorm")
+def _queries(base: DataFrame, *extra) -> DataFrame:
+    """The ANN query side: every ANN_QUERY_MOD-th vector → (query_id, qv,
+    qnorm, *extra)."""
+    return base.filter(F.col("vec_id") % ANN_QUERY_MOD == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qnorm"),
+        *extra,
     )
-    cand = _spread(base.select(F.col("vec_id").alias("neighbor_id"), "v", "norm")).crossJoin(
-        F.broadcast(queries)
-    ).filter(F.col("neighbor_id") != F.col("query_id"))
+
+
+def _topk(base: DataFrame, queries: DataFrame, key: str | None) -> DataFrame:
+    """Top-ANN_K neighbors per query by exact cosine → (query_id,
+    neighbor_id, rnk, sim), ranked by (round(sim, 6) desc, neighbor_id).
+
+    The broadcast query side meets every base vector (key None) or the base
+    vectors sharing its `key` value (IVF list, SRP bucket); candidates never
+    shuffle, and the only shuffle is the per-query window top-k (keyed by
+    query count)."""
+    keep = [key] if key else []
+    side = _spread(base.select(F.col("vec_id").alias("neighbor_id"), "v", "norm", *keep))
+    q = F.broadcast(queries)
+    cand = (side.crossJoin(q) if key is None else side.join(q, key)).filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
     sim = F.round(_cos_expr("qv", "v", "qnorm", "norm"), 6)
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
         cand.withColumn("sim", sim)
         .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= ANN_K)
         .select("query_id", "neighbor_id", "rnk", "sim")
     )
 
 
-def near_dup_pairs(spark: SparkSession, sf_dir: str, tau: float = NEAR_DUP_TAU) -> DataFrame:
-    """Exact embedding near-dup pairs: cosine ≥ tau, vec1 < vec2 → (vec1, vec2, sim)."""
+def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-k (_topk) of the ANN_QUERY_MOD queries against the
+    full table."""
+    base = _with_norm(_emb(spark, sf_dir))
+    return _topk(base, _queries(base), None)
+
+
+def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact embedding near-dup pairs: cosine ≥ NEAR_DUP_TAU, vec1 < vec2 →
+    (vec1, vec2, sim)."""
     base = _with_norm(_emb(spark, sf_dir))
     a = _spread(
         base.select(F.col("vec_id").alias("vec1"), F.col("v").alias("v1"), F.col("norm").alias("n1"))
@@ -129,7 +146,7 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str, tau: float = NEAR_DUP_TAU) 
     return (
         a.join(F.broadcast(b), F.col("vec1") < F.col("vec2"))
         .withColumn("sim", sim)
-        .filter(F.col("sim") >= tau)
+        .filter(F.col("sim") >= NEAR_DUP_TAU)
         .select("vec1", "vec2", "sim")
     )
 
@@ -153,15 +170,10 @@ def centroid_sims(m: np.ndarray, cmat: np.ndarray) -> np.ndarray:
     return acc / np.multiply.outer(np.sqrt(nm), np.sqrt(nc))
 
 
-def ann_topk_ivf(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = ANN_K,
-    query_mod: int = 20,
-    nprobe: int = IVF_NPROBE,
-) -> DataFrame:
+def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat approximate top-k: vectors partition into Voronoi lists of a
-    deterministic centroid sample; queries probe their `nprobe` nearest lists.
+    deterministic centroid sample; queries probe their IVF_NPROBE nearest
+    lists.
 
     The second ANN scale path (complementing SRP-LSH): at 10^12 scale the
     centroid list stays driver-small (one per ~50 vectors here; one per
@@ -193,32 +205,12 @@ def ann_topk_ivf(
     def probe_udf(v: pd.Series) -> pd.Series:
         ids, cm = bc.value
         m = np.stack(v.to_numpy()).astype(np.float64)
-        top = np.argsort(-centroid_sims(m, cm), axis=1, kind="stable")[:, :nprobe]
+        top = np.argsort(-centroid_sims(m, cm), axis=1, kind="stable")[:, :IVF_NPROBE]
         return pd.Series([ids[row].tolist() for row in top])
 
     lists = base.withColumn("centroid_id", assign_udf(F.col("v")))
-    queries = (
-        base.filter(F.col("vec_id") % query_mod == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("norm").alias("qnorm"),
-            F.explode(probe_udf(F.col("v"))).alias("centroid_id"),
-        )
-    )
-    cand = _spread(
-        lists.select(F.col("vec_id").alias("neighbor_id"), "v", "norm", "centroid_id")
-    ).join(F.broadcast(queries), "centroid_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    sim = F.round(_cos_expr("qv", "v", "qnorm", "norm"), 6)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("sim", sim)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "sim")
-    )
+    queries = _queries(base, F.explode(probe_udf(F.col("v"))).alias("centroid_id"))
+    return _topk(lists, queries, "centroid_id")
 
 
 def srp_bits_for(n: int) -> int:
@@ -233,16 +225,16 @@ def srp_bits_for(n: int) -> int:
     return max(4, int(math.floor(math.log2(max(n, 64) / 32.0))))
 
 
-def _srp_planes(bits: int = SRP_BITS) -> np.ndarray:
-    """Deterministic random hyperplanes: (bits, SRP_DIM) in [-1, 1)."""
-    idx = np.arange(bits * SRP_DIM, dtype=np.int64) + SRP_SEED
-    return (u01(splitmix64(idx)) * 2.0 - 1.0).reshape(bits, SRP_DIM)
+def _planes(rows: int, seed: int) -> np.ndarray:
+    """Deterministic random hyperplanes: (rows, SRP_DIM) in [-1, 1)."""
+    idx = np.arange(rows * SRP_DIM, dtype=np.int64) + seed
+    return (u01(splitmix64(idx)) * 2.0 - 1.0).reshape(rows, SRP_DIM)
 
 
 def _srp_bucket_udf(bits: int):
     @F.pandas_udf(T.LongType())
     def srp_bucket(v: pd.Series) -> pd.Series:
-        planes = _srp_planes(bits)
+        planes = _planes(bits, SRP_SEED)
         mat = np.stack(v.to_numpy())  # (n, dim)
         sign = (mat @ planes.T) > 0  # (n, bits)
         weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
@@ -251,14 +243,7 @@ def _srp_bucket_udf(bits: int):
     return srp_bucket
 
 
-def ann_topk_srp(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = ANN_K,
-    query_mod: int = 20,
-    bits: int | None = None,
-    probe_hamming: int = 2,
-) -> DataFrame:
+def ann_topk_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k: SRP sign-buckets with n-scaled width + Hamming≤2
     multi-probe (query probes its own bucket, every 1-bit-flip bucket, and
     every 2-bit-flip bucket — the classical multi-probe LSH trick: extra
@@ -273,37 +258,16 @@ def ann_topk_srp(
     construction (rows-only driver check); the registered ann_recall_srp
     query quantifies recall against the exact baseline per query."""
     base = _with_norm(_emb(spark, sf_dir))
-    if bits is None:
-        bits = srp_bits_for(base.count())
+    bits = srp_bits_for(base.count())
     base = base.withColumn("bucket", _srp_bucket_udf(bits)(F.col("v")))
     flips = [F.col("bucket")]
-    if probe_hamming >= 1:
-        flips += [F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(bits)]
-    if probe_hamming >= 2:
-        flips += [
-            F.col("bucket").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-            for i in range(bits)
-            for j in range(i + 1, bits)
-        ]
-    queries = base.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.explode(F.array(*flips)).alias("bucket"),
-    )
-    cand = _spread(
-        base.select(F.col("vec_id").alias("neighbor_id"), "v", "norm", "bucket")
-    ).join(
-        F.broadcast(queries), "bucket"
-    ).filter(F.col("neighbor_id") != F.col("query_id"))
-    sim = F.round(_cos_expr("qv", "v", "qnorm", "norm"), 6)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("sim", sim)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "sim")
-    )
+    flips += [F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(bits)]
+    flips += [
+        F.col("bucket").bitwiseXOR(F.lit((1 << i) | (1 << j)))
+        for i in range(bits)
+        for j in range(i + 1, bits)
+    ]
+    return _topk(base, _queries(base, F.explode(F.array(*flips)).alias("bucket")), "bucket")
 
 
 KMEANS_K_MOD = 50      # initial centroids: vec_id % 50 == 1 (same as IVF)
@@ -311,9 +275,7 @@ KMEANS_ITERS = 5       # fixed iteration count (frozen spec)
 KMEANS_SCALE = 1 << 20 # fixed-point scale for exact, order-independent sums
 
 
-def kmeans_assign(
-    spark: SparkSession, sf_dir: str, iters: int = KMEANS_ITERS
-) -> DataFrame:
+def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic k-means over the embeddings: (vec_id, cluster, dist2).
 
     Frozen spec making an iterative ML algorithm bit-exact and
@@ -325,7 +287,7 @@ def kmeans_assign(
         each coordinate is scaled by 2^20 and rounded to int64 before
         summation, so the reduce order cannot perturb the centroid
         (float sums are order-dependent; integer sums are not);
-      * exactly `iters` update rounds, then a final assignment;
+      * exactly KMEANS_ITERS update rounds, then a final assignment;
       * dist2 rounded to 6 decimals.
 
     Execution shape: per round, one Arrow-batched assignment pass (centroid
@@ -360,7 +322,7 @@ def kmeans_assign(
     # bround (half-even), NOT round (half-up): float32-derived doubles land
     # exactly on .5 at this scale, and the numpy twin rounds half-even
     qv = F.expr(f"transform(v, x -> cast(bround(x * {KMEANS_SCALE}) as bigint))")
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         bc = sc.broadcast(cent)
         assigned = base.withColumn("cluster", make_assign_udf(bc)(F.col("v")))
         # per-(cluster, dim) exact integer partial sums — map-side combinable,
@@ -415,17 +377,11 @@ def nd_bits_for(n: int) -> int:
     return max(ND_BITS, min(48, math.ceil(math.log2(max(n, 2) / ND_TARGET_BUCKET))))
 
 
-def _nd_planes(bits: int = ND_BITS) -> np.ndarray:
-    """(ND_BANDS * bits, SRP_DIM) deterministic hyperplanes in [-1, 1)."""
-    idx = np.arange(ND_BANDS * bits * SRP_DIM, dtype=np.int64) + ND_SEED
-    return (u01(splitmix64(idx)) * 2.0 - 1.0).reshape(ND_BANDS * bits, SRP_DIM)
-
-
 def _nd_band_keys_udf(bits: int):
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def nd_band_keys(v: pd.Series) -> pd.Series:
         """Per-band SRP keys: ND_BANDS longs, each packing `bits` sign bits."""
-        planes = _nd_planes(bits)
+        planes = _planes(ND_BANDS * bits, ND_SEED)
         mat = np.stack(v.to_numpy())
         signs = (mat @ planes.T) > 0                  # (n, bands*bits)
         signs = signs.reshape(len(mat), ND_BANDS, bits)
@@ -436,9 +392,7 @@ def _nd_band_keys_udf(bits: int):
     return nd_band_keys
 
 
-def emb_near_dup_bucketed(
-    spark: SparkSession, sf_dir: str, tau: float = ND_TAU
-) -> DataFrame:
+def emb_near_dup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via banded SRP-LSH prefilter + exact cosine refine —
     the scale path for embedding near-dup (no all-pairs join anywhere).
 
@@ -479,19 +433,7 @@ def emb_near_dup_bucketed(
             .alias("bkey"),
         )
     )
-    s1, s2 = sigs.alias("s1"), sigs.alias("s2")
-    cand = (
-        s1.join(
-            s2,
-            (F.col("s1.bkey") == F.col("s2.bkey"))
-            & (F.col("s1.vec_id") < F.col("s2.vec_id")),
-        )
-        .select(
-            F.col("s1.vec_id").alias("vec1"),
-            F.col("s2.vec_id").alias("vec2"),
-        )
-        .dropDuplicates(["vec1", "vec2"])
-    )
+    cand = band_candidate_pairs(sigs, "vec_id", ("vec1", "vec2"))
     v1 = base.select(
         F.col("vec_id").alias("vec1"), F.col("v").alias("v1"), F.col("norm").alias("n1")
     )
@@ -503,18 +445,12 @@ def emb_near_dup_bucketed(
         cand.join(v1, "vec1")
         .join(v2, "vec2")
         .withColumn("sim", sim)
-        .filter(F.col("sim") >= tau)
+        .filter(F.col("sim") >= ND_TAU)
         .select("vec1", "vec2", "sim")
     )
 
 
-def ann_recall_srp(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = ANN_K,
-    query_mod: int = 20,
-    probe_hamming: int = 2,
-) -> DataFrame:
+def ann_recall_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantitative recall@k of the SRP multi-probe ANN against the exact
     brute-force baseline → (query_id, recall). This turns the approximate
     path's rows-only status into a measured number: the golden twin
@@ -523,32 +459,20 @@ def ann_recall_srp(
 
     Plan: both sides are the already-registered queries; the evaluation
     itself is a broadcast-size semi join + per-query count."""
-    exact = ann_topk_bruteforce(spark, sf_dir, k=k, query_mod=query_mod)
-    approx = ann_topk_srp(
-        spark, sf_dir, k=k, query_mod=query_mod, probe_hamming=probe_hamming
-    )
-    return _recall_vs_exact(exact, approx, k)
+    return _recall_vs_exact(ann_topk_bruteforce(spark, sf_dir), ann_topk_srp(spark, sf_dir))
 
 
-def ann_recall_ivf(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = ANN_K,
-    query_mod: int = 20,
-    nprobe: int = IVF_NPROBE,
-) -> DataFrame:
+def ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantitative recall@k of the IVF-flat ANN against the exact
     brute-force baseline → (query_id, recall) — the IVF twin of
     ann_recall_srp, so BOTH approximate paths carry a measured number. The
     golden twin (fixtures_text.ensure_golden_recall_ivf) replays centroid
     selection, the fold-arithmetic assignment/probe (centroid_sims), and both
     top-k sides in plain numpy."""
-    exact = ann_topk_bruteforce(spark, sf_dir, k=k, query_mod=query_mod)
-    approx = ann_topk_ivf(spark, sf_dir, k=k, query_mod=query_mod, nprobe=nprobe)
-    return _recall_vs_exact(exact, approx, k)
+    return _recall_vs_exact(ann_topk_bruteforce(spark, sf_dir), ann_topk_ivf(spark, sf_dir))
 
 
-def _recall_vs_exact(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+def _recall_vs_exact(exact: DataFrame, approx: DataFrame) -> DataFrame:
     """recall@k per query: |approx ∩ exact| / k — broadcast-size semi join +
     per-query count (both sides are ≤ |queries| × k rows)."""
     hits = (
@@ -559,5 +483,5 @@ def _recall_vs_exact(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
     all_q = exact.select("query_id").distinct()
     return all_q.join(hits, "query_id", "left").select(
         "query_id",
-        (F.coalesce(F.col("n_hit"), F.lit(0)) / float(k)).alias("recall"),
+        (F.coalesce(F.col("n_hit"), F.lit(0)) / float(ANN_K)).alias("recall"),
     )

@@ -16,10 +16,10 @@ from pyspark.sql import functions as F
 DEFAULT_SALT = 16
 
 
-def salted_group_count(df: DataFrame, key: str, salt: int = DEFAULT_SALT) -> DataFrame:
-    """count per key via salt → partial → merge. → (key, n)."""
+def salted_group_count(df: DataFrame, key: str) -> DataFrame:
+    """count per key via DEFAULT_SALT salt → partial → merge. → (key, n)."""
     partial = (
-        df.withColumn("_salt", F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(salt)))
+        df.withColumn("_salt", F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(DEFAULT_SALT)))
         .groupBy(key, "_salt")
         .agg(F.count(F.lit(1)).alias("_pn"))
     )

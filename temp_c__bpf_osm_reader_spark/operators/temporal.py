@@ -109,18 +109,17 @@ def asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def event_pairs_window(
-    spark: SparkSession, sf_dir: str, window_s: int = RANGE_WINDOW_S
-) -> DataFrame:
+def event_pairs_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded range self-join: ordered pairs of same-user events with
-    0 ≤ t2 − t1 ≤ window_s → (user_id, event1, event2, dt_s).
+    0 ≤ t2 − t1 ≤ RANGE_WINDOW_S → (user_id, event1, event2, dt_s).
 
-    Left rows are replicated into time bins {b, b+1} (bin width = window_s) so
+    Left rows are replicated into time bins {b, b+1} (bin width =
+    RANGE_WINDOW_S) so
     every qualifying pair meets on the (user_id, bin) equi key; the exact time
     predicate filters after the equi join. The ordering tie at equal ts breaks
     by event_id so each unordered pair appears exactly once.
     """
-    w_us = window_s * 1_000_000
+    w_us = RANGE_WINDOW_S * 1_000_000
     ev = _events(spark, sf_dir).select(
         "event_id",
         "user_id",

@@ -1,18 +1,26 @@
 """Text-analysis operators over the `documents` table — the training-data
 pipeline layer (language-ID heuristic, quality scoring, token counting,
-fingerprinting, exact dedup). All JVM-side built-ins; the fingerprint uses
-md5 (identical semantics in Spark and DuckDB → oracle-exact).
+fingerprinting, exact dedup, word-n-gram analytics). All JVM-side
+built-ins; the fingerprint uses md5 (identical semantics in Spark and
+DuckDB → oracle-exact), and every n-gram operator takes its grams from
+_grams.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import read_parquet
 from ..sources import fixtures
+
+NGRAM_N = 3
+NGRAM_THRESHOLD = 0.5
+DECONTAM_N = 5
+BENCH_MOD = 97  # benchmark slice: doc_id % 97 == 0
+REPETITION_N = 2
 
 STOPWORDS = {
     "en": ["the", "a", "of"],
@@ -24,6 +32,16 @@ STOPWORDS = {
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+
+
+def _grams(n: int) -> Column:
+    """The word n-grams of `text`, in order (array<string>)."""
+    return F.expr(
+        # greatest(..., 1): short docs yield one whole-text gram,
+        # and sequence(1, 0) in Spark would count DOWN, not empty
+        f"transform(sequence(1, greatest(size(split(text, ' ')) - {n - 1}, 1)), "
+        f"i -> concat_ws(' ', slice(split(text, ' '), i, {n})))"
+    )
 
 
 def _count_token(col, word):
@@ -124,29 +142,15 @@ def caption_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, n: int = 3, threshold: float = 0.5
-) -> DataFrame:
-    """Near-dup pairs by exact word-n-gram Jaccard ≥ threshold.
+def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pairs by exact word-NGRAM_N-gram Jaccard ≥ NGRAM_THRESHOLD.
 
     Plan: distinct n-gram shingles per doc (JVM transform over split tokens) →
     self-equi-join on shingle → per-pair intersection counts → Jaccard.
     At scale the shingle join shuffles on the shingle hash — the standard
     exact-verification stage after LSH prefiltering (dedup.py)."""
     d = _docs(spark, sf_dir).select("doc_id", "text")
-    grams = d.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    # greatest(..., 1): short docs yield one whole-text gram,
-                    # and sequence(1, 0) in Spark would count DOWN, not empty
-                    f"transform(sequence(1, greatest(size(split(text, ' ')) - {n - 1}, 1)), "
-                    f"i -> concat_ws(' ', slice(split(text, ' '), i, {n})))"
-                )
-            )
-        ).alias("gram"),
-    )
+    grams = d.select("doc_id", F.explode(F.array_distinct(_grams(NGRAM_N))).alias("gram"))
     sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     g1 = grams.alias("g1")
     g2 = grams.alias("g2")
@@ -162,20 +166,18 @@ def ngram_jaccard_pairs(
         inter.join(s1, "doc1")
         .join(s2, "doc2")
         .withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= NGRAM_THRESHOLD)
         .select("doc1", "doc2", "jaccard")
     )
 
 
-def decontaminate(
-    spark: SparkSession, sf_dir: str, n: int = 5, bench_mod: int = 97
-) -> DataFrame:
+def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination — the training-corpus hygiene step every
     LLM data pipeline runs before training: flag corpus documents that
-    share any word n-gram with a held-out benchmark set, so eval data
+    share any word DECONTAM_N-gram with a held-out benchmark set, so eval data
     can't leak into the training set.
 
-    The benchmark here is the deterministic slice doc_id % bench_mod == 0
+    The benchmark here is the deterministic slice doc_id % BENCH_MOD == 0
     (standing in for an external eval set); a corpus doc is contaminated
     when any of its distinct n-grams appears in any benchmark doc.  Output
     (doc_id, n_hits, witness_gram): number of distinct leaked n-grams and
@@ -184,7 +186,7 @@ def decontaminate(
     Plan: in production the benchmark is a FIXED external eval set (its
     gram count does not grow with the corpus), so its distinct-gram set
     broadcasts and the join is map-side — no shuffle of the corpus grams
-    at any corpus size.  Here the benchmark is derived as a 1/bench_mod
+    at any corpus size.  Here the benchmark is derived as a 1/BENCH_MOD
     slice of the corpus, which DOES grow linearly, so the broadcast hint
     is size-gated: above `max_broadcast_bench_docs` estimated benchmark
     docs the hint is dropped and Catalyst plans a shuffle join instead
@@ -192,14 +194,8 @@ def decontaminate(
     bound is therefore the eval set's size, never the corpus.
     """
     d = _docs(spark, sf_dir).select("doc_id", "text")
-    gram_expr = (
-        f"transform(sequence(1, greatest(size(split(text, ' ')) - {n - 1}, 1)), "
-        f"i -> concat_ws(' ', slice(split(text, ' '), i, {n})))"
-    )
-    grams = d.select(
-        "doc_id", F.explode(F.array_distinct(F.expr(gram_expr))).alias("gram")
-    )
-    is_bench = F.col("doc_id") % bench_mod == 0
+    grams = d.select("doc_id", F.explode(F.array_distinct(_grams(DECONTAM_N))).alias("gram"))
+    is_bench = F.col("doc_id") % BENCH_MOD == 0
     bench_grams = grams.where(is_bench).select("gram").distinct()
     # estimate the benchmark-doc count from parquet footer metadata (no
     # Spark action): gate the forced broadcast on it
@@ -212,7 +208,7 @@ def decontaminate(
         ).metadata.num_rows
     except Exception:  # noqa: BLE001 — metadata probe is best-effort
         n_docs = None
-    small_bench = n_docs is not None and n_docs // bench_mod <= max_broadcast_bench_docs
+    small_bench = n_docs is not None and n_docs // BENCH_MOD <= max_broadcast_bench_docs
     bench_side = F.broadcast(bench_grams) if small_bench else bench_grams
     return (
         grams.where(~is_bench)
@@ -225,32 +221,27 @@ def decontaminate(
     )
 
 
-def repetition_stats(spark: SparkSession, sf_dir: str, n: int = 2) -> DataFrame:
+def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repetition quality signal (the Gopher-rules "fraction of characters
     in the most common n-gram" family): per document, the total n-gram
-    count and the single most frequent n-gram with its multiplicity —
-    heavy repetition (top_gram_n / n_grams high) marks boilerplate and
-    degenerate generations a training pipeline filters out.
+    REPETITION_N-gram count and the single most frequent one with its
+    multiplicity — heavy repetition (top_gram_n / n_grams high) marks
+    boilerplate and degenerate generations a training pipeline filters out.
 
     Determinism: the top gram ties break by (count DESC, gram DESC) via
     one window row_number — identical ordering semantics in the DuckDB
     oracle, so the winner is engine-independent. Exact integers only.
 
-    Plan: non-distinct gram explode (same JVM transform/slice expression
-    as the dedup family) → map-side-combinable groupBy (doc_id, gram) →
-    per-doc window on the gram-count table (state bounded by distinct
-    grams per doc, ≤ tokens). Two doc-keyed shuffles, text never shuffles
-    beyond its own grams.
+    Plan: non-distinct gram explode (_grams) → map-side-combinable groupBy
+    (doc_id, gram) → per-doc window on the gram-count table (state bounded
+    by distinct grams per doc, ≤ tokens). Two doc-keyed shuffles, text
+    never shuffles beyond its own grams.
     """
     from pyspark.sql import Window
 
     d = _docs(spark, sf_dir).select("doc_id", "text")
-    gram_expr = (
-        f"transform(sequence(1, greatest(size(split(text, ' ')) - {n - 1}, 1)), "
-        f"i -> concat_ws(' ', slice(split(text, ' '), i, {n})))"
-    )
     counts = (
-        d.select("doc_id", F.explode(F.expr(gram_expr)).alias("gram"))
+        d.select("doc_id", F.explode(_grams(REPETITION_N)).alias("gram"))
         .groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

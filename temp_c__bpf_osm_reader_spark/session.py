@@ -84,6 +84,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # only applies when this builder starts the JVM: under spark-submit
+        # the driver is already running with spark-submit's --driver-memory
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         # deterministic float aggregation order is NOT assumed anywhere;

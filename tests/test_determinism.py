@@ -36,6 +36,8 @@ def test_kmeans_bit_identical_across_scan_partitioning(spark, tiny_splits):
 def test_dedup_clusters_identical_across_scan_partitioning(spark, tiny_splits):
     from temp_c__bpf_osm_reader_spark.operators import dedup
 
+    # phash_near_dup's exact recall needs flips < bands (pigeonhole)
+    assert dedup.PHASH_MAX_HAMMING < dedup.HAMMING_BANDS
     b = _sorted(dedup.dedup_clusters(spark, SF), ["doc_id"])
     spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
     a = _sorted(dedup.dedup_clusters(spark, SF), ["doc_id"])

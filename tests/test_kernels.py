@@ -273,7 +273,7 @@ def test_nd_bits_scaling_law():
     # reproduce the original fixed-width planes bit-for-bit (oracle identity).
     import numpy as np
 
-    p8 = S._nd_planes(8)
+    p8 = S._planes(S.ND_BANDS * 8, S.ND_SEED)
     assert p8.shape == (S.ND_BANDS * 8, S.SRP_DIM)
     idx = np.arange(S.ND_BANDS * 8 * S.SRP_DIM, dtype=np.int64) + S.ND_SEED
     from temp_c__bpf_osm_reader_spark.functions.hashing import splitmix64, u01

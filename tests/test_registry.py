@@ -19,7 +19,7 @@ def test_registry_values_are_module_level_functions():
         assert inspect.isfunction(fn), name
         assert fn.__name__ != "<lambda>", name
         assert getattr(sys.modules[fn.__module__], fn.__name__, None) is fn, name
-        inspect.signature(fn).bind("spark", "sf_dir")
+        assert list(inspect.signature(fn).parameters) == ["spark", "sf_dir"], name
 
 
 def test_no_api_function_only_forwards_spark_and_sf_dir():

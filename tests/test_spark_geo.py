@@ -348,7 +348,7 @@ def test_polygonize_wrap_snake_and_region_stats(spark):
     do not wrap across the pole, and a full-row ring (a cycle through the
     wrap) labels as a single region.  The long snake exercises pointer
     jumping: its diameter (ny + nx) far exceeds the round count a pure
-    propagation of max_iter=30 could close without the jump."""
+    propagation of dedup.CC_MAX_ITER rounds could close without the jump."""
     from temp_c__bpf_osm_reader_spark.functions import geo
     from temp_c__bpf_osm_reader_spark.operators import raster
 
@@ -507,7 +507,7 @@ def test_cell_compact_expands_back_to_original_cover(spark, fx):
     distinct level-12 cell set EXACTLY (no cell lost, none invented, no
     overlap between compacted entries)."""
     pts = load_points(spark, fx)
-    out = indexing.cell_compact(pts, level=12, min_level=10).toPandas()
+    out = indexing.cell_compact(pts).toPandas()
     orig = set(
         pts.select(F.col("zcell_l12").alias("c")).distinct().toPandas()["c"].tolist()
     )

@@ -63,7 +63,7 @@ def test_range_join_bin_boundary(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
     df.write.parquet(str(tmp_path / "events.parquet"))
-    out = temporal.event_pairs_window(df.sparkSession, str(tmp_path), window_s=300)
+    out = temporal.event_pairs_window(df.sparkSession, str(tmp_path))
     pairs = {(r["event1"], r["event2"]) for r in out.collect()}
     # dt(1,2) = 300s exactly → included; dt(2,3) = 300.000001s → excluded
     assert pairs == {(1, 2)}
