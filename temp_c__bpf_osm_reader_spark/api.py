@@ -153,18 +153,14 @@ def q_raster_density(spark, sf_dir):
     Emits one row per occupied raster pixel (row_i, col_j) with its
     density — the vector→raster half of the north rule's raster↔vector
     pair; tile_assignment is the raster→vector half (grid cell →
-    deterministic ordered image table). Pure JVM bit ops on the packed
-    cell_id ((r<<54)|(i<<27)|j, geo.py header): a map-side-combinable
-    groupBy on two small longs — at 10^12 rows the shuffle carries only
+    deterministic ordered image table). The pixel is the res-8 cell id
+    decoded JVM-side (indexing.cell_ij): a map-side-combinable groupBy on
+    two small longs — at 10^12 rows the shuffle carries only
     one partial row per (pixel × task)."""
-    mask = (1 << 27) - 1
+    i, j = indexing.cell_ij(F.col("cell_r8"))
     return (
-        _cells(spark, sf_dir, 8).select(
-            F.shiftright("cell_r8", 27).bitwiseAND(F.lit(mask)).alias("row_i"),
-            F.col("cell_r8").bitwiseAND(F.lit(mask)).alias("col_j"),
-            "image_id",
-        )
-        .groupBy("row_i", "col_j")
+        _cells(spark, sf_dir, 8)
+        .groupBy(i.alias("row_i"), j.alias("col_j"))
         .agg(F.count("*").alias("n_images"), F.min("image_id").alias("first_image"))
     )
 

@@ -110,7 +110,9 @@ def band_candidate_pairs(bands: DataFrame, id_col: str, pair_cols: tuple[str, st
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """→ (doc1, doc2, sig_match) candidate near-dup pairs (spec above)."""
-    sigs = minhash_signatures(_docs(spark, sf_dir)).cache()
+    # materialized once for the band explode and both verify joins; a local
+    # checkpoint, not cache(), so nothing stays pinned after the call
+    sigs = minhash_signatures(_docs(spark, sf_dir)).localCheckpoint()
     # band key = xxhash64(band_id, band slice): band equality ⊆ hash
     # equality, so candidates are a superset only under a 64-bit collision
     # between distinct band slices, and every candidate is verified on the

@@ -7,7 +7,10 @@ columns; the physical layout step is `repartition(cell).sortWithinPartitions`.
 
 Cell math is plain floor/bit arithmetic in pyspark.sql.functions — JVM-side,
 whole-stage-codegen'd, and replicable in ANSI SQL by the DuckDB oracle
-(`oracle_cell_expr` emits the exact same formula as SQL text).
+(`oracle_cell_expr` emits the exact same formula as SQL text). This is the
+one Spark module that knows the packed cell layout (functions/geo.py) and
+the grid's cylinder topology: every other operator decodes, packs and
+expands cells through cell_ij, cell_of, pixel_key and neighbours.
 """
 
 from __future__ import annotations
@@ -15,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geo import RES_SHIFT, I_SHIFT
+from ..functions.geo import I_SHIFT, IJ_MASK, RES_SHIFT, grid_dims
 
 
 def geolocate_expr(df: DataFrame) -> DataFrame:
@@ -31,15 +34,57 @@ def geolocate_expr(df: DataFrame) -> DataFrame:
     return df.select("image_id", lat.alias("lat"), lon.alias("lon"))
 
 
+def cell_ij(cell: Column) -> tuple[Column, Column]:
+    """Packed cell id → its (i, j) pixel as bigint columns."""
+    return (
+        F.shiftright(cell, I_SHIFT).bitwiseAND(F.lit(IJ_MASK)),
+        cell.bitwiseAND(F.lit(IJ_MASK)),
+    )
+
+
+def pixel_key(i: Column, j: Column) -> Column:
+    """(i, j) → the resolution-free pixel key (i << I_SHIFT) | j: the low
+    bits of the packed cell id."""
+    return F.shiftleft(i.cast("bigint"), I_SHIFT).bitwiseOR(j.cast("bigint"))
+
+
+def cell_of(res: int, i: Column, j: Column) -> Column:
+    """(i, j) at resolution res → packed cell id (functions/geo.py layout)."""
+    return F.lit(res << RES_SHIFT).cast("bigint").bitwiseOR(pixel_key(i, j))
+
+
 def grid_cell_col(lat: Column, lon: Column, res: int) -> Column:
     """int64 cell id — same frozen spec as functions/geo.py:grid_cell."""
-    ny, nx = 1 << res, 1 << (res + 1)
+    ny, nx = grid_dims(res)
     i = F.least(F.greatest(F.floor((lat + 90.0) / 180.0 * ny), F.lit(0)), F.lit(ny - 1))
     j = F.pmod(F.floor((lon + 180.0) / 360.0 * nx), F.lit(nx))
+    return cell_of(res, i, j)
+
+
+def ring_offsets(k: int) -> list[tuple[int, int]]:
+    """The (2k+1)² (di, dj) offsets of a Chebyshev k-ring (geo.k_ring)."""
+    return [(di, dj) for di in range(-k, k + 1) for dj in range(-k, k + 1)]
+
+
+def neighbours(df: DataFrame, i: Column, j: Column, res: int, offsets) -> DataFrame:
+    """df × offsets → df's columns + (di, dj, ni, nj): for every row and
+    (di, dj) offset, the neighbour pixel (ni, nj) of the row's pixel (i, j)
+    on the res grid's cylinder (geo.k_ring's topology) — longitude wraps
+    (nj = (j + dj) mod nx) and neighbours past a pole (ni outside [0, ny))
+    are dropped. di/dj stay on the row so a caller can tag the centre.
+
+    The offsets ride a broadcast cross join (a LocalRelation of (di, dj)
+    rows, so a 4,225-offset ring-32 table plans as fast as a 9-offset one):
+    the input side never shuffles. Offsets are not deduplicated: on a grid
+    narrower than the stencil (nx ≤ 2·max|dj|) two offsets can name the
+    same pixel."""
+    ny, nx = grid_dims(res)
+    offs = df.sparkSession.createDataFrame(list(offsets), "di int, dj int")
     return (
-        F.lit(res).cast("bigint") * F.lit(1 << RES_SHIFT).cast("bigint")
-        + i.cast("bigint") * F.lit(1 << I_SHIFT).cast("bigint")
-        + j.cast("bigint")
+        df.crossJoin(F.broadcast(offs))
+        .withColumn("ni", i + F.col("di"))
+        .withColumn("nj", F.pmod(j + F.col("dj"), F.lit(nx)))
+        .where((F.col("ni") >= 0) & (F.col("ni") < ny))
     )
 
 
@@ -57,7 +102,7 @@ def z_cell_col(lat: Column, lon: Column, level: int = 12) -> Column:
 
 def oracle_cell_expr(lat: str, lon: str, res: int) -> str:
     """The grid-cell formula as ANSI SQL (DuckDB oracle twin of grid_cell_col)."""
-    ny, nx = 1 << res, 1 << (res + 1)
+    ny, nx = grid_dims(res)
     i = f"least(greatest(floor(({lat} + 90.0) / 180.0 * {ny}), 0), {ny - 1})"
     j = f"((CAST(floor(({lon} + 180.0) / 360.0 * {nx}) AS BIGINT) % {nx} + {nx}) % {nx})"
     return (

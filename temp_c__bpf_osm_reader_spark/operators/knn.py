@@ -11,8 +11,8 @@ at 10^12-point scale the ring bound is the scalable contract (candidates per
 query stay O(density × ring²)).
 
 Execution shape: the query side is small relative to points → the expanded
-(neighbor_cell → query) table is built JVM-side (cross join with a tiny
-offsets table, pure bit arithmetic, no UDF) and broadcast; the points side
+(neighbor_cell → query) table is built JVM-side by the shared grid
+expansion (indexing.neighbours, no UDF) and broadcast; the points side
 never shuffles. Top-k is a window over candidates, shuffled by query id —
 the only shuffle, keyed on the small side's cardinality.
 """
@@ -22,17 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.geo import (
-    EARTH_R_M,
-    I_SHIFT,
-    IJ_MASK,
-    KNN_K,
-    KNN_RES,
-    KNN_RING,
-    KNN_RINGS,
-    RES_SHIFT,
-)
-from .indexing import grid_cell_col
+from ..functions.geo import EARTH_R_M, KNN_K, KNN_RES, KNN_RING, KNN_RINGS
+from .indexing import cell_ij, cell_of, grid_cell_col, neighbours, ring_offsets
 
 
 def haversine_m_col(lat1, lon1, lat2, lon2):
@@ -54,29 +45,14 @@ def expand_query_cells(
     res: int = KNN_RES,
     ring: int = KNN_RING,
 ) -> DataFrame:
-    """(query …, qlat, qlon) × ring offsets → (neighbor cell_id, query …) —
-    JVM-side k-ring."""
-    spark = queries.sparkSession
-    ny, nx = 1 << res, 1 << (res + 1)
-    offsets = spark.range(-ring, ring + 1).select(F.col("id").alias("di")).crossJoin(
-        spark.range(-ring, ring + 1).select(F.col("id").alias("dj"))
+    """(query …, qlat, qlon) → (neighbor cell_id, query …): one row per cell
+    of the query cell's k-ring (indexing.neighbours), JVM-side."""
+    qi, qj = cell_ij(grid_cell_col(F.col("qlat"), F.col("qlon"), res))
+    return (
+        neighbours(queries, qi, qj, res, ring_offsets(ring))
+        .withColumn("cell_id", cell_of(res, F.col("ni"), F.col("nj")))
+        .drop("di", "dj", "ni", "nj")
     )
-    q = queries.withColumn("qcell", grid_cell_col(F.col("qlat"), F.col("qlon"), res))
-    qi = F.shiftright(F.col("qcell"), I_SHIFT).bitwiseAND(F.lit(IJ_MASK))
-    qj = F.col("qcell").bitwiseAND(F.lit(IJ_MASK))
-    expanded = (
-        q.crossJoin(F.broadcast(offsets))
-        .withColumn("ni", qi + F.col("di"))
-        .withColumn("nj", F.pmod(qj + F.col("dj"), F.lit(nx)))
-        .filter((F.col("ni") >= 0) & (F.col("ni") < ny))
-        .withColumn(
-            "cell_id",
-            F.lit(res).cast("bigint") * F.lit(1 << RES_SHIFT).cast("bigint")
-            + F.col("ni") * F.lit(1 << I_SHIFT).cast("bigint")
-            + F.col("nj"),
-        )
-    )
-    return expanded.drop("di", "dj", "ni", "nj", "qcell")
 
 
 def knn_join(

@@ -16,11 +16,10 @@ that sit on top of a rasterized layer:
   * focal_sum() — 3×3 neighborhood (focal/convolution) statistic: each
     occupied pixel's count plus its 8 neighbors'.  Runs entirely on the
     aggregated raster (bounded by the grid, 2^res × 2^(res+1) pixels), via
-    the offset _stencil (center tagged) + one pixel-keyed shuffle;
-    longitude wraps (mod nx), latitude clamps (rows outside [0, ny) are
-    dropped), matching the cylinder topology of geo.grid_cell
-    (functions/geo.py:119-137).  global_autocorr() and local_autocorr()
-    (Moran's I, global and per pixel) run on the same stencil.
+    the offset _stencil (center tagged) + one pixel-keyed shuffle, on the
+    grid's cylinder topology (indexing.neighbours: longitude wraps,
+    latitude clamps).  global_autocorr() and local_autocorr() (Moran's I,
+    global and per pixel) run on the same stencil.
   * polygonize() — raster→vector region extraction: 4-connected component
     labeling over the occupied pixels, emitting one REGION row per
     component (GDAL's gdal_polygonize / PostGIS ST_DumpAsPolygons class).
@@ -30,10 +29,9 @@ that sit on top of a rasterized layer:
     pixels) no matter how many input rows fed it — at 10^12 images and
     res 8 the component graph still has ≤ 131k nodes.
 
-Cell ids are the packed (res << 54) | (i << 27) | j layout from
-functions/geo.py; pixel extraction is pure JVM bit ops (shiftright / AND),
-identical to the oracle's DuckDB expression, so both halves of the contract
-decode the same integers.
+Pixels come from operators/indexing.py, the one Spark module that knows the
+packed cell layout: cell_ij decodes a cell id, neighbours expands a pixel to
+its offset neighbours and pixel_key is polygonize's region id.
 """
 
 from __future__ import annotations
@@ -41,48 +39,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geo import I_SHIFT, IJ_MASK
 from .dedup import connected_components
+from .indexing import cell_ij, neighbours, pixel_key, ring_offsets
 
 
 def density(points: DataFrame, cell_col: str) -> DataFrame:
     """Rasterize a point layer: (row_i, col_j, n_images) per occupied pixel."""
-    return (
-        points.select(
-            F.shiftright(cell_col, I_SHIFT).bitwiseAND(F.lit(IJ_MASK)).alias("row_i"),
-            F.col(cell_col).bitwiseAND(F.lit(IJ_MASK)).alias("col_j"),
-        )
-        .groupBy("row_i", "col_j")
-        .agg(F.count(F.lit(1)).alias("n_images"))
+    i, j = cell_ij(F.col(cell_col))
+    return points.groupBy(i.alias("row_i"), j.alias("col_j")).agg(
+        F.count(F.lit(1)).alias("n_images")
     )
 
 
 def _stencil(points: DataFrame, cell_col: str, res: int, offsets) -> DataFrame:
     """Offset stencil over the rasterized layer: every occupied pixel sends
-    its count to each (di, dj) offset's target pixel → (ci, cj, n_images,
-    is_center), is_center tagging the (0, 0) offset. col_j wraps modulo nx
-    (longitude is periodic; at nx == 2 a column's east and west borders are
-    two distinct adjacencies); targets beyond the poles (row_i outside
-    [0, ny)) are dropped. Callers group by the target pixel: the center tag
+    its count to each (di, dj) offset's target pixel → (ni, nj, n_images,
+    is_center), is_center tagging the (0, 0) offset. Targets follow
+    indexing.neighbours (col_j wraps modulo nx — at nx == 2 a column's east
+    and west borders are two distinct adjacencies; targets beyond the poles
+    are dropped). Callers group by the target pixel: the center tag
     folds "join back to the base raster" into that one aggregate, so a
     statistic costs the rasterization (the only full-table pass) plus one
     raster-bounded shuffle — a join back would re-run the full-table
     rasterization for the probe side (no cross-subtree exchange reuse;
     .cache() measured slower at sf1.0 — see pyramid())."""
-    ny, nx = 1 << res, 1 << (res + 1)
-    arr = F.array(
-        *[F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj")) for di, dj in offsets]
-    )
-    return (
-        density(points, cell_col)
-        .select("row_i", "col_j", "n_images", F.explode(arr).alias("o"))
-        .select(
-            (F.col("row_i") + F.col("o.di")).alias("ci"),
-            F.pmod(F.col("col_j") + F.col("o.dj"), F.lit(nx)).alias("cj"),
-            "n_images",
-            ((F.col("o.di") == 0) & (F.col("o.dj") == 0)).alias("is_center"),
-        )
-        .where((F.col("ci") >= 0) & (F.col("ci") < ny))
+    pixels = density(points, cell_col)
+    return neighbours(pixels, F.col("row_i"), F.col("col_j"), res, offsets).select(
+        "ni", "nj", "n_images", ((F.col("di") == 0) & (F.col("dj") == 0)).alias("is_center")
     )
 
 
@@ -137,18 +120,17 @@ def focal_sum(points: DataFrame, cell_col: str, res: int) -> DataFrame:
     "center must be occupied" filter. The center contribution is
     unambiguous under wrap/clamp: offset (0,0) maps a pixel to itself only.
     """
-    offsets = [(di, dj) for di in (-1, 0, 1) for dj in (-1, 0, 1)]
     return (
-        _stencil(points, cell_col, res, offsets)
-        .groupBy("ci", "cj")
+        _stencil(points, cell_col, res, ring_offsets(1))
+        .groupBy("ni", "nj")
         .agg(
             F.sum("n_images").alias("focal_n"),
             F.max(F.when(F.col("is_center"), F.col("n_images"))).alias("center_n"),
         )
         .where(F.col("center_n").isNotNull())
         .select(
-            F.col("ci").alias("row_i"),
-            F.col("cj").alias("col_j"),
+            F.col("ni").alias("row_i"),
+            F.col("nj").alias("col_j"),
             F.col("center_n").alias("n_images"),
             "focal_n",
         )
@@ -158,8 +140,8 @@ def focal_sum(points: DataFrame, cell_col: str, res: int) -> DataFrame:
 def polygonize(points: DataFrame, cell_col: str, res: int) -> DataFrame:
     """Raster→vector region extraction: 4-connected components over the
     occupied pixels → one row per region: (region_id, n_cells, n_images,
-    min_i, max_i, min_j, max_j), region_id = min packed pixel key
-    ((i << 27) | j) of the component.
+    min_i, max_i, min_j, max_j), region_id = min indexing.pixel_key of the
+    component's pixels.
 
     Adjacency is 4-connectivity on the cylinder: col_j wraps modulo nx
     (longitude is periodic — a region crossing the antimeridian is ONE
@@ -173,25 +155,18 @@ def polygonize(points: DataFrame, cell_col: str, res: int) -> DataFrame:
     min-label propagation with pointer jumping: a res-8 raster's worst-case
     path is ~768 pixels, ~10 rounds) costs the same at 10^12 images as at
     10^4."""
-    ny, nx = 1 << res, 1 << (res + 1)
-    key = F.shiftleft("row_i", I_SHIFT).bitwiseOR(F.col("col_j"))
+    i, j = F.col("row_i"), F.col("col_j")
     nodes = density(points, cell_col).select(
-        key.alias("cell"), "row_i", "col_j", "n_images"
+        pixel_key(i, j).alias("cell"), "row_i", "col_j", "n_images"
     ).localCheckpoint()
-    # Candidate edges: each occupied pixel → its right (j+1 mod nx) and down
-    # (i+1, clamped) neighbor keys; a semi-style join against the node set
-    # keeps only occupied→occupied pairs. All raster-bounded (≤ 2 edges per
+    # Candidate edges: each occupied pixel → its right (j+1, wrapped) and
+    # down (i+1, none past the pole) neighbor keys; nx >= 2, so the wrap
+    # never closes a self-loop. A semi-style join against the node set keeps
+    # only occupied→occupied pairs. All raster-bounded (≤ 2 edges per
     # occupied pixel before the join).
-    right = F.shiftleft("row_i", I_SHIFT).bitwiseOR(F.pmod(F.col("col_j") + 1, F.lit(nx)))
-    down = F.shiftleft(F.col("row_i") + 1, I_SHIFT).bitwiseOR(F.col("col_j"))
-    cand = nodes.select(
-        F.col("cell").alias("src"),
-        F.explode(
-            F.when(
-                F.col("row_i") + 1 < ny, F.array(right, down)
-            ).otherwise(F.array(right))
-        ).alias("dst"),
-    ).where(F.col("src") != F.col("dst"))  # nx == 1 would self-loop via wrap
+    cand = neighbours(nodes, i, j, res, ((0, 1), (1, 0))).select(
+        F.col("cell").alias("src"), pixel_key(F.col("ni"), F.col("nj")).alias("dst")
+    )
     pairs = cand.join(nodes.select(F.col("cell").alias("dst")), "dst").select("src", "dst")
     labels = connected_components(nodes.select(F.col("cell").alias("id")), pairs)
     return (
@@ -238,7 +213,7 @@ def global_autocorr(points: DataFrame, cell_col: str, res: int) -> DataFrame:
     """
     per_pixel = (
         _stencil(points, cell_col, res, ((0, 0), (0, 1), (1, 0)))
-        .groupBy("ci", "cj")
+        .groupBy("ni", "nj")
         .agg(
             F.max(F.when(F.col("is_center"), F.col("n_images"))).alias("center_n"),
             F.sum(F.when(~F.col("is_center"), F.col("n_images"))).alias("src_sum"),
@@ -305,7 +280,7 @@ def local_autocorr(points: DataFrame, cell_col: str, res: int) -> DataFrame:
     """
     per_pixel = (
         _stencil(points, cell_col, res, ((0, 0), (0, 1), (0, -1), (1, 0), (-1, 0)))
-        .groupBy("ci", "cj")
+        .groupBy("ni", "nj")
         .agg(
             F.max(F.when(F.col("is_center"), F.col("n_images"))).alias("center_n"),
             F.coalesce(
@@ -321,8 +296,8 @@ def local_autocorr(points: DataFrame, cell_col: str, res: int) -> DataFrame:
     out = (
         per_pixel.crossJoin(F.broadcast(scalars))
         .select(
-            F.col("ci").alias("row_i"),
-            F.col("cj").alias("col_j"),
+            F.col("ni").alias("row_i"),
+            F.col("nj").alias("col_j"),
             F.col("center_n").alias("n_images"),
             "nbr_sum",
             "nbr_cnt",

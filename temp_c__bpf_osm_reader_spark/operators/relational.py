@@ -464,6 +464,18 @@ def denotation_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------- queries/ISO3166-1-countries.sql + route family
 
+def _left_tags(out: DataFrame, eav: DataFrame, on: str, ent: str, tags) -> DataFrame:
+    """The reference's join-per-key wide-row assembly: for each (alias, key)
+    in `tags`, left-join the `k = key` EAV slice (rows with a non-null `ent`
+    id) onto out[on] = ent and keep its `v` as column `alias`."""
+    for alias, key in tags:
+        t = eav.filter((F.col("k") == key) & F.col(ent).isNotNull()).select(
+            F.col(ent).alias(f"_{alias}_id"), F.col("v").alias(alias)
+        )
+        out = out.join(t, out[on] == t[f"_{alias}_id"], "left").drop(f"_{alias}_id")
+    return out
+
+
 def iso3166_countries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1:1 transcription of queries/ISO3166-1-countries.sql:1-33 — the
     reference's only FULL OUTER JOIN plus its N-way left-self-join wide-row
@@ -488,19 +500,14 @@ def iso3166_countries(spark: SparkSession, sf_dir: str) -> DataFrame:
     iso3166 = n.join(r, n.n_v == r.r_v, "full_outer").select(
         F.coalesce("n_v", "r_v").alias("v"), "rel_id", "nod_id"
     )
-    out = iso3166
-    for alias, key, idcol in (
-        ("nam_int", "int_name", "rel_id"),
-        ("nam_r", "name", "rel_id"),
-        ("nam_n", "name", "nod_id"),
-        ("nam_r_en", "name:en", "rel_id"),
-        ("nam_n_en", "name:en", "nod_id"),
-    ):
-        ent = "collection_id" if idcol == "rel_id" else "image_id"
-        t = eav.filter((F.col("k") == key) & F.col(ent).isNotNull()).select(
-            F.col(ent).alias(f"_{alias}_id"), F.col("v").alias(alias)
-        )
-        out = out.join(t, out[idcol] == t[f"_{alias}_id"], "left").drop(f"_{alias}_id")
+    out = _left_tags(
+        iso3166,
+        eav,
+        "rel_id",
+        "collection_id",
+        (("nam_int", "int_name"), ("nam_r", "name"), ("nam_r_en", "name:en")),
+    )
+    out = _left_tags(out, eav, "nod_id", "image_id", (("nam_n", "name"), ("nam_n_en", "name:en")))
     return out.select(
         "v", "rel_id", "nod_id", "nam_r_en", "nam_n_en", "nam_int", "nam_r", "nam_n"
     )
@@ -528,18 +535,13 @@ def iso3166_node(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("image_id").isNotNull()
         & ~F.col("image_id").isin("img_0000000", "img_0000251")
     ).select(F.col("image_id").alias("nod_id"), F.col("v").alias("v"))
-    out = iso
-    for alias, key in (
-        ("n", "name"),
-        ("wd", "q"),
-        ("en_n", "name:en"),
-        ("de_n", "int_name"),
-        ("place", "place"),
-    ):
-        t = eav.filter((F.col("k") == key) & F.col("image_id").isNotNull()).select(
-            F.col("image_id").alias(f"_{alias}_id"), F.col("v").alias(alias)
-        )
-        out = out.join(t, out.nod_id == t[f"_{alias}_id"], "left").drop(f"_{alias}_id")
+    out = _left_tags(
+        iso,
+        eav,
+        "nod_id",
+        "image_id",
+        (("n", "name"), ("wd", "q"), ("en_n", "name:en"), ("de_n", "int_name"), ("place", "place")),
+    )
     return out.select("nod_id", "v", "n", "wd", "en_n", "de_n", "place")
 
 
@@ -554,24 +556,23 @@ def route_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     All five joins share rel_id as the join key — one co-partitioning, five
     probe sides; every probe side is a (k = const) filtered slice that AQE
     broadcasts at this density."""
-    eav = _eav(spark, sf_dir).filter(F.col("collection_id").isNotNull())
-
-    def tag_slice(alias: str, key: str) -> DataFrame:
-        return eav.filter(F.col("k") == key).select(
-            F.col("collection_id").alias(f"_{alias}_rid"), F.col("v").alias(alias)
-        )
-
-    t_type = tag_slice("tag_type", "type").filter(F.col("tag_type") == "route")
-    out = t_type.withColumnRenamed("_tag_type_rid", "rel_id")
-    for alias, key in (
-        ("tag_route", "route"),
-        ("tag_network", "network"),
-        ("tag_name", "name"),
-        ("tag_osmc", "osmc:symbol"),
-        ("tag_operator", "operator"),
-    ):
-        t = tag_slice(alias, key)
-        out = out.join(t, out.rel_id == t[f"_{alias}_rid"], "left").drop(f"_{alias}_rid")
+    eav = _eav(spark, sf_dir)
+    routes = eav.filter(
+        (F.col("k") == "type") & (F.col("v") == "route") & F.col("collection_id").isNotNull()
+    ).select(F.col("collection_id").alias("rel_id"))
+    out = _left_tags(
+        routes,
+        eav,
+        "rel_id",
+        "collection_id",
+        (
+            ("tag_route", "route"),
+            ("tag_network", "network"),
+            ("tag_name", "name"),
+            ("tag_osmc", "osmc:symbol"),
+            ("tag_operator", "operator"),
+        ),
+    )
     return out.filter(F.col("tag_route") == "hiking").select(
         "rel_id", "tag_name", "tag_route", "tag_network", "tag_osmc", "tag_operator"
     )
@@ -589,21 +590,8 @@ def rel_member_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("collection_id") == REL_OF) & F.col("image_id").isNotNull()
     ).select(F.col("image_id").alias("nod_id"))
     eav = _eav(spark, sf_dir)
-
-    def tag_slice(alias: str, key: str) -> DataFrame:
-        return eav.filter((F.col("k") == key) & F.col("image_id").isNotNull()).select(
-            F.col("image_id").alias(f"_{alias}_id"), F.col("v").alias(alias)
-        )
-
-    ref = tag_slice("ref_v", "q")
-    ans = tag_slice("ans_v", "noun")
-    return (
-        mem.join(ref, mem.nod_id == ref["_ref_v_id"], "left").drop("_ref_v_id")
-        .join(ans, F.col("nod_id") == ans["_ans_v_id"], "left").drop("_ans_v_id")
-        .select(
-            "nod_id", "ref_v", "ans_v", F.col("ref_v").cast("int").alias("ref_int")
-        )
-    )
+    out = _left_tags(mem, eav, "nod_id", "image_id", (("ref_v", "q"), ("ans_v", "noun")))
+    return out.select("nod_id", "ref_v", "ans_v", F.col("ref_v").cast("int").alias("ref_int"))
 
 
 def ref_query_pack(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import geo
-from .indexing import grid_cell_col
+from .indexing import cell_ij, cell_of, grid_cell_col, neighbours, ring_offsets
 
 # Cover resolution of every PIP join. Measured at the flagship scale (sf0.1
 # ×480 = 50.9 M points, pinned 8 cores, 2 interleaved passes; probe script
@@ -225,7 +225,8 @@ def box_self_join(points: DataFrame, cell_col: str, eps_deg: float, res: int) ->
         keeps its own cell), so every unordered pair is produced exactly
         once per orientation and the img1 < img2 filter keeps exactly one —
         no distinct() pass, no double counting;
-      * the join key is the (i << 27 | j) pixel fold — ONE dense long, the
+      * the join key is the packed cell id itself (the left side re-packs
+        each neighbour with indexing.cell_of) — ONE dense long, the
         LongHashedRelation fast path, instead of a two-column key;
       * at 10^12 rows both sides hash-partition by that long; per-cell
         candidate lists are bounded by cell density, and hot cells fall to
@@ -241,42 +242,21 @@ def box_self_join(points: DataFrame, cell_col: str, eps_deg: float, res: int) ->
         raise ValueError(
             f"eps_deg {eps_deg} exceeds a res-{res} cell side; 3x3 blocking incomplete"
         )
-    mask = (1 << 27) - 1
-    base = points.select(
-        "image_id",
-        "lat",
-        "lon",
-        F.shiftright(cell_col, 27).bitwiseAND(F.lit(mask)).alias("row_i"),
-        F.col(cell_col).bitwiseAND(F.lit(mask)).alias("col_j"),
-    )
-    right = base.select(
+    right = points.select(
         F.col("image_id").alias("img2"),
         F.col("lat").alias("lat2"),
         F.col("lon").alias("lon2"),
-        F.shiftleft(F.col("row_i"), 27).bitwiseOR(F.col("col_j")).alias("pk"),
+        F.col(cell_col).alias("cell"),
     )
-    offsets = F.array(
-        *[
-            F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
-            for di in (-1, 0, 1)
-            for dj in (-1, 0, 1)
-        ]
-    )
-    left = (
-        base.select("image_id", "lat", "lon", "row_i", "col_j", F.explode(offsets).alias("o"))
-        .select(
-            F.col("image_id").alias("img1"),
-            F.col("lat").alias("lat1"),
-            F.col("lon").alias("lon1"),
-            (F.col("row_i") + F.col("o.di")).alias("pi"),
-            F.pmod(F.col("col_j") + F.col("o.dj"), F.lit(nx)).alias("pj"),
-        )
-        .where((F.col("pi") >= 0) & (F.col("pi") < ny))
-        .select("img1", "lat1", "lon1", F.shiftleft(F.col("pi"), 27).bitwiseOR(F.col("pj")).alias("pk"))
+    left = neighbours(points, *cell_ij(F.col(cell_col)), res, ring_offsets(1)).select(
+        F.col("image_id").alias("img1"),
+        F.col("lat").alias("lat1"),
+        F.col("lon").alias("lon1"),
+        cell_of(res, F.col("ni"), F.col("nj")).alias("cell"),
     )
     dlon = F.abs(F.col("lon1") - F.col("lon2"))
     return (
-        left.join(right, "pk")
+        left.join(right, "cell")
         .where(F.col("img1") < F.col("img2"))
         .where(F.abs(F.col("lat1") - F.col("lat2")) <= F.lit(eps_deg))
         .where(F.least(dlon, F.lit(360.0) - dlon) <= F.lit(eps_deg))

@@ -24,6 +24,8 @@ import json
 import os
 import time
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -139,13 +141,10 @@ class SnapshotPipeline:
         fn().write.mode("overwrite").parquet(data_dir)
 
         written = read_parquet(self.spark, data_dir)
-        metrics = lineage_metrics(written)
-        metrics.write.mode("overwrite").parquet(lineage_dir)
-        agg = metrics.agg(
-            F.sum("row_count").alias("rows"),
-            F.sum("checksum").alias("checksum"),
-            F.count(F.lit(1)).alias("n_partitions"),
-        ).collect()[0]
+        lineage_metrics(written).write.mode("overwrite").parquet(lineage_dir)
+        # manifest totals from the small lineage table just written, not a
+        # second pass over the stage's data
+        lineage = pq.read_table(lineage_dir, columns=["row_count", "checksum"])
 
         tmp = manifest_path + ".tmp"
         with open(tmp, "w") as f:
@@ -153,9 +152,9 @@ class SnapshotPipeline:
                 {
                     "stage": name,
                     "version": version,
-                    "rows": int(agg["rows"] or 0),
-                    "checksum": int(agg["checksum"] or 0),
-                    "n_partitions": int(agg["n_partitions"]),
+                    "rows": int(pc.sum(lineage["row_count"]).as_py() or 0),
+                    "checksum": int(pc.sum(lineage["checksum"]).as_py() or 0),
+                    "n_partitions": lineage.num_rows,
                     "wall_s": round(time.time() - t0, 3),
                 },
                 f,

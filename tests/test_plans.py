@@ -232,3 +232,15 @@ def test_decontaminate_broadcasts_benchmark_side(spark):
     )
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_minhash_lsh_pairs_leaves_no_cache_entry(spark):
+    """minhash_lsh_pairs materializes its signatures for three plan branches;
+    the materialization must not stay pinned in the session's cache after
+    the result is collected."""
+    from temp_c__bpf_osm_reader_spark.operators import dedup
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    dedup.minhash_lsh_pairs(spark, SF).collect()
+    assert cache.numCachedEntries() <= before

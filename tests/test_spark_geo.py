@@ -345,28 +345,36 @@ def test_box_self_join_matches_bruteforce(spark):
 def test_polygonize_wrap_snake_and_region_stats(spark):
     """Hand-built rasters pinning polygonize's component semantics:
     a region crossing the antimeridian seam is ONE region (col wrap), rows
-    do not wrap across the pole, and a full-row ring (a cycle through the
-    wrap) labels as a single region.  The long snake exercises pointer
-    jumping: its diameter (ny + nx) far exceeds the round count a pure
-    propagation of dedup.CC_MAX_ITER rounds could close without the jump."""
+    do not wrap across the pole, and a long serpentine labels as one region.
+    The serpentine winds down 6 rows and back up 4 in columns two apart, ten
+    times over, and never reaches the wrap: its 141 pixels form one path
+    whose far end is 140 steps from the min-key pixel, so plain min-label
+    propagation would need 140 rounds, far past dedup.CC_MAX_ITER; only the
+    pointer jumping of dedup.connected_components closes it in time."""
     from temp_c__bpf_osm_reader_spark.functions import geo
     from temp_c__bpf_osm_reader_spark.operators import raster
 
-    res = 3  # ny=8, nx=16
+    res = 5  # ny=32, nx=64
     ny, nx = geo.grid_dims(res)
 
     def cell(i, j):
         return int((res << geo.RES_SHIFT) | (i << geo.I_SHIFT) | j)
 
     def key(i, j):
-        return (i << 27) | j
+        return (i << geo.I_SHIFT) | j
 
+    # serpentine from (4, 1): per cycle down 6, right 2, up 4, right 2
+    snake = [(4, 1)]
+    for _ in range(10):
+        for di, dj, n in ((1, 0, 6), (0, 1, 2), (-1, 0, 4), (0, 1, 2)):
+            for _ in range(n):
+                i, j = snake[-1]
+                snake.append((i + di, j + dj))
+    assert len(set(snake)) == len(snake) == 141
     # seam region: (2, nx-1) and (2, 0) touch only through the wrap;
-    # pole pair: (0, 5) and (ny-1, 5) must NOT merge (no row wrap);
-    # snake: row 4 entire + col 10 rising from row 4 to ny-1 (diameter ~nx+ny)
+    # pole pair: (0, 5) and (ny-1, 5) must NOT merge (no row wrap)
     pts = [cell(2, nx - 1), cell(2, 0), cell(0, 5), cell(ny - 1, 5)]
-    pts += [cell(4, j) for j in range(nx)]
-    pts += [cell(i, 10) for i in range(5, ny)]
+    pts += [cell(i, j) for i, j in snake]
     # weight: two images in the seam's west pixel
     pts.append(cell(2, 0))
     df = spark.createDataFrame([(p,) for p in pts], "cell_r long")
@@ -379,9 +387,10 @@ def test_polygonize_wrap_snake_and_region_stats(spark):
     assert (seam.min_j, seam.max_j) == (0, nx - 1)  # plain min/max, no wrap fix
     assert out[key(0, 5)].n_cells == 1
     assert out[key(ny - 1, 5)].n_cells == 1
-    snake = out[key(4, 0)]
-    assert snake.n_cells == nx + (ny - 1 - 4)
-    assert (snake.min_i, snake.max_i, snake.min_j, snake.max_j) == (4, ny - 1, 0, nx - 1)
+    got = out[key(4, 1)]
+    si, sj = [i for i, _ in snake], [j for _, j in snake]
+    assert (got.n_cells, got.n_images) == (len(snake), len(snake))
+    assert (got.min_i, got.max_i, got.min_j, got.max_j) == (min(si), max(si), min(sj), max(sj))
 
 
 def test_way_simplify_collapse_semantics(spark):
@@ -702,7 +711,10 @@ def test_cell_columns_match_numpy_at_grid_edges(spark):
     """grid_cell_col (res 7, 8, 9, 16) and z_cell_col (level 12) are
     bit-equal to the numpy specs on the points the fixtures never reach:
     the poles, the antimeridian, signed zeros, and coordinates exactly on
-    (and one ulp either side of) row and column boundaries."""
+    (and one ulp either side of) row and column boundaries. The shared
+    neighbour expansion (indexing.neighbours + cell_of over ring_offsets)
+    equals geo.k_ring as a set for k = 1, 2 on cells at both poles and on
+    both sides of the antimeridian, at res 0, 1 and 7."""
     from temp_c__bpf_osm_reader_spark.functions import geo
 
     lats = [-90.0, 90.0 - 1e-9, 90.0, -0.0, 0.0]
@@ -728,6 +740,22 @@ def test_cell_columns_match_numpy_at_grid_edges(spark):
     for r in (7, 8, 9, 16):
         assert np.array_equal(got[f"r{r}"].to_numpy(), geo.grid_cell(lat, lon, r)), r
     assert np.array_equal(got["z12"].to_numpy(), geo.z_cell(lat, lon, 12))
+
+    for r in (0, 1, 7):
+        ny, nx = geo.grid_dims(r)
+        rows = {i for i in (0, 1, ny // 2, ny - 2, ny - 1) if i >= 0}
+        cols = {0, 1, nx // 2, nx - 2, nx - 1}
+        cells = sorted((r << geo.RES_SHIFT) | (i << geo.I_SHIFT) | j for i in rows for j in cols)
+        cdf = spark.createDataFrame([(c,) for c in cells], "cell long")
+        for k in (1, 2):
+            nb = indexing.neighbours(
+                cdf, *indexing.cell_ij(F.col("cell")), r, indexing.ring_offsets(k)
+            ).select("cell", indexing.cell_of(r, F.col("ni"), F.col("nj")).alias("nb"))
+            spark_ring = {}
+            for row in nb.collect():
+                spark_ring.setdefault(row.cell, set()).add(row.nb)
+            for c in cells:
+                assert spark_ring[c] == set(geo.k_ring(c, k).tolist()), (r, k, c)
 
 
 def test_pip_join_matches_numpy_on_edges_and_vertices(spark):
