@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
@@ -219,6 +220,9 @@ def main() -> None:
                 "protocol": "r6",
                 "sf_dir": args.sf_dir,
                 "cores": args.cores,
+                # the CPUs this process may run on: under `taskset -c 0-7` on
+                # a 4-CPU host this is 4, whatever --cores says
+                "effective_cpus": len(os.sched_getaffinity(0)),
                 "replicate": args.replicate,
                 "points": n_points,
                 "nodes": n_nodes,

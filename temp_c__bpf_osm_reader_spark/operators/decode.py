@@ -5,20 +5,23 @@ Inverts sources/blocks.py with *pure DataFrame ops* (no UDF):
   D5 delta decode      → window cumsum per block (sum over rowsBetween)
   D2 zigzag decode     → (z >> 1) XOR -(z & 1)      (readosm.c:309-343)
   D6 fixed-point scale → / 1e7                      (readosm.c:1206-1211)
-  D7 dictionary resolve→ F.transform + element_at on the per-block strtab
+  D7 dictionary resolve→ element_at on the per-block strtab
                           (readosm.c:1296-1299; StringTable index 0 = "")
-  D8 sentinel split    → running count of delimiters (osmformat.proto:207-229)
+  D8 sentinel split    → slice keys_vals at its "" elements inside the row
+                          (osmformat.proto:207-229)
   D9/D10 zip + posexplode → arrays_zip / posexplode  (readosm.c:1449-1460)
 
-Each block is independently decodable (osmformat.proto blocks are
-self-contained) — at cluster scale blocks map 1:1 onto partitions, and the
-per-block window cumsum shuffles only on block_id (bounded state: block size
-≤ 8000 entities in the reference, 1000 here).
+Each block is self-contained (osmformat.proto), so each is decoded where it
+sits, as the reference decodes one PrimitiveBlock at a time
+(readosm.c:1107-1309). The tag split never leaves its block row. The node
+cumsum window needs its rows clustered by block_id: widen_if_narrow
+hash-partitions the block rows that way, so the window plans no Exchange on
+its output; on unclustered input the window shuffles on block_id.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.blocks import SCALE
@@ -29,18 +32,18 @@ def zigzag_decode_col(z):
 
 
 def widen_if_narrow(blocks: DataFrame) -> DataFrame:
-    """The local blocks fixture is ONE parquet row group → one scan split, so
-    the explode-heavy decode stage (1000 nodes + ~4000 kv entries per block)
-    runs on a single core until the first shuffle (measured at sf1.0: the
-    decode_tags explode+resolve of 4.2M elements serialized on 1 of 32 cores).
-    Repartition to the session's parallelism ONLY when the scan is narrower —
-    a real many-file block store already scans wide, so at cluster scale this
-    is a no-op with zero shuffle. Every decode is per-block (windows partition
-    by block_id), so block placement cannot change any result."""
+    """The local blocks fixture is ONE parquet row group, so one scan split,
+    and the explode-heavy decode would run on a single core. When the scan is
+    narrower than the session's parallelism, hash-partition the block rows by
+    block_id to that parallelism: the decode then spreads over every core, and
+    the per-block node window finds its clustering in place (Generate and a
+    cached scan keep the partitioning) instead of shuffling the exploded
+    stream. A many-file block store already scans wide and is returned as is.
+    Every decode is per block, so block placement changes no result."""
     sc = blocks.sparkSession.sparkContext
     p = sc.defaultParallelism
     if blocks.rdd.getNumPartitions() < p:
-        return blocks.repartition(p)
+        return blocks.repartition(p, "block_id")
     return blocks
 
 
@@ -50,8 +53,8 @@ def decode_nodes(blocks: DataFrame) -> DataFrame:
     Dictionary resolve happens AFTER the explode as a plain element_at —
     higher-order `transform` is CodegenFallback (interpreted lambda per
     element), while Generate+Project fuse in whole-stage codegen — and
-    BEFORE the window, so the 1000-string strtab never rides the window
-    shuffle (only the one resolved string per row does)."""
+    BEFORE the window, so the 1000-string strtab never reaches the window's
+    sort (only the one resolved string per row does)."""
     e = blocks.select(
         "block_id",
         "strtab",
@@ -75,55 +78,50 @@ def decode_nodes(blocks: DataFrame) -> DataFrame:
     )
 
 
+def _entities(blocks: DataFrame, *keep: str) -> tuple[DataFrame, Column]:
+    """blocks → ((*keep, s, ends), ents): keys_vals resolved against strtab
+    (s) and cut at every sentinel (an element whose string is "") into one
+    string array per entity (ents), inside the row. s and ends are selects of
+    their own, computed once per row, not once per lambda call. Callers
+    posexplode ents itself: a generator over a plain column gets a non-empty
+    filter inferred and pushed, with the whole cut inlined, below these
+    selects."""
+    resolved = blocks.select(
+        *keep, F.transform("keys_vals", lambda x: F.element_at("strtab", x + 1)).alias("s")
+    )
+    n = F.size("s")
+    # sentinel positions, then n: entity e is s[ends[e-1] + 1 : ends[e]]
+    cut = resolved.select(
+        *keep,
+        "s",
+        F.filter(F.sequence(F.lit(0), n), lambda i: (i == n) | (F.get("s", i) == "")).alias("ends"),
+    )
+
+    def first(e):
+        return F.coalesce(F.get("ends", e - 1) + 1, F.lit(0))
+
+    return cut, F.transform("ends", lambda end, e: F.slice("s", first(e) + 1, end - first(e)))
+
+
+def _pairs(ents: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, ent, e) one row per entity → (*keep, ent, k, v): the entity
+    alternates k, v, k, v, so every even element is a key and the next
+    element its value (null for a dangling key at the entity's end)."""
+    return (
+        ents.select(*keep, "ent", "e", F.posexplode("e").alias("i", "k"))
+        .where(F.col("i") % 2 == 0)
+        .select(*keep, "ent", "k", F.get("e", F.col("i") + 1).alias("v"))
+    )
+
+
 def decode_tags(blocks: DataFrame) -> DataFrame:
     """blocks → (block_id, ent, k, v) — 0-delimited keys_vals stream split.
 
     ent is the entity ordinal within the block (join key to decode_nodes.pos).
-    Sentinel index 0 resolves to the reserved "" string; the split is a running
-    count of sentinels *before* each element (pure window arithmetic).
-
-    Single-pass plan: sum (entity ordinal), max (position of the opening
-    sentinel) and lead (the next element = this key's value) all share ONE
-    window spec (block_id, order by pos), so the whole split is one shuffle +
-    one sort + one Window operator. Within an entity the stream alternates
-    k,v,k,v, so an element is a key iff its offset from the opening sentinel
-    is odd, and its value is simply the next element in the stream (nullified
-    when the entity ends early on a sentinel/block boundary — the "dangling
-    key" case the reference tolerates). This replaces the previous
-    three-pass plan (sentinel window → per-entity row_number window →
-    groupBy pivot): same one shuffle, but two fewer sorts/aggregates over
-    the exploded stream.
-    """
-    resolved = blocks.select(
-        "block_id", "strtab", F.posexplode("keys_vals").alias("pos", "sid")
-    ).select(
-        # post-explode element_at: codegen (HOF transform is interpreted) and
-        # drops strtab before any shuffle — see decode_nodes
-        "block_id",
-        "pos",
-        F.element_at(F.col("strtab"), F.col("sid") + 1).alias("s"),
-    )
-    w_prev = Window.partitionBy("block_id").orderBy("pos").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    w_next = Window.partitionBy("block_id").orderBy("pos")
-    is_sent = F.col("s") == ""
-    annotated = resolved.select(
-        "block_id",
-        "pos",
-        "s",
-        F.coalesce(F.sum(F.when(is_sent, 1).otherwise(0)).over(w_prev), F.lit(0)).alias("ent"),
-        # pos of the sentinel that opened this entity (-1 for the first)
-        F.coalesce(F.max(F.when(is_sent, F.col("pos"))).over(w_prev), F.lit(-1)).alias("sent_pos"),
-        F.lead("s", 1).over(w_next).alias("nxt"),
-    )
-    keys = annotated.filter(~is_sent & (((F.col("pos") - F.col("sent_pos")) % 2) == 1))
-    return keys.select(
-        "block_id",
-        "ent",
-        F.col("s").alias("k"),
-        F.nullif(F.col("nxt"), F.lit("")).alias("v"),
-    )
+    Every "" string is a sentinel (index 0 is the reserved one); the split
+    happens inside the block row: no shuffle, no window."""
+    cut, ents = _entities(blocks, "block_id")
+    return _pairs(cut.select("block_id", F.posexplode(ents).alias("ent", "e")), "block_id")
 
 
 def decode_way_refs(way_blocks: DataFrame) -> DataFrame:
@@ -267,13 +265,21 @@ def way_simplify(
 
 def decode_entities(blocks: DataFrame) -> tuple[DataFrame, DataFrame]:
     """→ (nodes, tags) where tags carry the resolved image_id (EAV table —
-    the analogue of pbf2sqlite's `tag(nod_id, k, v)`, pbf2sqlite.c:460-468)."""
-    nodes = decode_nodes(blocks)
-    tags = decode_tags(blocks).join(
-        nodes.select("block_id", F.col("pos").alias("ent"), "image_id"),
-        ["block_id", "ent"],
+    the analogue of pbf2sqlite's `tag(nod_id, k, v)`, pbf2sqlite.c:460-468).
+    Entity ent's image_id is strtab[image_sid[ent]], zipped onto its tag
+    piece inside the block row; entities past the last node are dropped."""
+    with_img = blocks.select(
+        "keys_vals",
+        "strtab",
+        F.transform("image_sid", lambda x: F.element_at("strtab", x + 1)).alias("img"),
     )
-    return nodes, tags.select("image_id", "k", "v")
+    cut, ents = _entities(with_img, "img")
+    per_entity = cut.select(
+        F.posexplode(F.arrays_zip(F.slice(ents, 1, F.size("img")).alias("e"), "img")).alias(
+            "ent", "z"
+        )
+    ).select("ent", "z.e", F.col("z.img").alias("image_id"))
+    return decode_nodes(blocks), _pairs(per_entity, "image_id").select("image_id", "k", "v")
 
 
 def decode_metrics(blocks: DataFrame) -> DataFrame:

@@ -5,7 +5,7 @@ These guard against regressions that correctness tests can't see.
 
 from pyspark.sql import functions as F
 
-from temp_c__bpf_osm_reader_spark.operators import indexing, knn, relational, similarity
+from temp_c__bpf_osm_reader_spark.operators import decode, indexing, knn, relational, similarity
 from temp_c__bpf_osm_reader_spark.sources import fixtures
 
 SF = "/root/testdata/sf0.001"
@@ -244,3 +244,18 @@ def test_minhash_lsh_pairs_leaves_no_cache_entry(spark):
     before = cache.numCachedEntries()
     dedup.minhash_lsh_pairs(spark, SF).collect()
     assert cache.numCachedEntries() <= before
+
+
+def test_block_decode_plans_shuffle_only_in_widen(spark, fx):
+    """Blocks are self-contained: once widen_if_narrow has clustered the
+    block rows by block_id, the node cumsum window finds its clustering in
+    place and the tag split stays inside the block row. The one Exchange
+    left in each plan is widen_if_narrow's own repartition of the compact
+    block rows; the exploded streams are never shuffled."""
+    blocks = decode.widen_if_narrow(spark.read.parquet(fx["blocks"]))
+    nodes, tags = decode.decode_entities(blocks)
+    for df in (nodes, tags):
+        exchanges = [ln for ln in _plan(df).splitlines() if "Exchange" in ln]
+        assert len(exchanges) == 1 and "REPARTITION_BY_NUM" in exchanges[0], exchanges
+    plan = _plan(tags)
+    assert "Window" not in plan and "Join" not in plan

@@ -254,6 +254,63 @@ def test_decode_tags_sentinel_edges(spark):
     assert [(r.block_id, r.ent, r.k, r.v) for r in got] == exp
 
 
+def test_decode_entities_sentinel_strings_and_orphan_tags(spark):
+    """decode_entities on hand-built blocks: every element whose string is ""
+    is a sentinel, not only sid 0 (the oracle's s = '' rule), and the tags of
+    an entity past the block's last node are dropped, as the oracle's join
+    to the node stream drops them."""
+    from temp_c__bpf_osm_reader_spark.operators.decode import decode_entities
+
+    # sid 4 is a second "" string: it splits entities exactly like sid 0
+    strtab = ["", "k1", "v1", "img_a", "", "img_b", "k2"]
+    rows = [
+        # [k1 v1 | k2 dangling | k1 v1] with nodes img_a, img_b: the third
+        # entity has no node, so its tag is dropped
+        (0, strtab, [1, 2, 4, 6, 0, 1, 2], [3, 5]),
+        # a leading second-"" sentinel: entity 0 is empty, entity 1 has k2 v1
+        (1, strtab, [4, 6, 2], [3, 5]),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "block_id long, strtab array<string>, keys_vals array<int>, image_sid array<int>",
+    ).select(
+        "block_id",
+        "strtab",
+        F.array_repeat(F.lit(0).cast("long"), F.size("image_sid")).alias("id_delta"),
+        F.array_repeat(F.lit(0).cast("long"), F.size("image_sid")).alias("lat_dz"),
+        F.array_repeat(F.lit(0).cast("long"), F.size("image_sid")).alias("lon_dz"),
+        "image_sid",
+        "keys_vals",
+    )
+    _, tags = decode_entities(df)
+    got = sorted((r.image_id, r.k, r.v or "") for r in tags.collect())
+    assert got == [("img_a", "k1", "v1"), ("img_b", "k2", ""), ("img_b", "k2", "v1")]
+
+
+def test_decode_entities_identical_across_block_partitioning(spark, fx):
+    """The sorted decode rows are the same whether the blocks arrive in one
+    partition, in 7 round-robin partitions, or through widen_if_narrow with
+    more partitions than blocks (so some partitions are empty)."""
+    from temp_c__bpf_osm_reader_spark.operators.decode import decode_entities, widen_if_narrow
+
+    blocks = spark.read.parquet(fx["blocks"])
+    n_blocks = blocks.count()
+    wide = widen_if_narrow(blocks.coalesce(1))
+    assert wide.rdd.getNumPartitions() > n_blocks
+    layouts = [blocks.coalesce(1), blocks.repartition(7), wide]
+    results = []
+    for b in layouts:
+        nodes, tags = decode_entities(b)
+        results.append(
+            (
+                sorted(map(tuple, nodes.collect())),
+                sorted(map(tuple, tags.fillna("").collect())),
+            )
+        )
+    assert len(results[0][0]) > 0 and len(results[0][1]) > 0
+    assert results[1] == results[0] and results[2] == results[0]
+
+
 def test_raster_topology_wrap_clamp_and_pyramid_mass(spark):
     """Hand-built points pinning the raster operators' grid topology:
     focal_sum wraps longitude (col 0's west neighbor is col nx-1), clamps
